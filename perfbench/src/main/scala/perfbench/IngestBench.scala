@@ -57,13 +57,6 @@ final class IngestBench(spark: SparkSession, work: Path, probe: RuntimeProbe, tr
     try DriverManager.getConnection(url + ";drop=true").close()
     catch { case _: SQLException => () } // Derby reports a successful drop as an exception
 
-  private def clearDir(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
-
   /** Runs the pipeline for `d` (published under `mirror`) into `url`,
     * stopping after layer `upTo` (`Layers`) when tracing splits the
     * layers; a full load ends with the sink's commit. */
@@ -74,7 +67,7 @@ final class IngestBench(spark: SparkSession, work: Path, probe: RuntimeProbe, tr
       if (observe) df.observe(obs, count(lit(1)).as("rows"), cols: _*) else df
 
     val stage = work.resolve("staging")
-    clearDir(stage)
+    Tree.clear(stage)
     Files.createDirectories(stage)
     val base = mirror.toUri.toString.stripSuffix("/")
     val manifest = tracer.span("manifest") {
@@ -187,7 +180,7 @@ final class IngestBench(spark: SparkSession, work: Path, probe: RuntimeProbe, tr
     val secs = (System.nanoTime() - t0) / 1e9
     val ok = err.isEmpty && tableDigest(url) == expected
     dropDb(url)
-    Load(secs, d.inputRows, res._1, res._2, SinkProbe.connections.get, SinkProbe.txnFailed.get, ok, err)
+    Load(secs, res._1, res._2, SinkProbe.connections.get, SinkProbe.txnFailed.get, ok, err)
   }
 
   /** A traced load: every prefix of the pipeline is forced on its
@@ -222,7 +215,7 @@ final class IngestBench(spark: SparkSession, work: Path, probe: RuntimeProbe, tr
 
 object IngestBench {
   /** Outcome of one load. */
-  final case class Load(seconds: Double, inputRows: Long, urls: Int, urlsWrong: Int,
+  final case class Load(seconds: Double, urls: Int, urlsWrong: Int,
                         sinkTxns: Long, sinkFailed: Long, tableOk: Boolean, error: Option[String])
 
   val Table = "decisions"

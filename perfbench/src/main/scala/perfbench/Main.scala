@@ -9,7 +9,7 @@ import scala.collection.mutable
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
-import graft.GraftSession
+import graft.{GraftSession, SparkEntry}
 
 /** Runs one workload and prints its metrics; the last stdout line is
   * the JSON result.
@@ -110,13 +110,6 @@ object Main {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def clearTree(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
-
   // ---------------------------------------------------------------- ingest
 
   val FreshCfg: Mirror.Config = Mirror.Config(days = 20, rowsPerDay = 1000)
@@ -134,7 +127,7 @@ object Main {
     val setups = (1 to SetupRepeats).map { i =>
       time {
         val mirror = work.resolve(s"mirror$i")
-        clearTree(mirror)
+        Tree.clear(mirror)
         val (deliv, preload, expected) =
           if (redelivery) {
             val (base, again) = Mirror.redelivery(seed, RedeliveryCfg)
@@ -220,10 +213,10 @@ object Main {
   private def runMix(spark: SparkSession, work: Path, seed: Long, seconds: Double, traced: Boolean,
                      probe: RuntimeProbe, tracer: Tracer, r: Result, golden: Map[String, (Long, Long)]): Unit = {
     // artifacts the queries persist live under the working directory
-    clearTree(work.resolve("target"))
+    Tree.clear(work.resolve("target"))
     val setups = (1 to SetupRepeats).map { i =>
       val dir = work.resolve(s"tables$i")
-      clearTree(dir)
+      Tree.clear(dir)
       time(QueryMix.generate(spark, dir))._2
     }
     r.put("setup_s", Stats.median(setups), "s")
@@ -237,7 +230,7 @@ object Main {
       val t0 = System.nanoTime()
       val res =
         try {
-          val (df, b) = time(tracer.span("build")(QueryMix.build(spark, dir, name)))
+          val (df, b) = time(tracer.span("build")(SparkEntry.queries(name)(spark, dir)))
           val d = tracer.span("exec")(QueryMix.digest(df))
           val ok = golden.get(name).contains(d)
           if (!ok) System.err.println(s"[perfbench] $name: digest $d, expected ${golden.get(name)}")
@@ -364,12 +357,12 @@ object Main {
 
   /** Runs each query of the mix once and writes its digest. */
   private def writeGolden(spark: SparkSession, work: Path, out: Path): Unit = {
-    clearTree(work.resolve("target"))
+    Tree.clear(work.resolve("target"))
     val dir = work.resolve("tables-golden")
-    clearTree(dir)
+    Tree.clear(dir)
     QueryMix.generate(spark, dir)
     val digests = QueryMix.Queries.map { q =>
-      val d = QueryMix.digest(QueryMix.build(spark, dir.toString, q))
+      val d = QueryMix.digest(SparkEntry.queries(q)(spark, dir.toString))
       spark.sharedState.cacheManager.clearCache()
       System.err.println(s"[perfbench] golden $q $d")
       q -> d

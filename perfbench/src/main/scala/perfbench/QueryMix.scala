@@ -6,8 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkEntry
-
 /** The read side: a fixed set of `SparkEntry.queries`, grouped into
   * classes that each stress one query layer, over tables generated
   * here. */
@@ -138,9 +136,7 @@ object QueryMix {
         val f = part.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
         Files.move(f, dir.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
       } finally part.close()
-      val rest = Files.walk(tmp)
-      try rest.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally rest.close()
+      Tree.clear(tmp)
     }
   }
 
@@ -160,9 +156,4 @@ object QueryMix {
       concat(lit("src"), (u(4) * 20).cast(IntegerType).cast(StringType)).as("source"))
       .withColumn("n_chars", length(col("text")).cast(LongType))
   }
-
-  /** Builds query `name`'s frame (including any eager work the entry
-    * function does). */
-  def build(spark: SparkSession, dir: String, name: String): DataFrame =
-    SparkEntry.queries(name)(spark, dir)
 }

@@ -1,5 +1,17 @@
 package perfbench
 
+import java.nio.file.{Files, Path}
+
+/** Deletes a directory tree, deepest entries first; absent is fine. */
+object Tree {
+  def clear(p: Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally s.close()
+    }
+}
+
 /** Summary statistics used for every reported number. */
 object Stats {
   def median(xs: Seq[Double]): Double = {
