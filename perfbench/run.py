@@ -108,7 +108,7 @@ def main():
     cmd = ["java"]
     for o in ADD_OPENS:
         cmd += ["--add-opens", f"{o}=ALL-UNNAMED"]
-    cmd += ["-Xmx3g", "-XX:+UseG1GC", "-Duser.timezone=UTC",
+    cmd += ["-Xms2g", "-Xmx2g", "-XX:+UseG1GC", "-Duser.timezone=UTC",
             f"-Djava.io.tmpdir={run_dir / 'tmp'}",
             f"-Dderby.stream.error.file={run_dir / 'derby.log'}",
             "-Dspark.ui.enabled=false",
