@@ -8,209 +8,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * during the session biases neither side; each pass is the bench
   * convention (noop write, cache clear).
   *
+  * Retired plan forms leave the tree once their A/B is recorded
+  * (OPTIMIZATION_r13.md, OPTIMIZATION_r14.md, plans/); a new swap adds
+  * its variant pair here for the duration of its measurement. The
+  * standing pairs need no twin code: each runs a public query under
+  * a session conf.
+  *
   * Usage: runMain graft.ABProbe <pair[,pair...]> [sfDir] [rounds]
-  * Pairs: keyness (window vs zip_with bigram cells),
-  *        gram (window vs map-side-array 3-gram LSH pipeline).
+  * Pairs: shjbpe, shjrl, shjngram (sort-merge vs shuffled-hash join
+  *        preference on bpe_train, record_linkage, ngram_novelty).
   */
 object ABProbe {
-  private def pairs(s: SparkSession): Map[String, Seq[(String, (String) => DataFrame)]] = Map(
-    "keyness" -> Seq(
-      "win" -> ((dir: String) => queries.TextOps.keynessFrame(
-        queries.TextOps.keynessCellsWin(s, dir))),
-      "zip" -> ((dir: String) => queries.TextOps.keynessFrame(
-        queries.TextOps.keynessCellsZip(s, dir))),
-      "ker" -> ((dir: String) => queries.TextOps.keynessFrame(
-        queries.TextOps.keynessCells(s, dir)))),
-    "gram" -> Seq(
-      "win" -> ((dir: String) => operators.Dedup.dedupMinhashLshProbe(s, dir, "win")),
-      "zip" -> ((dir: String) => operators.Dedup.dedupMinhashLshProbe(s, dir, "zip")),
-      "ker" -> ((dir: String) => operators.Dedup.dedupMinhashLshProbe(s, dir, "ker"))),
-    "kmvx" -> Seq(
-      "join" -> ((dir: String) => operators.Sketches.kmvIntersectProbe(s, dir, grp = false)),
-      "grp" -> ((dir: String) => operators.Sketches.kmvIntersectProbe(s, dir, grp = true))),
-    "phashk" -> Seq(
-      "chain" -> ((dir: String) => operators.Multimodal.mmPhashDedupWith(s, dir, kernel = false)),
-      "ker" -> ((dir: String) => operators.Multimodal.mmPhashDedupWith(s, dir, kernel = true))),
-    "patchk" -> Seq(
-      "chain" -> ((dir: String) => operators.Multimodal.mmPatchEmbedWith(s, dir, kernel = false)),
-      "ker" -> ((dir: String) => operators.Multimodal.mmPatchEmbedWith(s, dir, kernel = true))),
-    "clipk" -> Seq(
-      "chain" -> ((dir: String) => operators.Multimodal.clipGateWith(s, dir, kernel = false)),
-      "ker" -> ((dir: String) => operators.Multimodal.clipGateWith(s, dir, kernel = true))),
-    "lmart" -> Seq(
-      "fresh" -> ((dir: String) => operators.TrainPrep.conformalGateWith(s, dir, artifact = false)),
-      "art" -> ((dir: String) => operators.TrainPrep.conformalGateWith(s, dir, artifact = true))),
-    "lmartc" -> Seq(
-      "fresh" -> ((dir: String) => operators.CorpusClean.ccnetBucketsWith(s, dir, artifact = false)),
-      "art" -> ((dir: String) => operators.CorpusClean.ccnetBucketsWith(s, dir, artifact = true))),
-    "lmartq" -> Seq(
-      "fresh" -> ((dir: String) => operators.TrainPrep.qualityAgreementWith(s, dir, artifact = false)),
-      "art" -> ((dir: String) => operators.TrainPrep.qualityAgreementWith(s, dir, artifact = true))),
-    "lmartp" -> Seq(
-      "fresh" -> ((dir: String) => operators.TrainPrep.paretoQualityGateWith(s, dir, artifact = false)),
-      "art" -> ((dir: String) => operators.TrainPrep.paretoQualityGateWith(s, dir, artifact = true))),
-    "cluart" -> Seq(
-      "fresh" -> ((dir: String) => operators.Dedup.dedupClustersImpl(
-        s, dir, operators.Dedup.LocalClusterEdges)),
-      "art" -> ((dir: String) => operators.Dedup.dedupClusters(s, dir))),
-    "mmrdrv" -> Seq(
-      "rel" -> ((dir: String) => operators.Retrieval.mmrDiversifyWith(s, dir, drv = false)),
-      "drv" -> ((dir: String) => operators.Retrieval.mmrDiversifyWith(s, dir, drv = true))),
-    "signlsh" -> Seq(
-      "scal" -> ((dir: String) => functions.VecFns.portableBucketsWith(
-        Tables.embeddings(s, dir), "vec_id", "embedding",
-        operators.Dedup.CosLshBits, operators.Dedup.CosLshBands, kernel = false)),
-      "ker" -> ((dir: String) => functions.VecFns.portableBucketsWith(
-        Tables.embeddings(s, dir), "vec_id", "embedding",
-        operators.Dedup.CosLshBits, operators.Dedup.CosLshBands, kernel = true))),
-    "simhash" -> Seq(
-      "scal" -> ((dir: String) => operators.Dedup.dedupSimhashWideWith(s, dir, kernel = false)),
-      "ker" -> ((dir: String) => operators.Dedup.dedupSimhashWideWith(s, dir, kernel = true))),
-    "bpe" -> Seq(
-      "ckpt" -> ((dir: String) => operators.CorpusClean.bpeTrainProbe(s, dir, viaPersist = false)),
-      "per" -> ((dir: String) => operators.CorpusClean.bpeTrainProbe(s, dir, viaPersist = true))),
-    "bpearr" -> Seq(
-      "row" -> ((dir: String) => operators.CorpusClean.bpeTrainProbe(s, dir, viaPersist = true)),
-      "arr" -> ((dir: String) => operators.CorpusClean.bpeTrain(s, dir))),
-    "kmvsu" -> Seq(
-      "win" -> ((dir: String) => operators.Sketches.kmvIntersectProbe(s, dir, grp = true, arrSu = false)),
-      "arr" -> ((dir: String) => operators.Sketches.kmvIntersectProbe(s, dir, grp = true, arrSu = true))),
-    "winnow" -> Seq(
-      "win" -> ((dir: String) => queries.TextOps.winnowFrame(
-        queries.TextOps.winnowFps(s, dir, fanout = false))),
-      "fan" -> ((dir: String) => queries.TextOps.winnowFrame(
-        queries.TextOps.winnowFps(s, dir, fanout = true)))),
-    "winhash" -> Seq(
-      "str" -> ((dir: String) => queries.TextOps.winnowFrame(
-        queries.TextOps.winnowFps(s, dir, fanout = false))),
-      "tok" -> ((dir: String) => queries.TextOps.winnowFrame(
-        queries.TextOps.winnowFps(s, dir, fanout = false, tokHash = true)))),
-    "winkernel" -> Seq(
-      "str" -> ((dir: String) => queries.TextOps.winnowFrame(
-        queries.TextOps.winnowFps(s, dir, fanout = false))),
-      "ker" -> ((dir: String) => queries.TextOps.winnowFrame(
-        queries.TextOps.winnowFps(s, dir, fanout = false, kernel = true)))),
-    "maxsim" -> Seq(
-      "hof" -> ((dir: String) => operators.Ann.colbertMaxsimProbe(s, dir, hof = true)),
-      "ker" -> ((dir: String) => operators.Ann.colbertMaxsimProbe(s, dir, hof = false))),
-    "cdc" -> Seq(
-      "hof" -> ((dir: String) => operators.Dedup.cdcChunksProbe(s, dir, hof = true)),
-      "ker" -> ((dir: String) => operators.Dedup.cdcChunksProbe(s, dir, hof = false))),
-    "pagerank" -> Seq(
-      "ship" -> ((dir: String) => operators.PageRankIter.pagerankIterProbe(s, dir, "ship")),
-      "ckpt" -> ((dir: String) => operators.PageRankIter.pagerankIterProbe(s, dir, "ckpt")),
-      "pre" -> ((dir: String) => operators.PageRankIter.pagerankIterProbe(s, dir, "pre"))),
-    "prart" -> Seq(
-      "pre" -> ((dir: String) => operators.PageRankIter.pagerankIterProbe(s, dir, "pre")),
-      "art" -> ((dir: String) => operators.PageRankIter.pagerankIterProbe(s, dir, "art"))),
-    "annevals" -> Seq(
-      "fresh" -> ((dir: String) => operators.Ann.annEvalsProbe(s, dir, art = false)),
-      "art" -> ((dir: String) => operators.Ann.annEvalsProbe(s, dir, art = true))),
-    "textrank" -> Seq(
-      "unfused" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir, fused = false)),
-      "fused" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir, fused = true))),
-    "trker" -> Seq(
-      "row" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir,
-        fused = true, stacked = true, pin = true)),
-      "spk" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir,
-        fused = true, stacked = true, pin = true, kernel = true)),
-      "full" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir,
-        fused = true, stacked = true, pin = true, full = true))),
-    "trstack" -> Seq(
-      "legs" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir,
-        fused = true, stacked = false, pin = true)),
-      "stack" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir,
-        fused = true, stacked = true, pin = true))),
-    "trsurv" -> Seq(
-      "ckpt" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir,
-        fused = true, stacked = true, pin = true)),
-      "none" -> ((dir: String) => queries.TextOps.textrankKeywordsWith(s, dir,
-        fused = true, stacked = true, pin = false))),
-    "novelty" -> Seq(
-      "dist" -> ((dir: String) => queries.TextOps.ngramNoveltyProbe(s, dir, dedupSemi = true)),
-      "raw" -> ((dir: String) => queries.TextOps.ngramNoveltyProbe(s, dir, dedupSemi = false))),
-    "gains" -> Seq(
-      "ckpt" -> ((dir: String) => operators.Graph.leidenRefineWith(s, dir, viaPersist = false)),
-      "per" -> ((dir: String) => operators.Graph.leidenRefineWith(s, dir, viaPersist = true))),
-    "shjbpe" -> Seq(
-      "smj" -> ((dir: String) => { s.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-        SparkEntry.queries("bpe_train")(s, dir) }),
-      "shj" -> ((dir: String) => { s.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        SparkEntry.queries("bpe_train")(s, dir) })),
-    "shjrl" -> Seq(
-      "smj" -> ((dir: String) => { s.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-        SparkEntry.queries("record_linkage")(s, dir) }),
-      "shj" -> ((dir: String) => { s.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        SparkEntry.queries("record_linkage")(s, dir) })),
-    "shjngram" -> Seq(
-      "smj" -> ((dir: String) => { s.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-        SparkEntry.queries("ngram_novelty")(s, dir) }),
-      "shj" -> ((dir: String) => { s.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        SparkEntry.queries("ngram_novelty")(s, dir) })),
-    "bande" -> Seq(
-      "hof" -> ((dir: String) => operators.Multimodal.audioFingerprintWith(s, dir, kernel = false)),
-      "ker" -> ((dir: String) => operators.Multimodal.audioFingerprintWith(s, dir, kernel = true))),
-    "markov" -> Seq(
-      "rel" -> ((dir: String) => queries.Behavior.markovAttributionWith(s, dir, drv = false)),
-      "drv" -> ((dir: String) => queries.Behavior.markovAttributionWith(s, dir, drv = true))),
-    "margin" -> Seq(
-      "join" -> ((dir: String) => operators.Retrieval.bitextMineLshProbe(s, dir, fused = false)),
-      "fused" -> ((dir: String) => operators.Retrieval.bitextMineLshProbe(s, dir, fused = true))),
-    "decon" -> Seq(
-      "win" -> ((dir: String) => operators.TrainPrep.decontaminateWith(s, dir, arr = false)),
-      "arr" -> ((dir: String) => operators.TrainPrep.decontaminateWith(s, dir, arr = true))),
-    "gainslv" -> Seq(
-      "ckpt" -> ((dir: String) => operators.Graph.louvainMoveWith(s, dir, viaPersist = false)),
-      "per" -> ((dir: String) => operators.Graph.louvainMoveWith(s, dir, viaPersist = true))),
-    "afpin" -> Seq(
-      "none" -> ((dir: String) => operators.Multimodal.audioFingerprintWith(s, dir, kernel = true, pin = false)),
-      "pin" -> ((dir: String) => operators.Multimodal.audioFingerprintWith(s, dir, kernel = true, pin = true))),
-    "pqpin" -> Seq(
-      "none" -> ((dir: String) => operators.Ann.annPqWith(s, dir, pin = false)),
-      "pin" -> ((dir: String) => operators.Ann.annPqWith(s, dir, pin = true))),
-    "deconk" -> Seq(
-      "win" -> ((dir: String) => operators.TrainPrep.decontaminateWith(s, dir, arr = false)),
-      "arrk" -> ((dir: String) => operators.TrainPrep.decontaminateWith(s, dir, arr = true, kernel = true))),
-    "shingk" -> Seq(
-      "hof" -> ((dir: String) => {
-        val posts = queries.TextOps.ngramPostsWith(s, dir, hof = true)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val out = queries.TextOps.ngramNoveltyFrame(s, posts).localCheckpoint()
-        posts.unpersist(); out }),
-      "ker" -> ((dir: String) => SparkEntry.queries("ngram_novelty")(s, dir))),
-    "satk" -> Seq(
-      "hof" -> ((dir: String) => operators.TrainPrep.saturationCurveWith(s, dir, hof = true)),
-      "ker" -> ((dir: String) => operators.TrainPrep.saturationCurveWith(s, dir, hof = false))),
-    "bink" -> Seq(
-      "hof" -> ((dir: String) => queries.Robust.quantileBinsWith(s, dir, hof = true)),
-      "cmp" -> ((dir: String) => queries.Robust.quantileBinsWith(s, dir, hof = false))),
-    "encadv" -> Seq(
-      "six" -> ((dir: String) => operators.ScalePatterns.encodingAdvisorWith(s, dir, expand = false)),
-      "exp" -> ((dir: String) => operators.ScalePatterns.encodingAdvisorWith(s, dir, expand = true))),
-    "lapk" -> Seq(
-      "hof" -> ((dir: String) => operators.Multimodal.mmBlurDetectWith(s, dir, kernel = false)),
-      "ker" -> ((dir: String) => operators.Multimodal.mmBlurDetectWith(s, dir, kernel = true))),
-    "vadk" -> Seq(
-      "hof" -> ((dir: String) => operators.Multimodal.mmEnergyVadWith(s, dir, kernel = false)),
-      "ker" -> ((dir: String) => operators.Multimodal.mmEnergyVadWith(s, dir, kernel = true))),
-    "lumak" -> Seq(
-      "hof" -> ((dir: String) => operators.Multimodal.sceneCutWith(s, dir, kernel = false)),
-      "ker" -> ((dir: String) => operators.Multimodal.sceneCutWith(s, dir, kernel = true))),
-    "dsirh" -> Seq(
-      "twoagg" -> ((dir: String) => operators.TrainPrep.dsirWeightsWith(s, dir, merged = false)),
-      "merged" -> ((dir: String) => operators.TrainPrep.dsirWeightsWith(s, dir, merged = true))),
-    "dsirg" -> Seq(
-      "chain" -> ((dir: String) => operators.TrainPrep.dsirWeightsWith(s, dir, merged = true, gramKernel = false)),
-      "ker" -> ((dir: String) => operators.TrainPrep.dsirWeightsWith(s, dir, merged = true, gramKernel = true))),
-    "lvart" -> Seq(
-      "fresh" -> ((dir: String) => operators.Graph.louvainMoveWith(s, dir, viaPersist = false)),
-      "art" -> ((dir: String) => operators.Graph.louvainMove(s, dir))),
-    "lrart" -> Seq(
-      "fresh" -> ((dir: String) => operators.Graph.leidenRefineWith(s, dir, viaPersist = false)),
-      "art" -> ((dir: String) => operators.Graph.leidenRefine(s, dir))))
+  private def preferSmj(s: SparkSession, query: String)
+      : Seq[(String, String => DataFrame)] =
+    Seq("smj" -> "true", "shj" -> "false").map { case (label, smj) =>
+      label -> ((dir: String) => {
+        s.conf.set("spark.sql.join.preferSortMergeJoin", smj)
+        SparkEntry.queries(query)(s, dir)
+      })
+    }
+
+  private def pairs(s: SparkSession): Map[String, Seq[(String, String => DataFrame)]] = Map(
+    "shjbpe" -> preferSmj(s, "bpe_train"),
+    "shjrl" -> preferSmj(s, "record_linkage"),
+    "shjngram" -> preferSmj(s, "ngram_novelty"))
 
   def main(args: Array[String]): Unit = {
-    val names = args.headOption.getOrElse("keyness").split(",").toSeq
+    val names = args.headOption.getOrElse("shjbpe").split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val rounds = if (args.length > 2) args(2).toInt else 4
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

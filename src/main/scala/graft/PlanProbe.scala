@@ -1,9 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Plan-shape probe for perf triage (the verify skill's "drop a
-  * temporary main" step, made permanent): prints the plan of each
-  * named SparkEntry query — grep for BroadcastHashJoin /
+/** Plan-shape probe for perf triage: prints the plan of each named
+  * SparkEntry query or frame — grep for BroadcastHashJoin /
   * PushedFilters / Exchange counts.
   *
   * Prints `explain("formatted")` (the optimization-guide §7.2 form:
@@ -14,89 +13,40 @@ import org.apache.spark.sql.SparkSession
   * plan SHAPE is scale-invariant here, but AQE-chosen strategies can
   * differ — capture at the bench scale when a claim depends on one).
   *
-  * Usage: runMain graft.PlanProbe <name> [name...]
+  * With no names it prints every SparkEntry query (sorted), then
+  * every frame, with session-local ids normalized — two commits'
+  * outputs compare with `diff` (the same-plans check of a refactor).
+  *
+  * Usage: runMain graft.PlanProbe [name...]
   */
 object PlanProbe {
-  /** Internal frames whose PUBLIC query plan is localCheckpoint-
-    * truncated (Scan ExistingRDD): probe these names to see the real
-    * shape the checkpoint hides. */
+  /** Un-checkpointed frames of shipped queries whose PUBLIC plan is
+    * cut at a localCheckpoint (Scan ExistingRDD) or an eager collect:
+    * probe these names to see the shape the cut hides. */
   private def frames: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-    "bitext_margin_fused" -> ((s, d) =>
-      operators.Retrieval.marginMineWith(
-        operators.Retrieval.bitextLshPairs(s, d), fused = true, ckpt = false)),
-    "bitext_margin_join" -> ((s, d) =>
-      operators.Retrieval.marginMineWith(
-        operators.Retrieval.bitextLshPairs(s, d), fused = false, ckpt = false)),
-    "markov_relational" -> ((s, d) =>
-      queries.Behavior.markovAttributionWith(s, d, drv = false)),
+    "bitext_margin_frame" -> ((s, d) =>
+      operators.Retrieval.marginFrame(operators.Retrieval.bitextLshPairs(s, d))),
     "ngram_novelty_frame" -> ((s, d) =>
       queries.TextOps.ngramNoveltyFrame(s, queries.TextOps.ngramPosts(s, d))),
     "kmv_intersect_frame" -> ((s, d) =>
       operators.Sketches.kmvIntersectFrame(operators.Sketches.kmvPostings(s, d))),
-    "louvain_move_fresh" -> ((s, d) =>
-      operators.Graph.louvainMoveWith(s, d, viaPersist = false)),
-    "mm_blur_detect_hof" -> ((s, d) =>
-      operators.Multimodal.mmBlurDetectWith(s, d, kernel = false)),
-    "mm_energy_vad_hof" -> ((s, d) =>
-      operators.Multimodal.mmEnergyVadWith(s, d, kernel = false)),
-    "scene_cut_hof" -> ((s, d) =>
-      operators.Multimodal.sceneCutWith(s, d, kernel = false)),
-    "dsir_twoagg" -> ((s, d) =>
-      operators.TrainPrep.dsirWeightsWith(s, d, merged = false)),
-    "textrank_legs" -> ((s, d) =>
-      queries.TextOps.textrankKeywordsWith(s, d,
-        fused = true, stacked = false, pin = true)),
-    "leiden_refine_fresh" -> ((s, d) =>
-      operators.Graph.leidenRefineWith(s, d, viaPersist = false)),
-    "mm_phash_chain" -> ((s, d) =>
-      operators.Multimodal.mmPhashDedupWith(s, d, kernel = false, ckpt = false)),
-    "mm_phash_kernel" -> ((s, d) =>
-      operators.Multimodal.mmPhashDedupWith(s, d, kernel = true, ckpt = false)),
-    "mm_patch_embed_chain" -> ((s, d) =>
-      operators.Multimodal.mmPatchEmbedWith(s, d, kernel = false)),
-    "clip_gate_chain" -> ((s, d) =>
-      operators.Multimodal.clipGateWith(s, d, kernel = false)),
-    "mmr_relational" -> ((s, d) =>
-      operators.Retrieval.mmrDiversifyWith(s, d, drv = false)),
+    "mm_phash_frame" -> ((s, d) =>
+      operators.Multimodal.mmPhashFrame(operators.Multimodal.phashBands(s, d))),
+    // mmr_diversify collects its candidate sims for the driver greedy
     "mmr_pairs_frame" -> ((s, d) =>
       operators.Retrieval.mmrCandsPairs(s, d)._2),
-    "dedup_clusters_fresh" -> ((s, d) =>
-      operators.Dedup.dedupClustersImpl(s, d, operators.Dedup.LocalClusterEdges)),
+    "minhash_lsh_frame" -> ((s, d) =>
+      operators.Dedup.minhashLshFrame(s, d)),
     // dedup_clusters materializes its pair list EAGERLY (count +
     // collect during construction), so the public plan shows only the
-    // withSingletons tail either way; the artifact delta lives in the
-    // PAIRS frame these two expose (fresh C2 sweep vs parquet read)
-    "dedup_clusters_pairs_fresh" -> ((s, d) =>
-      operators.Dedup.minhashLshFrame(s, d)),
-    "dedup_clusters_pairs_artifact" -> ((s, d) =>
+    // withSingletons tail; its input is the lsh_pairs artifact read
+    "lsh_pairs_artifact" -> ((s, d) =>
       operators.Dedup.lshPairsArtifact(s, d)),
-    "conformal_gate_fresh" -> ((s, d) =>
-      operators.TrainPrep.conformalGateWith(s, d, artifact = false)),
-    "ccnet_buckets_fresh" -> ((s, d) =>
-      operators.CorpusClean.ccnetBucketsWith(s, d, artifact = false)),
-    "quality_agreement_fresh" -> ((s, d) =>
-      operators.TrainPrep.qualityAgreementWith(s, d, artifact = false)),
-    "pareto_quality_gate_fresh" -> ((s, d) =>
-      operators.TrainPrep.paretoQualityGateWith(s, d, artifact = false)),
-    // the gate/bucket consumers checkpoint their cells during
-    // construction, so their public plans hide the scoring half
-    // either way; the artifact delta lives in the SCORES frame
-    // bpe_train collects per round, so neither form's full loop shows
-    // in one plan; these expose ONE round's pair-count frame — the
-    // row form's sort-window lead vs the array form's kernel explode
-    "bpe_round_pairs_row" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(org.apache.spark.sql.functions.col("doc_id"))
-        .orderBy(org.apache.spark.sql.functions.col("pos"))
-      import org.apache.spark.sql.functions._
-      Tables.documents(s, d).select(col("doc_id"),
-          posexplode(functions.TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w")))
-        .withColumn("w1", lead(col("w"), 1).over(w))
-        .filter(col("w1").isNotNull)
-        .groupBy(col("w"), col("w1")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("w"), col("w1")).limit(1)
-    }),
-    "bpe_round_pairs_arr" -> ((s, d) => {
+    "lm_per_doc_frame" -> ((s, d) =>
+      operators.CorpusClean.lmPerDocFrame(s, d)),
+    // bpe_train collects per round, so its loop never shows in one
+    // plan; this is ONE round's pair-count frame
+    "bpe_round_pairs" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       Tables.documents(s, d).select(col("doc_id"),
           functions.TextFns.wsTokens(lower(col("text"))).as("ts"))
@@ -104,39 +54,31 @@ object PlanProbe {
         .select(col("p.w").as("w"), col("p.w1").as("w1"))
         .groupBy(col("w"), col("w1")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("w"), col("w1")).limit(1)
-    }),
-    "textrank_sp_frame" -> ((s, d) => queries.TextOps.trSpFrame(s, d)),
-    "ngram_novelty_hof" -> ((s, d) =>
-      queries.TextOps.ngramNoveltyFrame(s,
-        queries.TextOps.ngramPostsWith(s, d, hof = true))),
-    "saturation_curve_hof" -> ((s, d) =>
-      operators.TrainPrep.saturationCurveWith(s, d, hof = true)),
-    "decontaminate_win" -> ((s, d) =>
-      operators.TrainPrep.decontaminateWith(s, d, arr = false)),
-    "quantile_bins_hof" -> ((s, d) =>
-      queries.Robust.quantileBinsWith(s, d, hof = true)),
-    "dsir_weights_kernel" -> ((s, d) =>
-      operators.TrainPrep.dsirWeightsWith(s, d, merged = true, gramKernel = true)),
-    "ann_pq_unpinned" -> ((s, d) =>
-      operators.Ann.annPqWith(s, d, pin = false)),
-    "keyness_zip" -> ((s, d) =>
-      queries.TextOps.keynessFrame(queries.TextOps.keynessCellsZip(s, d))),
-    "keyness_kernel" -> ((s, d) =>
-      queries.TextOps.keynessFrame(queries.TextOps.keynessCells(s, d))),
-    "lm_scores_fresh" -> ((s, d) =>
-      operators.CorpusClean.lmPerDoc(s, d, barrier = false)),
-    "lm_scores_artifact" -> ((s, d) =>
-      operators.CorpusClean.lmScoresArtifact(s, d)))
+    }))
+
+  /** Ids that differ run to run without the plan changing: expression
+    * ids (`#123`), `plan_id=`, a checkpointed scan's RDD id and
+    * call-site line, lambda-variable and closure-class suffixes, and
+    * the checkout directory in artifact paths. */
+  def normalize(plan: String): String = Seq(
+      "#\\d+" -> "#N", "plan_id=\\d+" -> "plan_id=N", "RDD\\[\\d+\\]" -> "RDD[N]",
+      "\\.scala:\\d+" -> ".scala:N", "(lambda \\w+)_\\d+" -> "$1_N",
+      "\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+" -> "\\$Lambda\\$N")
+    .foldLeft(plan.replace("file:" + sys.props("user.dir") + "/", "file:./")) {
+      case (p, (re, to)) => p.replaceAll(re, to)
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_SF", "/root/testdata/sf0.001")
     val spark = GraftSession.local(4)
-    for (n <- args) {
+    val names = if (args.nonEmpty) args.toSeq
+      else SparkEntry.queries.keys.toSeq.sorted ++ frames.keys.toSeq.sorted
+    for (n <- names) {
       println(s"===== $n")
       val df = frames.get(n).map(_(spark, sfDir))
         .getOrElse(SparkEntry.queries(n)(spark, sfDir))
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      println(normalize(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
     }
     spark.stop()
   }

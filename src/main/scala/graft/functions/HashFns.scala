@@ -80,58 +80,25 @@ object HashFns {
     * past 64 bits needs no extra hash lanes: bits 64..127 come from
     * further (SimA, SimB) pairs over the same h. */
   def simhashBandsAggPortable(posts: DataFrame, idCol: String, hCol: String,
-                              totalBits: Int, numBands: Int): DataFrame =
-    simhashBandsAggPortableWith(posts, idCol, hCol, totalBits, numBands,
-      kernel = true)
-
-  /** Two A/B-able forms: `kernel = true` dispatches to the
-    * [[graft.plans.SimhashAgg]] buffer aggregate (one tight loop,
-    * totalBits longs per partial — the MinhashAgg treatment);
-    * `false` keeps the prior totalBits-scalar-aggregate plan (one
-    * `sum(when(simBit…))` per bit — a giant codegen class per sketch
-    * width). Emitted (id, sb) rows are bit-identical. */
-  def simhashBandsAggPortableWith(posts: DataFrame, idCol: String, hCol: String,
-                                  totalBits: Int, numBands: Int,
-                                  kernel: Boolean): DataFrame = {
+                              totalBits: Int, numBands: Int): DataFrame = {
+    // the [[graft.plans.SimhashAgg]] buffer aggregate: one tight loop,
+    // totalBits longs per partial, bit-identical to one
+    // `sum(when(simBit…))` per bit (the retired scalar form, now
+    // DedupSpec's oracle) without a giant codegen class per width
     require(totalBits <= 128 && totalBits % numBands == 0)
-    val r = totalBits / numBands
-    require(r <= 63, "band value must fit a signed long")
-    if (kernel) {
-      posts.groupBy(col(idCol))
-        .agg(call_function("simhash_agg", col(hCol),
-          lit(totalBits), lit(numBands)).as("sb"))
-    } else {
-      val sums = (0 until totalBits).map(k =>
-        sum(when(simBit(col(hCol), k), 1L).otherwise(-1L)).as(s"c$k"))
-      val bandCols = (0 until numBands).map { bnd =>
-        (0 until r).foldLeft(lit(0L)) { (acc, j) =>
-          acc * 2 + when(col(s"c${bnd * r + j}") > 0, 1L).otherwise(0L)
-        }.as(s"b$bnd")
-      }
-      posts.groupBy(col(idCol))
-        .agg(sums.head, sums.tail: _*)
-        .select(col(idCol) +: bandCols: _*)
-        .select(col(idCol), array((0 until numBands).map(i => col(s"b$i")): _*).as("sb"))
-    }
+    require(totalBits / numBands <= 63, "band value must fit a signed long")
+    posts.groupBy(col(idCol))
+      .agg(call_function("simhash_agg", col(hCol),
+        lit(totalBits), lit(numBands)).as("sb"))
   }
 
   /** Distinct n-gram token shingles of `text` ("w1 w2 w3" strings).
-    * Docs shorter than n tokens get a single whole-doc shingle.
-    * Shipped form is the codegen [[graft.plans.TokenGrams]] kernel;
-    * `shinglesHof` keeps the interpreted column chain as the probe
-    * twin ([[graft.ABProbe]] `shingk`) — bit-identical by the kernel's
-    * contract (ScalaCheck-pinned). */
+    * Docs shorter than n tokens get a single whole-doc shingle. The
+    * codegen [[graft.plans.TokenGrams]] kernel — bit-identical to the
+    * split/slice/concat_ws/array_distinct chain by its ScalaCheck
+    * contract, 3× faster (OPTIMIZATION_r14.md row 8). */
   def shingles(text: Column, n: Int = 3): Column =
     call_function("token_grams", lower(text), lit(n.toLong))
-
-  def shinglesHof(text: Column, n: Int = 3): Column = {
-    val toks = TextFns.wsTokens(lower(text))
-    when(size(toks) >= n,
-      array_distinct(
-        transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-      .otherwise(array(concat_ws(" ", toks)))
-  }
 
   /** Shingle set → non-negative hashes in [0, P). */
   def shingleHashes(sh: Column): Column =

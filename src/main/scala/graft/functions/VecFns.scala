@@ -54,41 +54,17 @@ object VecFns {
     * the exploded (id, t, b) keys ready for the (t, b) equi-join. */
   def portableBuckets(df: DataFrame, idCol: String, vecCol: String,
                       bits: Int, tables: Int): DataFrame =
-    portableBucketsWith(df, idCol, vecCol, bits, tables, kernel = true)
-
-  /** Two A/B-able forms ([[graft.ABProbe]] `signlsh`): `kernel = true`
-    * dispatches to the [[graft.plans.SignLshAgg]] buffer aggregate
-    * (one tight planes-long loop over a tabulated sign table, planes
-    * longs per partial); `false` keeps the prior bits·tables-scalar-
-    * aggregate plan (one `sum(when(planeSign…))` per plane — a giant
-    * codegen class per layout). Emitted (id, t, b) rows are
-    * bit-identical. */
-  def portableBucketsWith(df: DataFrame, idCol: String, vecCol: String,
-                          bits: Int, tables: Int, kernel: Boolean): DataFrame = {
-    val planes = tables * bits
-    val posts = df.select(col(idCol), posexplode(col(vecCol)).as(Seq("d", "x")))
+    // the [[graft.plans.SignLshAgg]] buffer aggregate: one tight
+    // planes-long loop over a tabulated sign table, bit-identical to
+    // one `sum(when(planeSign…))` per plane (the retired scalar form,
+    // now DedupSpec's oracle)
+    df.select(col(idCol), posexplode(col(vecCol)).as(Seq("d", "x")))
       .select(col(idCol), col("d"),
         floor(col("x").cast("double") * 10000 + 0.5).cast("long").as("q"))
-    if (kernel) {
-      posts.groupBy(col(idCol))
-        .agg(call_function("signlsh_agg", col("d"), col("q"),
-          lit(bits), lit(tables)).as("bs"))
-        .select(col(idCol), posexplode(col("bs")).as(Seq("t", "b")))
-    } else {
-      val projs = (0 until planes).map(k =>
-        sum(when(planeSign(k, col("d")), col("q")).otherwise(-col("q"))).as(s"p$k"))
-      val bucketCols = (0 until tables).map { t =>
-        (0 until bits).map(r =>
-          when(col(s"p${t * bits + r}") > 0, 1L << r).otherwise(0L))
-          .reduce(_ + _).as(s"b$t")
-      }
-      posts.groupBy(col(idCol)).agg(projs.head, projs.tail: _*)
-        .select(col(idCol) +: bucketCols: _*)
-        .select(col(idCol), explode(array((0 until tables).map(t =>
-          struct(lit(t).as("t"), col(s"b$t").as("b"))): _*)).as("tb"))
-        .select(col(idCol), col("tb.t").as("t"), col("tb.b").as("b"))
-    }
-  }
+      .groupBy(col(idCol))
+      .agg(call_function("signlsh_agg", col("d"), col("q"),
+        lit(bits), lit(tables)).as("bs"))
+      .select(col(idCol), posexplode(col("bs")).as(Seq("t", "b")))
 
   /** DuckDB CTEs computing the portable (vec_id, t, b) bucket keys
     * for every embedding — the literal replay of [[portableBuckets]]

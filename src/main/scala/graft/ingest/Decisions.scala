@@ -259,9 +259,7 @@ object Decisions {
     val shuffleP = s.conf.get("spark.sql.shuffle.partitions").toInt
     val raw = ZipCsv.read(s, fixture, FieldNames).drop("_src").repartition(shuffleP)
     val parsed = parse(raw).filter(col("uuid") =!= "")
-    val w = Window.partitionBy(col("uuid")).orderBy(lwwOrder: _*)
-    parsed.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    Upsert.lastWriteWins(parsed, Seq("uuid"), lwwOrder)
       .select(OutCols.map(col): _*)
   }
 
@@ -317,7 +315,7 @@ object Decisions {
     * share it.
     *
     * Slope term, pinned (r11 VERDICT item 3 — 2.91 s warm, slope 5.6
-    * mid-bench): three-SF probe (TimeQ, warm min, idle box) sf0.001
+    * mid-bench): three-SF probe (QProbe, warm min, idle box) sf0.001
     * 1.32 s / sf0.01 1.08 s / sf0.1 1.75 s over 1k / 10k / 100k
     * decision rows. Fit: ≈1.0 s fixed (12-archive binaryFile scan +
     * zip decode + the 36-field parse's codegen + the window plan) +

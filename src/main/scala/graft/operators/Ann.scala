@@ -666,7 +666,7 @@ object Ann {
           s"pq=$PqSubDim/$PqK/$PqProbes/$PqTopK;blocks=${Dedup.CosBlocks}")
 
   /** The from-scratch four-path ranking union — the artifact
-    * builder (and the A-side of the ABProbe pair). */
+    * builder. */
   private[graft] def annRankedFresh(s: SparkSession, dir: String): DataFrame =
     annBruteforce(s, dir)
       .select(lit("exact").as("path"), col("qid"), col("nb"), col("rnk"))
@@ -689,37 +689,6 @@ object Ann {
   private def rankedOf(s: SparkSession, dir: String, p: String): DataFrame =
     s.read.parquet(ensureAnnRanked(s, dir))
       .filter(col("path") === p).select(col("qid"), col("nb"), col("rnk"))
-
-  /** The pre-r13 inline form of [[rankedOf]] — the B-side of the
-    * `annevals` ABProbe pair and the row-identity spec's witness
-    * that the artifact changes WHERE rankings come from, never what
-    * they contain. */
-  private[graft] def freshRankedOf(s: SparkSession, dir: String,
-                                   p: String): DataFrame = p match {
-    case "exact" => annBruteforce(s, dir).select(col("qid"), col("nb"), col("rnk"))
-    case "lsh"   => annLsh(s, dir).select(col("qid"), col("nb"), col("rnk"))
-    case "ivf"   => annIvf(s, dir).select(col("qid"), col("nb"), col("rnk"))
-    case "pq"    => annPq(s, dir).select(col("probe_id").as("qid"),
-      col("neighbor").as("nb"), col("rank").as("rnk"))
-  }
-
-  /** The eval trio reduced to one frame for the ABProbe harness:
-    * every upstream stage still runs, only a 2-column projection is
-    * written. art = artifact reads vs fresh inline rankings. */
-  private[graft] def annEvalsProbe(s: SparkSession, dir: String,
-                                   art: Boolean): DataFrame = {
-    val src: String => DataFrame =
-      if (art) rankedOf(s, dir, _) else freshRankedOf(s, dir, _)
-    annRecallFrom(src)
-      .select(concat(lit("recall_"), col("qid")).as("k"),
-        col("lsh_hits").as("v"))
-      .unionByName(ndcgEvalFrom(src)
-        .select(concat(lit("ndcg_"), col("path")).as("k"),
-          col("ndcg_pm").as("v")))
-      .unionByName(mrrEvalFrom(src)
-        .select(concat(lit("mrr_"), col("path")).as("k"),
-          col("mrr_pm").as("v")))
-  }
 
   /** K-line: ANN RECALL@K calibration — per query, how many of the
     * exact top-[[K]] (D1) each approximate path (D2 LSH, D3 IVF,
@@ -988,24 +957,18 @@ object Ann {
     * sums; encoding is the same assignment; query-time cost is
     * codes ⋈ broadcast LUT (probes × K × subs rows) + one top-k
     * window per probe — the big side never exchanges. */
-  def annPq(s: SparkSession, dir: String): DataFrame =
-    annPqWith(s, dir, pin = true)
-
-  /** `pin` A/B ([[graft.ABProbe]] `pqpin`): the quantized subvector
-    * cells feed FIVE subtrees (seed centroids, two assignment passes,
-    * the re-centering aggregate, the probe slices) — persist scans
-    * the explode once; `pin = false` recomputes it per consumer. */
-  private[graft] def annPqWith(s: SparkSession, dir: String,
-                               pin: Boolean): DataFrame = {
+  def annPq(s: SparkSession, dir: String): DataFrame = {
+    // the quantized subvector cells feed FIVE subtrees (seed
+    // centroids, two assignment passes, the re-centering aggregate,
+    // the probe slices): persist so the explode is scanned once
+    // (OPTIMIZATION_r14.md row 11: warm a wash, cold 6.4 → 3.3 s)
     val pts0 = embeddings(s, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "v")))
       .select(col("vec_id"),
         (col("d") / PqSubDim).cast("int").as("sub"),
         (col("d") % PqSubDim).as("sd"),
         floor(col("v").cast("double") * KMeansIter.Scale + 0.5).cast("long").as("qv"))
-    val pts = if (pin)
-      pts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else pts0
+    val pts = pts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val c0 = pts.filter(col("vec_id") < PqK)
       .select(col("vec_id").as("cid"), col("sub"), col("sd"), col("qv").as("cv"))
     def assign(c: DataFrame): DataFrame =
@@ -1921,35 +1884,15 @@ object Ann {
     * leaves its row); the only shuffle is the two-phase top-K rank.
     * At 100 TB the candidate set comes from an index (D2/D3) and
     * MaxSim re-scores candidates — exactly how ColBERT deploys. */
-  def colbertMaxsim(s: SparkSession, dir: String): DataFrame =
-    colbertMaxsimProbe(s, dir, hof = false)
-
-  /** A/B probe twin: `hof = true` is the original nested-HOF column
-    * form (aggregate → array_max → transform with element_at dots —
-    * CodegenFallback, every T² dot walks an interpreted tree);
-    * `hof = false` is the shipped codegen'd
-    * [[graft.plans.MaxSimScore]] kernel, bit-identical by the
-    * KernelPropertySpec property test and the spec's set equality.
-    * Measured via [[graft.ABProbe]] at sf0.1 (warm med): kernel wins
-    * — see SURVEY §4. */
-  private[graft] def colbertMaxsimProbe(s: SparkSession, dir: String,
-                                        hof: Boolean): DataFrame = {
+  def colbertMaxsim(s: SparkSession, dir: String): DataFrame = {
     val q4 = (c: org.apache.spark.sql.Column) =>
       transform(c, x => floor(x.cast("double") * 10000 + 0.5).cast("long"))
-    def dot4(qc: org.apache.spark.sql.Column, nc: org.apache.spark.sql.Column,
-             i: org.apache.spark.sql.Column, j: org.apache.spark.sql.Column) =
-      (0 until CbDim).map { t =>
-        element_at(qc, (i * CbDim + t + 1).cast("int")) *
-          element_at(nc, (j * CbDim + t + 1).cast("int"))
-      }.reduce(_ + _)
-    val score =
-      if (hof)
-        aggregate(sequence(lit(0), lit(CbTokens - 1)), lit(0L),
-          (acc, i) => acc + array_max(
-            transform(sequence(lit(0), lit(CbTokens - 1)),
-              j => dot4(col("qe4"), col("ne4"), i, j))))
-      else call_function("maxsim_score", col("qe4"), col("ne4"),
-        lit(CbDim.toLong))
+    // the codegen'd [[graft.plans.MaxSimScore]] kernel: bit-identical
+    // to the nested-HOF column form (AnnSpec's oracle), which is
+    // CodegenFallback and measured 5.7× slower (ABProbe, sf0.1, warm
+    // med 0.58 vs 3.30 s; SURVEY.md K152)
+    val score = call_function("maxsim_score", col("qe4"), col("ne4"),
+      lit(CbDim.toLong))
     val qs = embeddings(s, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), q4(col("embedding")).as("qe4"))
     val scored = embeddings(s, dir)

@@ -472,35 +472,47 @@ object CorpusClean {
   /** The per-doc integer core of [[lmScore]] — (doc_id, n_bigrams,
     * sum_q) with q = cbg·LmScale div cuni per bigram instance —
     * shared with [[graft.operators.TrainPrep.qualityAgreement]]'s
-    * fluency axis so the two operators can't drift. PlanSpec probes
-    * via barrier=false (the jaccardNeighborsFrame convention —
-    * the checkpoint hides the executed plan). */
-  private[graft] def lmPerDoc(s: SparkSession, dir: String,
-                              barrier: Boolean = true): DataFrame = {
+    * fluency axis so the two operators can't drift. The bigram
+    * instances feed both the count table and the scoring join, so
+    * they are persisted; the doc-count-sized result is checkpointed
+    * so they can be released. */
+  private[graft] def lmPerDoc(s: SparkSession, dir: String): DataFrame = {
+    val (toks, bg0) = lmTokens(s, dir)
+    val bg = bg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val out = lmScoresOf(toks, bg).localCheckpoint()
+    bg.unpersist()
+    out
+  }
+
+  /** The un-checkpointed [[lmPerDoc]] plan — the lm_scores artifact
+    * producer, and what PlanSpec asserts on (the checkpoint above
+    * hides the executed plan). */
+  private[graft] def lmPerDocFrame(s: SparkSession, dir: String): DataFrame = {
+    val (toks, bg) = lmTokens(s, dir)
+    lmScoresOf(toks, bg)
+  }
+
+  /** (doc_id, pos, w) token postings and their (doc_id, w, w1)
+    * bigram instances. */
+  private def lmTokens(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val toks = documents(s, dir).select(col("doc_id"),
       posexplode(TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w")))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val bg0 = toks
+    (toks, toks
       .withColumn("w1", lead(col("w"), 1).over(w))
       .filter(col("w1").isNotNull)
-      .select(col("doc_id"), col("w"), col("w1"))
-    val bg = if (barrier)
-      bg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else bg0
+      .select(col("doc_id"), col("w"), col("w1")))
+  }
+
+  private def lmScoresOf(toks: DataFrame, bg: DataFrame): DataFrame = {
     val cBg = bg.groupBy(col("w"), col("w1")).agg(count(lit(1)).as("cbg"))
     val cUni = toks.groupBy(col("w")).agg(count(lit(1)).as("cuni"))
-    val res = bg
+    bg
       .join(cBg, Seq("w", "w1"))
       .join(broadcast(cUni), Seq("w"))
       .select(col("doc_id"), expr(s"(cbg * ${LmScale}L) div cuni").as("q"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("q")).as("sum_q"))
-    if (!barrier) res
-    else {
-      val out = res.localCheckpoint() // doc-count-sized; release the bigrams
-      bg.unpersist()
-      out
-    }
   }
 
   /** Root for the materialized per-doc LM fluency scores — the
@@ -525,20 +537,13 @@ object CorpusClean {
     * concurrent first callers serialize on the ArtifactCache lock. */
   def ensureLmScores(s: SparkSession, dir: String): String =
     graft.ingest.ArtifactCache.ensure(lmScoresPath(dir)) {
-      lmPerDoc(s, dir, barrier = false)
-        .write.mode("overwrite").parquet(lmScoresPath(dir))
+      lmPerDocFrame(s, dir).write.mode("overwrite").parquet(lmScoresPath(dir))
     }
 
   /** The PERSISTED (doc_id, n_bigrams, sum_q) scores — set
     * semantics, row-identical to [[lmPerDoc]] (spec-pinned). */
   private[graft] def lmScoresArtifact(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensureLmScores(s, dir))
-
-  /** `artifact = false` probe twins recompute the sweep in-query —
-    * the pre-artifact cost ([[graft.ABProbe]] `lmart`). */
-  private[graft] def lmScoresWith(s: SparkSession, dir: String,
-                                  artifact: Boolean): DataFrame =
-    if (artifact) lmScoresArtifact(s, dir) else lmPerDoc(s, dir)
 
   def lmScore(s: SparkSession, dir: String): DataFrame =
     lmPerDoc(s, dir)
@@ -603,47 +608,26 @@ object CorpusClean {
     * tokens would need an explicit codepoint-keyed tiebreak. */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    bpeTrainArrReport(s, dir)
+    bpeTrainReport(s, dir)
       .toDF("round", "left", "right", "n_pair", "n_applied")
   }
-
-  /** Report-frame twin over either ROW-frame materialization form —
-    * the ABProbe `bpe` entry and the `bpearr` row side; the report
-    * only needs the merge rows, so the final token cache is released
-    * here. */
-  private[graft] def bpeTrainProbe(s: SparkSession, dir: String,
-                                   viaPersist: Boolean): DataFrame = {
-    import s.implicits._
-    val (toksF, merges) = bpeTrainRunWith(s, dir, viaPersist)
-    if (viaPersist) { toksF.unpersist(); () }
-    merges.toDF("round", "left", "right", "n_pair", "n_applied")
-  }
-
-  /** The training loop itself: returns the ENCODED token table after
-    * all [[BpeTrainRounds]] merges plus the merge report rows —
-    * [[bpeTrain]] reports the merges, [[ensureBpeTokens]] persists
-    * the encoded corpus for downstream consumers. */
-  private[graft] def bpeTrainRun(s: SparkSession, dir: String)
-      : (DataFrame, Seq[(Int, String, String, Long, Long)]) =
-    bpeTrainRunArr(s, dir)
 
   /** The training loop on the ARRAY-PER-DOC frame: tokens ride one
     * array column, adjacent pairs come from the one-pass
     * [[graft.plans.TokPairs]] kernel (a map-side projection) and the
     * merge round from [[graft.plans.BpeMerge]] — the sequential
     * greedy scanner the island-parity window chain is spec-pinned
-    * against, now AS the executable form. The row-frame loop below
-    * ([[bpeTrainRunWith]], ABProbe `bpe`/`bpearr`) paid per round: a
-    * doc-keyed sort window for lead(w) over corpus-token ROWS, then
-    * the three-window stageMerge/applyMerge chain and a re-index
-    * window; here each round is one pair-count aggregate + one
-    * map-only merge over doc-count rows. Same merges, same encoded
-    * corpus (posexplode at the end re-derives the 1-based
-    * positions), bit-for-bit — pinned by the artifact
-    * delete→rebuild spec and the kernel property specs. */
-  /** The array-form loop core: returns the PERSISTED final token
-    * arrays (caller unpersists) plus the merge report rows. */
-  private def bpeLoopArr(s: SparkSession, dir: String)
+    * against, now AS the executable form. The row-frame loop it
+    * replaced (OPTIMIZATION_r14.md row 19; CorpusCleanSpec keeps it
+    * as the oracle) paid per round: a doc-keyed sort window for
+    * lead(w) over corpus-token ROWS, then the three-window
+    * island-parity chain and a re-index window; here each round is
+    * one pair-count aggregate + one map-only merge over doc-count
+    * rows. Same merges, same encoded corpus (posexplode at the end
+    * re-derives the 1-based positions), bit-for-bit. Returns the
+    * PERSISTED final token arrays (caller unpersists) plus the merge
+    * report rows. */
+  private def bpeLoop(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, String, Long, Long)]) = {
     def mat(df: DataFrame): DataFrame =
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -675,70 +659,28 @@ object CorpusClean {
 
   /** Merge report only — the public bpe_train path (the final token
     * frame is never materialized beyond the loop's own cache). */
-  private[graft] def bpeTrainArrReport(s: SparkSession, dir: String)
+  private[graft] def bpeTrainReport(s: SparkSession, dir: String)
       : Seq[(Int, String, String, Long, Long)] = {
-    val (toks, merges) = bpeLoopArr(s, dir)
+    val (toks, merges) = bpeLoop(s, dir)
     toks.unpersist()
     merges
   }
 
-  private[graft] def bpeTrainRunArr(s: SparkSession, dir: String)
+  /** The training loop itself: returns the ENCODED token table after
+    * all [[BpeTrainRounds]] merges plus the merge report rows —
+    * [[bpeTrain]] reports the merges, [[ensureBpeTokens]] persists
+    * the encoded corpus for downstream consumers. */
+  private[graft] def bpeTrainRun(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, String, Long, Long)]) = {
-    val (toks, merges) = bpeLoopArr(s, dir)
+    val (toks, merges) = bpeLoop(s, dir)
     // re-derive the (doc_id, pos, w) row frame the artifact persists;
-    // positions are 1-based like applyMerge's row_number re-index
+    // positions are 1-based
     val out = toks
       .select(col("doc_id"), posexplode(col("ts")).as(Seq("pos0", "w")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("w"))
       .localCheckpoint()
     toks.unpersist()
     (out, merges)
-  }
-
-  /** The loop in two A/B-able materialization forms ([[graft.ABProbe]]
-    * `bpe`): `viaPersist = true` chains per-round persist() — the
-    * cached plan keeps its hashpartitioning(doc_id) output, so every
-    * later round's window skips the exchange a localCheckpoint (plan
-    * truncation to a partitioning-blind RDD scan) forces back in;
-    * `false` is the prior checkpoint chain. */
-  private[graft] def bpeTrainRunWith(s: SparkSession, dir: String,
-                                     viaPersist: Boolean)
-      : (DataFrame, Seq[(Int, String, String, Long, Long)]) = {
-    def mat(df: DataFrame): DataFrame =
-      if (viaPersist)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df.localCheckpoint()
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    var toks = mat(documents(s, dir).select(col("doc_id"),
-      posexplode(TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w"))))
-    // n_applied is read off TOKEN-COUNT CONSERVATION instead of a
-    // second pass: every merged occurrence (one `m` row) fuses
-    // exactly two tokens into one — the island-parity decision never
-    // marks adjacent positions, so consumed rows are distinct and
-    // tokens_removed = count(m) = n_applied. The former
-    // `staged.filter(m).count()` re-ran the whole stageMerge window
-    // chain (exchange + sort + three window passes) once for the
-    // count and AGAIN for the materialization; counting the
-    // materialized frames is a cached-partition scan instead.
-    var nToks = toks.count()
-    val merges = Seq.newBuilder[(Int, String, String, Long, Long)]
-    for (round <- 1 to BpeTrainRounds) {
-      val best = toks.withColumn("w1", lead(col("w"), 1).over(w))
-        .filter(col("w1").isNotNull)
-        .groupBy(col("w"), col("w1")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("w"), col("w1")).limit(1)
-        .collect()(0)
-      val (l, r, n) = (best.getString(0), best.getString(1), best.getLong(2))
-      val prev = toks
-      toks = mat(applyMerge(stageMerge(toks, l, r), r))
-      val nAfter = toks.count()
-      // round k's cache is materialized; round k-1's can go (the
-      // persist chain would otherwise hold BpeTrainRounds copies)
-      if (viaPersist) { prev.unpersist(); () }
-      merges += ((round, l, r, n, nToks - nAfter))
-      nToks = nAfter
-    }
-    (toks, merges.result())
   }
 
   /** Root for the materialized ENCODED corpus (doc_id, pos, w) after
@@ -788,36 +730,6 @@ object CorpusClean {
         sum(col("na")).as("tokens_after"))
       .withColumn("compression",
         pround(col("tokens_after").cast("double") / col("tokens_before"), 4))
-  }
-
-  /** The greedy-scan merge DECISION for pair (l, r) on a token frame
-    * (doc_id, pos, w): adds `m` = "this position starts a merged
-    * occurrence" via the island-parity trick (see [[bpeTrain]]).
-    * Exposed for the ScalaCheck property spec, which pits it against
-    * a plain sequential greedy scanner on adversarial runs. */
-  private[graft] def stageMerge(toks: DataFrame, l: String, r: String): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    toks
-      .withColumn("flag", coalesce(lead(col("w"), 1).over(w) === lit(r), lit(false))
-        && col("w") === lit(l))
-      .withColumn("istart", col("flag") &&
-        !coalesce(lag(col("flag"), 1).over(w), lit(false)))
-      .withColumn("ispos", max(when(col("istart"), col("pos")))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("m", col("flag") && (col("pos") - col("ispos")) % 2 === 0)
-  }
-
-  /** Rebuild the token sequence after [[stageMerge]]: drop positions
-    * consumed by the previous position's merge, fuse merged tokens,
-    * re-index densely. */
-  private[graft] def applyMerge(staged: DataFrame, r: String): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    staged
-      .withColumn("consumed", coalesce(lag(col("m"), 1).over(w), lit(false)))
-      .filter(!col("consumed"))
-      .select(col("doc_id"),
-        row_number().over(w).as("pos"),
-        when(col("m"), concat(col("w"), lit("_"), lit(r))).otherwise(col("w")).as("w"))
   }
 
   /** The shared CTE chain (t0 = raw tokens … t{N} = tokens after N
@@ -1077,14 +989,10 @@ object CorpusClean {
     * language — at 100 TB the per-lang rank is the standard
     * distributed-sort-by-key, never a global single-partition
     * window) + a ≤ langs×3 aggregate. */
-  def ccnetBuckets(s: SparkSession, dir: String): DataFrame =
-    ccnetBucketsWith(s, dir, artifact = true)
-
-  private[graft] def ccnetBucketsWith(s: SparkSession, dir: String,
-                                      artifact: Boolean): DataFrame = {
+  def ccnetBuckets(s: SparkSession, dir: String): DataFrame = {
     val meta = documents(s, dir).select(col("doc_id"), col("lang"),
       TextFns.wsTokenCount(col("text")).cast("long").as("toks"))
-    val scored = meta.join(lmScoresWith(s, dir, artifact), Seq("doc_id"), "left_outer")
+    val scored = meta.join(lmScoresArtifact(s, dir), Seq("doc_id"), "left_outer")
       .withColumn("fq", coalesce(
         expr(s"(sum_q * 1000) div (n_bigrams * ${LmScale}L)"), lit(0L)))
     val w = Window.partitionBy(col("lang"))

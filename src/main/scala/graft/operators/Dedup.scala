@@ -26,99 +26,22 @@ object Dedup {
     * it exists to bound per-key fanout at 100 TB. */
   val DfCap = 1000
 
-  /** Distinct 3-gram shingles as (doc_id, gram) POSTINGS, built
-    * MAP-SIDE from each document's token array: nested zip_with over
-    * three shifted slices, so shingling stays whole-stage codegen
-    * with NO doc-keyed exchange — adjacency is a local array
-    * property, not a cross-row one. Docs under 3 tokens contribute
-    * their whole text as one gram (same fallback as
-    * [[graft.functions.HashFns.shingles]] and the oracle).
-    *
-    * Measured against the r8-r9 window-lead form
-    * ([[rawGramPostsWin]]) through the full C2 pipeline in one
-    * alternating [[graft.ABProbe]] session at sf0.1 (r10): warm
-    * median 3.12 vs 3.19 s, warm min 2.91 vs 3.09, first pass 5.4
-    * vs 11.3 s — the array form wins on every mark and removes the
-    * window's doc-keyed sort exchange, which only grows with
-    * corpus size. (The earlier "interpreted array lambda measured
-    * ~4×" note predates zip_with's codegen'd slice form.) */
   /** Per-doc DISTINCT 3-gram postings — the gram-dedup family's
-    * shared input. Shipped form is one [[graft.plans.TokenGrams]]
-    * kernel pass: the kernel dedups map-side (keep-first, exactly
-    * what dropDuplicates(doc_id, gram) kept), so the zip form's
-    * distinct EXCHANGE disappears along with its interpreted
-    * nested-lambda gram build. [[rawGramPostsZip]]/[[rawGramPostsWin]]
-    * stay as probe twins ([[graft.ABProbe]] `gram`); all three emit
-    * the same (doc_id, gram) set (whole-doc gram under 3 tokens,
-    * "" for an empty doc). */
+    * shared input, one [[graft.plans.TokenGrams]] kernel pass: the
+    * kernel dedups map-side (keep-first), so no distinct exchange and
+    * no interpreted gram build. The map-side zip_with chain and the
+    * r8-r9 window-lead build it replaced lost their ABProbe `gram`
+    * A/Bs (OPTIMIZATION_r14.md row 8; SURVEY.md §4). Whole-doc gram
+    * under 3 tokens, "" for an empty doc. */
   private def rawGramPosts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       explode(graft.functions.HashFns.shingles(col("text"))).as("gram"))
-
-  /** A/B probe twin: the r10-r13 shipped map-side zip_with build +
-    * dropDuplicates (interpreted lambdas; the distinct pays an
-    * exchange). */
-  private[graft] def rawGramPostsZip(docs: DataFrame): DataFrame = {
-    val ts = col("ts")
-    val g3 = zip_with(
-      zip_with(slice(ts, lit(1), size(ts) - 2), slice(ts, lit(2), size(ts) - 2),
-        (a, b) => concat(a, lit(" "), b)),
-      slice(ts, lit(3), size(ts) - 2),
-      (ab, c) => concat(ab, lit(" "), c))
-    docs
-      .select(col("doc_id"), graft.functions.TextFns.wsTokens(lower(col("text"))).as("ts"))
-      .select(col("doc_id"),
-        explode(when(size(ts) < 3, array(array_join(ts, " "))).otherwise(g3)).as("gram"))
-      .dropDuplicates("doc_id", "gram")
-  }
-
-  /** A/B probe variant of [[rawGramPosts]]: the r8-r9 window-lead
-    * build (posexplode + lead over a doc-keyed window). Kept as a
-    * probe hook so the window-vs-array choice stays re-measurable
-    * in one session ([[graft.ABProbe]]); the shipped form is the
-    * measured winner (see [[rawGramPosts]]). */
-  private[graft] def rawGramPostsWin(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      posexplode(graft.functions.TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
-    val long3 = toks
-      .withColumn("w1", lead(col("w"), 1).over(w))
-      .withColumn("w2", lead(col("w"), 2).over(w))
-      .filter(col("w2").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("w"), col("w1"), col("w2")).as("gram"))
-    val short = docs
-      .filter(size(graft.functions.TextFns.wsTokens(lower(col("text")))) < 3)
-      .select(col("doc_id"),
-        concat_ws(" ", graft.functions.TextFns.wsTokens(lower(col("text")))).as("gram"))
-    long3.unionByName(short).dropDuplicates("doc_id", "gram")
-  }
 
   /** The un-checkpointed C2 pipeline for plan probing (the
     * ngramNoveltyFrame convention — [[dedupMinhashLsh]]'s
     * localCheckpoint hides the executed plan). */
   private[graft] def minhashLshFrame(s: SparkSession, dir: String): DataFrame =
     lshPairs(gramPosts(s, dir))
-
-  /** A/B probe twin of [[dedupMinhashLsh]] over any gram build:
-    * "ker" (shipped kernel), "zip" (map-side lambdas), "win"
-    * (window leads). */
-  private[graft] def dedupMinhashLshProbe(s: SparkSession, dir: String,
-                                          form: String): DataFrame = {
-    val raw = form match {
-      case "ker" => rawGramPosts(documents(s, dir))
-      case "zip" => rawGramPostsZip(documents(s, dir))
-      case _ => rawGramPostsWin(documents(s, dir))
-    }
-    val lowDf = raw.groupBy(col("gram"))
-      .agg(count(lit(1)).as("df")).filter(col("df") <= DfCap)
-      .select(col("gram"))
-    val gp = raw.join(lowDf, "gram").select(col("doc_id"), col("gram"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = lshPairs(gp).localCheckpoint()
-    gp.unpersist()
-    out
-  }
 
   private def gramPosts(s: SparkSession, dir: String): DataFrame = {
     val posts = rawGramPosts(documents(s, dir))
@@ -1108,18 +1031,11 @@ object Dedup {
     * token hash, so this is fully oracle-replayable too (was
     * rows-only under the two xxhash64 lanes); recall vs planted
     * near-dups stays spec-checked like C3's. */
-  def dedupSimhashWide(s: SparkSession, dir: String): DataFrame =
-    dedupSimhashWideWith(s, dir, kernel = true)
-
-  /** ABProbe `simhash` twin: `kernel` picks the SimhashAgg buffer
-    * aggregate vs the 128-scalar-aggregate sketch plan. */
-  private[graft] def dedupSimhashWideWith(s: SparkSession, dir: String,
-                                          kernel: Boolean): DataFrame = {
+  def dedupSimhashWide(s: SparkSession, dir: String): DataFrame = {
     val toks = documents(s, dir).select(col("doc_id"),
         explode(graft.functions.TextFns.wsTokens(lower(col("text")))).as("t"))
       .select(col("doc_id"), strHash(col("t")).as("h"))
-    val sigs = graft.functions.HashFns.simhashBandsAggPortableWith(
-        toks, "doc_id", "h", 128, 8, kernel)
+    val sigs = simhashBandsAggPortable(toks, "doc_id", "h", 128, 8)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = sigs.select(col("doc_id"), col("sb"), posexplode(col("sb")))
       .toDF("doc_id", "sb", "idx", "v")
@@ -1200,9 +1116,9 @@ object Dedup {
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     dedupClustersOn(s, dir, lshPairsArtifact(s, dir), LocalClusterEdges)
 
-  /** Probe twin ([[graft.ABProbe]] `cluart`): the C2 pair sweep
-    * recomputed in-query (what the default path cost before sharing
-    * [[lshPairsArtifact]] with dedup_minhash_lsh). */
+  /** dedup_clusters over a fresh in-query C2 pair sweep, with the
+    * local/distributed finish chosen by `localLimit` (DedupSpec drives
+    * the distributed rounds with 0). */
   private[graft] def dedupClustersImpl(s: SparkSession, dir: String,
                                        localLimit: Long): DataFrame = {
     val gp = gramPosts(s, dir)
@@ -1822,26 +1738,12 @@ object Dedup {
     * shuffle is the (hash)-keyed combining aggregate over 16-byte
     * keys + counters — payloads never shuffle, exactly the mm_dedup
     * posture at chunk granularity. */
-  def cdcChunks(s: SparkSession, dir: String): DataFrame =
-    cdcChunksProbe(s, dir, hof = false)
-
-  /** A/B probe twin: `hof = true` is the original per-position
-    * HOF-filter boundary scan (CodegenFallback, one w-char substring
-    * allocation + char fold per position); `hof = false` is the
-    * shipped codegen'd [[graft.plans.CdcBoundaries]] prefix-hash
-    * kernel — bit-identical (KernelPropertySpec + the row-identity
-    * spec), measured via [[graft.ABProbe]] — see SURVEY §4. */
-  private[graft] def cdcChunksProbe(s: SparkSession, dir: String,
-                                    hof: Boolean): DataFrame = {
+  def cdcChunks(s: SparkSession, dir: String): DataFrame = {
     val t = col("t")
-    val bounds =
-      if (hof)
-        when(col("len") > CdcWin, filter(
-          sequence(lit(CdcWin.toLong), col("len") - 1),
-          i => pmod(graft.functions.HashFns.strHash(
-            t.substr((i - CdcWin + 1).cast("int"), lit(CdcWin))), lit(CdcMask)) === 0))
-          .otherwise(array().cast("array<long>"))
-      else call_function("cdc_boundaries", t, lit(CdcWin.toLong), lit(CdcMask))
+    // the codegen'd [[graft.plans.CdcBoundaries]] prefix-hash kernel:
+    // bit-identical to the per-position HOF-filter scan (DedupSpec's
+    // oracle), without its substring allocation per position
+    val bounds = call_function("cdc_boundaries", t, lit(CdcWin.toLong), lit(CdcMask))
     val chunks = documents(s, dir)
       .select(col("doc_id"), col("text").as("t"),
         length(col("text")).cast("long").as("len"))

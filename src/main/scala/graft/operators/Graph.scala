@@ -1047,32 +1047,16 @@ object Graph {
     * last sweep) so callers can report the final move count. */
   private def gainSweeps(adj: DataFrame, deg: DataFrame, mF: DataFrame,
                          start: DataFrame, rounds: Int)
-      : (DataFrame, DataFrame) =
-    gainSweepsWith(adj, deg, mF, start, rounds, viaPersist = false)
-
-  /** Round-boundary A/B ([[graft.ABProbe]] `gains`/`gainslv`):
-    * `viaPersist = true` was the bpe_train-precedent hypothesis —
-    * keep the argmax aggregate's hashpartitioning(n) across rounds
-    * and skip the per-round eager checkpoint job. MEASURED WORSE
-    * here, by a lot (r13-opt, sf0.1, 6 alternating rounds, warm med:
-    * louvain_move 1.39 s ckpt vs 5.26 s persist; leiden_refine
-    * 2.10 vs 4.34): unlike bpe's rounds (one consumer per round,
-    * an eager argmax collect forcing each cache in turn), each
-    * sweep here reads the label frame THREE times (neighbor counts,
-    * community totals, stay-score join) — concurrent scans of a
-    * still-unmaterialized lazily-cached frame duplicate its compute
-    * instead of sharing it, and the duplication compounds across
-    * rounds. The eager localCheckpoint materializes once per round
-    * by construction; it stays the shipped form. */
-  private[graft] def gainSweepsWith(adj: DataFrame, deg: DataFrame,
-                                    mF: DataFrame, start: DataFrame,
-                                    rounds: Int, viaPersist: Boolean)
       : (DataFrame, DataFrame) = {
-    def pin(df: DataFrame): DataFrame =
-      if (viaPersist)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df.localCheckpoint()
-    var lab = pin(start)
+    // each sweep reads the label frame THREE times (neighbor counts,
+    // community totals, stay-score join), so the round boundary is an
+    // eager localCheckpoint: it materializes once per round by
+    // construction. A lazy persist (the bpe_train precedent) MEASURED
+    // far worse — concurrent scans of a still-unmaterialized cached
+    // frame duplicate its compute, compounding across rounds (r13
+    // ABProbe `gains`/`gainslv`, sf0.1, 6 alternating rounds, warm
+    // med: louvain_move 1.39 s vs 5.26; leiden_refine 2.10 vs 4.34).
+    var lab = start.localCheckpoint()
     var labPrev = lab
     for (_ <- 1 to rounds) {
       val nbc = adj
@@ -1107,7 +1091,7 @@ object Graph {
         .select(col("n"),
           when(-col("bt.ns") > col("ss"), col("bt.c"))
             .otherwise(col("lab0")).as("lab"))
-      lab = pin(lab)
+        .localCheckpoint()
     }
     (lab, labPrev)
   }
@@ -1132,18 +1116,16 @@ object Graph {
       graft.ingest.ArtifactCache.token(dir, Seq("lineitem", "orders"),
         s"maxEdges=$MaxEdges|lvRounds=$LvRounds|v1")
 
-  /** The full local-move sweep computed FRESH — shared by the
-    * artifact builder and the `gainslv` probe twin (which must pay
-    * the sweep to measure it). Returns (n, lab, plab). */
-  private[graft] def lvLabelsFresh(s: SparkSession, dir: String,
-                                   viaPersist: Boolean = false): DataFrame = {
+  /** The full local-move sweep computed FRESH — the artifact
+    * builder. Returns (n, lab, plab). */
+  private[graft] def lvLabelsFresh(s: SparkSession, dir: String): DataFrame = {
     val edges = coEdges(s, dir).localCheckpoint()
     val adj = lpaAdj(edges)
     val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     val mF = edges.agg(count(lit(1)).as("m")) // 1-row scalar frame
-    val (lab, labPrev) = gainSweepsWith(adj, deg, mF,
-      deg.select(col("n"), col("n").as("lab")), LvRounds, viaPersist)
+    val (lab, labPrev) = gainSweeps(adj, deg, mF,
+      deg.select(col("n"), col("n").as("lab")), LvRounds)
     lab.join(labPrev.withColumnRenamed("lab", "plab"), "n")
   }
 
@@ -1161,13 +1143,8 @@ object Graph {
   def louvainMove(s: SparkSession, dir: String): DataFrame =
     louvainMoveOn(s, dir, lvLabels(s, dir))
 
-  /** Probe twin ([[graft.ABProbe]] `gainslv`): the sweep computed
-    * in-query (what the default path cost before the artifact). */
-  private[graft] def louvainMoveWith(s: SparkSession, dir: String,
-                                     viaPersist: Boolean): DataFrame =
-    louvainMoveOn(s, dir, lvLabelsFresh(s, dir, viaPersist))
-
-  private def louvainMoveOn(s: SparkSession, dir: String,
+  /** The louvain_move report over given (n, lab, plab) labels. */
+  private[graft] def louvainMoveOn(s: SparkSession, dir: String,
                             labs: DataFrame): DataFrame = {
     val edges = coEdges(s, dir).localCheckpoint()
     val adj = lpaAdj(edges)
@@ -1298,8 +1275,7 @@ object Graph {
     * exposed so the spec can plant a Louvain-pathological parent
     * (a barbell labeled as ONE community) and watch it split. */
   private[graft] def leidenRefineOn(edges: DataFrame,
-                                    par: DataFrame,
-                                    viaPersist: Boolean = false): DataFrame = {
+                                    par: DataFrame): DataFrame = {
     val adj = lpaAdj(edges)
     val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
@@ -1310,8 +1286,8 @@ object Graph {
       .filter(col("par") === col("pnb"))
       .select(col("n"), col("nb"))
       .localCheckpoint() // within-parent adjacency; joined every sweep
-    val (rlab, rlabPrev) = gainSweepsWith(adjP, deg, mF,
-      deg.select(col("n"), col("n").as("lab")), LrRounds, viaPersist)
+    val (rlab, rlabPrev) = gainSweeps(adjP, deg, mF,
+      deg.select(col("n"), col("n").as("lab")), LrRounds)
     val moved = rlab.join(rlabPrev.withColumnRenamed("lab", "plab"), "n")
       .agg(sum(when(col("lab") =!= col("plab"), 1L).otherwise(0L))
         .as("n_moved_last"))
@@ -1384,16 +1360,6 @@ object Graph {
   def leidenRefine(s: SparkSession, dir: String): DataFrame =
     leidenRefineOn(coEdges(s, dir).localCheckpoint(),
       lvLabels(s, dir).select(col("n"), col("lab").as("par")))
-
-  /** Probe twin: parent sweep computed in-query (the pre-artifact
-    * cost — what leiden_refine paid before sharing [[lvLabels]]). */
-  private[graft] def leidenRefineWith(s: SparkSession, dir: String,
-                                      viaPersist: Boolean): DataFrame = {
-    val edges = coEdges(s, dir).localCheckpoint()
-    val plab = lvLabelsFresh(s, dir, viaPersist)
-    leidenRefineOn(edges, plab.select(col("n"), col("lab").as("par"))
-      .localCheckpoint(), viaPersist)
-  }
 
   lazy val leidenRefineSql: String = {
     val lvCtes = gainSweepCtes("lv", "adj", LvRounds)

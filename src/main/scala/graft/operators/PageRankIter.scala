@@ -25,85 +25,45 @@ object PageRankIter {
   val Base = 150000L // 0.15, scaled
   val TopK = 20
 
-  def pagerankIter(s: SparkSession, dir: String): DataFrame =
-    pagerankIterProbe(s, dir, "art")
-
-  /** A/B probe forms (VERDICT-r11 item 5 — the operator predates the
-    * ABProbe/localCheckpoint era; see SURVEY §4 for the numbers):
-    *
-    *  - `"ship"`: the r4 original — out-degree rides WITH each edge
-    *    (one join per step, per-EDGE `r div deg`), and deg/nodes stay
-    *    on the raw lineage, so every step that touches `nodes`
-    *    re-derives the pairs-distinct from lineitem⨝orders.
-    *  - `"ckpt"`: same wide-edge step, but the node-sized deg frame
-    *    is localCheckpoint'd once (so nodes/r0 stop re-deriving the
-    *    corpus lineage) and each step's node-sized rank is
-    *    localCheckpoint'd (the kcore/bpe_train iterative-plan
-    *    lesson: lineage depth stays O(1), not O(iterations)).
-    *  - `"pre"`: `ckpt` plus the contribution division moved
-    *    NODE-side — `ct = r div deg` is computed on the node-sized
-    *    rank⨝deg frame (one div per NODE) and broadcast into the
-    *    edge scan, so the persisted edge table stays two narrow
-    *    string columns and the per-edge work is a hash probe + sum,
-    *    with no deg column riding on every edge.
-    *
-    *  - `"art"` (SHIPPED, r12): the `"pre"` plan fed from the shared
-    *    write-once purchase-pairs artifact
-    *    ([[Graph.purchasePairs]]) instead of re-deriving the
-    *    lineitem⨝orders distinct per run — A/B'd at sf0.1 (4
-    *    alternating rounds): warm med 1.83 vs 4.45 s, cold 3.2 vs
-    *    11.4 s; the fact-chain distinct WAS the query.
-    *
-    * All four are integer-identical by construction (deg is a
-    * per-src constant, so dividing before or after the edge join is
-    * the same `div`; the artifact holds the identical distinct
-    * rows); GraphSketchSpec row-identity-checks them. */
-  private[graft] def pagerankIterProbe(s: SparkSession, dir: String,
-                                       form: String): DataFrame = {
-    // "art" = the "pre" plan fed from the shared write-once purchase-
-    // pairs artifact (Graph.purchasePairs) instead of re-deriving the
-    // lineitem⨝orders distinct per run — identical rows by the
-    // artifact contract
-    val pre = form == "pre" || form == "art"
-    val pairs =
-      if (form == "art") Graph.purchasePairs(s, dir)
-      else lineitem(s, dir)
-        .join(orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sk"))
-        .distinct()
+  /** The contribution division runs NODE-side — `ct = r div deg` on
+    * the node-sized rank⨝deg frame (one div per NODE), broadcast into
+    * the edge scan, so the persisted edge table stays two narrow
+    * string columns and the per-edge work is a hash probe + sum. The
+    * node-sized deg frame and each step's rank are localCheckpoint'd
+    * (lineage depth stays O(1), not O(iterations)), and the edges come
+    * from the shared write-once purchase-pairs artifact
+    * ([[Graph.purchasePairs]]) instead of re-deriving the
+    * lineitem⨝orders distinct per run. r12 ABProbe at sf0.1 (4
+    * alternating rounds): warm med 1.83 vs 4.45 s for the same plan
+    * on the fact chain, cold 3.2 vs 11.4 s — the fact-chain distinct
+    * WAS the query (SURVEY.md I10). GraphSketchSpec keeps the
+    * per-edge-div and un-checkpointed forms as row-identity oracles. */
+  def pagerankIter(s: SparkSession, dir: String): DataFrame = {
+    val pairs = Graph.purchasePairs(s, dir)
     val rawEdges = pairs
       .select(concat(lit("c"), col("c")).as("src"), concat(lit("s"), col("sk")).as("dst"))
       .unionByName(pairs
         .select(concat(lit("s"), col("sk")).as("src"), concat(lit("c"), col("c")).as("dst")))
-    val degRaw = rawEdges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // node-sized (~|V| rows): pinning it once stops nodes/r0/contrib
     // from re-deriving the corpus lineage every step
-    val deg = if (form == "ship") degRaw else degRaw.localCheckpoint()
-    val edges =
-      (if (pre) rawEdges else rawEdges.join(deg, "src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val deg = rawEdges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint()
+    val edges = rawEdges
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = deg.select(col("src").as("node"))
 
     def step(rank: DataFrame): DataFrame = {
       // rank and the message sums are NODE-sized (≪ edges): broadcast
       // them so each iteration is a map-side join over the edge table
       // plus ONE dst-keyed shuffle — never a sort of the edges
-      val m =
-        if (pre) {
-          val contrib = rank.join(deg, col("node") === col("src"))
-            .select(col("src"), expr("r div deg").as("ct"))
-          edges.join(broadcast(contrib), "src")
-            .groupBy(col("dst")).agg(sum(col("ct")).as("m"))
-        } else {
-          edges
-            .join(broadcast(rank.select(col("node").as("src"), col("r"))), "src")
-            .select(col("dst"), expr("r div deg").as("ct"))
-            .groupBy(col("dst")).agg(sum(col("ct")).as("m"))
-        }
-      val next = nodes.join(broadcast(m), col("node") === col("dst"), "left_outer")
+      val contrib = rank.join(deg, col("node") === col("src"))
+        .select(col("src"), expr("r div deg").as("ct"))
+      val m = edges.join(broadcast(contrib), "src")
+        .groupBy(col("dst")).agg(sum(col("ct")).as("m"))
+      nodes.join(broadcast(m), col("node") === col("dst"), "left_outer")
         .select(col("node"),
           expr("150000L + (85 * coalesce(m, 0L)) div 100").as("r"))
-      if (form == "ship") next else next.localCheckpoint()
+        .localCheckpoint()
     }
 
     val r0 = nodes.withColumn("r", lit(RankScale))

@@ -765,7 +765,7 @@ object Sketches {
     * sketch path would REPLACE at scale.
     *
     * Slope term, pinned (r11 VERDICT item 3 — 3.42 s warm, slope 4.1
-    * mid-bench): three-SF probe (TimeQ, warm min, idle box) sf0.001
+    * mid-bench): three-SF probe (QProbe, warm min, idle box) sf0.001
     * 2.81 s / sf0.01 2.08 s / sf0.1 3.82 s over distinct (source,
     * gram) postings of 26.2k / 25.5k / 207k (the two small SFs share
     * the 500-doc documents table, and their times agree within
@@ -792,48 +792,23 @@ object Sketches {
   }
 
   /** Exact per-source-pair common-hash counts over the distinct
-    * (source, h) postings, in two A/B-able forms ([[graft.ABProbe]]
-    * `kmvx`): `grp = true` groups by h ONCE (collect the ≤|sources|
+    * (source, h) postings: group by h ONCE (collect the ≤|sources|
     * member set, fan out its ordered pairs map-side — one h-keyed
-    * aggregate, no join), `grp = false` is the prior self-join on h
-    * (shuffles the postings twice). Same result set — adjacency per
-    * hash is tiny, ≤ C(|sources|, 2) pairs per h. r10 A/B at sf0.1
-    * (5 alternating rounds): warm is a tie (grp med/min 4.22/3.91
-    * vs join 4.35/3.76) but grp's first pass is 6.4 vs 17.4 s (far
-    * lighter plan/codegen) — the grouped form ships on the
-    * structural argument: one postings shuffle instead of two, and
-    * per-key fanout bounded by the source count, never corpus
-    * size. */
-  private[graft] def exactCommon(d: DataFrame, grp: Boolean): DataFrame =
-    if (grp) {
-      val ss = col("ss")
-      d.groupBy(col("h")).agg(sort_array(collect_set(col("source"))).as("ss"))
-        .filter(size(ss) >= 2)
-        .select(explode(flatten(transform(ss, (a, i) =>
-          transform(slice(ss, i + 2, size(ss)),
-            b => struct(a.as("sa"), b.as("sb"))))))
-          .as("p"))
-        .groupBy(col("p.sa").as("sa"), col("p.sb").as("sb"))
-        .agg(count(lit(1)).as("n_common"))
-    } else {
-      d.as("x")
-        .join(d.as("y"),
-          col("x.h") === col("y.h") && col("x.source") < col("y.source"))
-        .groupBy(col("x.source"), col("y.source"))
-        .agg(count(lit(1)).as("n_common"))
-        .select(col("x.source").as("sa"), col("y.source").as("sb"),
-          col("n_common"))
-    }
-
-  /** A/B probe twin of [[kmvIntersect]] over either exact-count form. */
-  private[graft] def kmvIntersectProbe(s: SparkSession, dir: String,
-                                       grp: Boolean,
-                                       arrSu: Boolean = true): DataFrame = {
-    val d = kmvPostings(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = kmvIntersectFrameWith(d, grp, arrSu).localCheckpoint()
-    d.unpersist()
-    out
+    * aggregate, no join). Adjacency per hash is tiny, ≤ C(|sources|, 2)
+    * pairs per h. The prior self-join on h shuffled the postings
+    * twice; r10 ABProbe `kmvx` at sf0.1 tied it warm (grp med/min
+    * 4.22/3.91 vs join 4.35/3.76) and beat it on first pass (6.4 vs
+    * 17.4 s). */
+  private def exactCommon(d: DataFrame): DataFrame = {
+    val ss = col("ss")
+    d.groupBy(col("h")).agg(sort_array(collect_set(col("source"))).as("ss"))
+      .filter(size(ss) >= 2)
+      .select(explode(flatten(transform(ss, (a, i) =>
+        transform(slice(ss, i + 2, size(ss)),
+          b => struct(a.as("sa"), b.as("sb"))))))
+        .as("p"))
+      .groupBy(col("p.sa").as("sa"), col("p.sb").as("sb"))
+      .agg(count(lit(1)).as("n_common"))
   }
 
   /** Distinct (source, shingle-hash) postings for [[kmvIntersect]].
@@ -869,11 +844,7 @@ object Sketches {
     * split out so PlanSpec can assert the ObjectHashAggregate sketch
     * shape (the ngramNoveltyFrame convention — localCheckpoint above
     * truncates the executed plan). */
-  private[graft] def kmvIntersectFrame(d: DataFrame): DataFrame =
-    kmvIntersectFrameWith(d, grp = true)
-
-  private[graft] def kmvIntersectFrameWith(d: DataFrame, grp: Boolean,
-                                           arrSu: Boolean = true): DataFrame = {
+  private[graft] def kmvIntersectFrame(d: DataFrame): DataFrame = {
     // ONE combining pass over the postings yields sketch + exact
     // count per source; the 20-row result is materialized once and
     // every small-side frame (sketch rows, source list, pair matrix,
@@ -894,38 +865,21 @@ object Sketches {
     // three operators over rows this pair matrix never needed to
     // leave the broadcast side for. Pure codegen HOFs on C(S,2)
     // rows; at 100 TB the sketch algebra stays report-sized.
-    // (`arrSu = false` keeps the prior explode + shuffle + per-pair
-    // window form for the ABProbe `kmvsu` pair.)
-    val su = if (arrSu) {
-      pairs
-        .join(broadcast(agg.select(col("source").as("sa"), col("sk").as("ska"))), "sa")
-        .join(broadcast(agg.select(col("source").as("sb"), col("sk").as("skb"))), "sb")
-        .withColumn("u", slice(array_sort(array_union(col("ska"), col("skb"))), 1, K))
-        .withColumn("sk_union_n", size(col("u")).cast("long"))
-        .withColumn("theta", element_at(col("u"), size(col("u"))))
-        .withColumn("sk_both",
-          size(filter(array_intersect(col("ska"), col("skb")),
-            h => h <= col("theta"))).cast("long"))
-        .select(col("sa"), col("sb"), col("sk_union_n"), col("theta"),
-          col("sk_both"))
-    } else {
-      val skRows = agg.select(col("source"), explode(col("sk")).as("h"))
-      val u = skRows
-        .join(broadcast(pairs),
-          skRows("source") === col("sa") || skRows("source") === col("sb"))
-        .groupBy(col("sa"), col("sb"), col("h"))
-        .agg(max(when(col("source") === col("sa"), 1).otherwise(0)).as("ia"),
-          max(when(col("source") === col("sb"), 1).otherwise(0)).as("ib"))
-      val wPair = Window.partitionBy(col("sa"), col("sb")).orderBy(col("h"))
-      u.withColumn("rn", row_number().over(wPair))
-        .filter(col("rn") <= K)
-        .groupBy(col("sa"), col("sb"))
-        .agg(count(lit(1)).as("sk_union_n"), max(col("h")).as("theta"),
-          sum(when(col("ia") === 1 && col("ib") === 1, 1L).otherwise(0L))
-            .as("sk_both"))
-    }
+    // ABProbe `kmvsu` (sf0.1, abe7f9c): warm a tie with that window
+    // form (4.24 vs 4.26 s med), first pass 5.3 vs 12.1 s.
+    val su = pairs
+      .join(broadcast(agg.select(col("source").as("sa"), col("sk").as("ska"))), "sa")
+      .join(broadcast(agg.select(col("source").as("sb"), col("sk").as("skb"))), "sb")
+      .withColumn("u", slice(array_sort(array_union(col("ska"), col("skb"))), 1, K))
+      .withColumn("sk_union_n", size(col("u")).cast("long"))
+      .withColumn("theta", element_at(col("u"), size(col("u"))))
+      .withColumn("sk_both",
+        size(filter(array_intersect(col("ska"), col("skb")),
+          h => h <= col("theta"))).cast("long"))
+      .select(col("sa"), col("sb"), col("sk_union_n"), col("theta"),
+        col("sk_both"))
     val n = agg.select(col("source"), col("n"))
-    val c = exactCommon(d, grp)
+    val c = exactCommon(d)
     pairs
       .join(broadcast(n.select(col("source").as("sa"), col("n").as("n_a"))), "sa")
       .join(broadcast(n.select(col("source").as("sb"), col("n").as("n_b"))), "sb")

@@ -289,85 +289,36 @@ object TrainPrep {
   /** G11: train/test decontamination — test-split documents sharing
     * any [[NGram]]-gram span with a train-split document. 13-grams
     * are long enough that only real contamination (near-duplicate
-    * passages) collides. Shape: n-gram postings via lead windows
-    * (codegen'd), split membership from the same arithmetic hash as
+    * passages) collides. Shape: per-doc n-gram arrays built map-side,
+    * split membership from the same arithmetic hash as
     * [[sampleSplit]], one equi-join on the gram — shuffle ∝ postings,
     * never test×train. Emits (doc_id, n_shared, n_grams, ratio). */
-  def decontaminate(s: SparkSession, dir: String): DataFrame =
-    decontaminateWith(s, dir, arr = true, kernel = true)
-
-  /** The gram-extraction forms, A/B-able ([[graft.ABProbe]] `decon`,
-    * `deconk`): `arr = true` builds each doc's DISTINCT 13-grams
-    * map-side (the shingles shape generalized to [[NGram]]) — on
-    * paper 6 exchanges → 3 (no doc window, no dropDuplicates, no
-    * totals re-join). With the INTERPRETED HOF chain this MEASURED
-    * 2.5× WORSE (r13-opt, warm med: win 2.08 s vs arr 5.34 s — a
-    * nested lambda per gram, the chain inlined into both consuming
-    * subtrees); with the codegen [[graft.plans.TokenGrams]] kernel
-    * the same plan shape WINS 2.4× (r14, 6 alternating rounds, warm
-    * med: win 2.216 s vs arrk 0.925, first pass 7.2 vs 1.8) — the
-    * r13 loss was the lambda interpreter, not the shape, so the
-    * kernel-arr form is the shipped one. Gram strings and per-doc
-    * distinct sets are identical in every form (tokens[j..j+12] for
-    * j = 0..n−13, concat_ws ' '; < NGram-token docs emit nothing). */
-  private[graft] def decontaminateWith(s: SparkSession, dir: String,
-                                       arr: Boolean): DataFrame =
-    decontaminateWith(s, dir, arr, kernel = false)
-
-  /** `kernel = true` re-runs the r13-negative arr form with the gram
-    * chain swapped for the codegen [[graft.plans.TokenGrams]] kernel
-    * (ABProbe `deconk`) — the measured 2.5× map-side CPU loss was the
-    * INTERPRETED lambda chain, which the kernel removes; the
-    * whole-doc-shingle fallback the kernel carries for < NGram-token
-    * docs is masked off by the same size guard (those docs emit no
-    * grams in every form). */
-  private[graft] def decontaminateWith(s: SparkSession, dir: String,
-                                       arr: Boolean,
-                                       kernel: Boolean): DataFrame = {
+  def decontaminate(s: SparkSession, dir: String): DataFrame = {
+    // each doc's DISTINCT 13-grams built map-side by the codegen
+    // [[graft.plans.TokenGrams]] kernel (the shingles shape
+    // generalized to [[NGram]]): no doc window, no dropDuplicates, no
+    // totals re-join. r14 ABProbe `deconk` (6 alternating rounds,
+    // warm med): 0.925 s vs 2.216 for the doc-keyed lead-window form;
+    // the same shape with the interpreted HOF chain LOST 2.5× (r13
+    // `decon`: 5.34 vs 2.08 s) — the loss was the lambda interpreter,
+    // not the shape. < NGram-token docs emit no grams (the size guard
+    // masks the kernel's whole-doc fallback).
     val splitH = pmod(col("doc_id") * 2654435761L % 1000000007L, lit(100))
-    if (arr) {
-      val toksArr = TextFns.wsTokens(lower(col("text")))
-      val gs =
-        if (kernel) when(TextFns.wsTokenCount(lower(col("text"))) >= NGram,
-            graft.functions.HashFns.shingles(col("text"), NGram))
-          .otherwise(array().cast("array<string>"))
-        else when(size(toksArr) >= NGram,
-          array_distinct(transform(sequence(lit(0), size(toksArr) - NGram),
-            i => concat_ws(" ", slice(toksArr, i + 1, lit(NGram))))))
-        .otherwise(array().cast("array<string>"))
-      val docGrams = documents(s, dir)
-        .select(col("doc_id"), splitH.as("h"), gs.as("gs"))
-      val trainGrams = docGrams.filter(col("h") < 80)
-        .select(explode(col("gs")).as("gram")).distinct()
-      val test = docGrams.filter(col("h") >= 90)
-        .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
-          explode(col("gs")).as("gram"))
-      test.join(trainGrams, "gram")
-        .groupBy(col("doc_id"), col("n_grams"))
-        .agg(count(lit(1)).as("n_shared"))
-        .select(col("doc_id"), col("n_shared"), col("n_grams"),
-          pround(col("n_shared").cast("double") / col("n_grams"), 4).as("ratio"))
-    } else {
-      val toks = documents(s, dir).select(col("doc_id"), splitH.as("h"),
-        posexplode(TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w")))
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val withLeads = (1 until NGram).foldLeft(toks) { (df, i) =>
-        df.withColumn(s"w$i", lead(col("w"), i).over(w))
-      }
-      val gramCols = col("w") +: (1 until NGram).map(i => col(s"w$i"))
-      val posts = withLeads
-        .filter(col(s"w${NGram - 1}").isNotNull)
-        .select(col("doc_id"), col("h"), concat_ws(" ", gramCols: _*).as("gram"))
-        .dropDuplicates("doc_id", "gram")
-      val trainGrams = posts.filter(col("h") < 80).select(col("gram")).distinct()
-      val test = posts.filter(col("h") >= 90)
-      val nGrams = test.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-      test.join(trainGrams, "gram")
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
-        .join(nGrams, "doc_id")
-        .select(col("doc_id"), col("n_shared"), col("n_grams"),
-          pround(col("n_shared").cast("double") / col("n_grams"), 4).as("ratio"))
-    }
+    val gs = when(TextFns.wsTokenCount(lower(col("text"))) >= NGram,
+        graft.functions.HashFns.shingles(col("text"), NGram))
+      .otherwise(array().cast("array<string>"))
+    val docGrams = documents(s, dir)
+      .select(col("doc_id"), splitH.as("h"), gs.as("gs"))
+    val trainGrams = docGrams.filter(col("h") < 80)
+      .select(explode(col("gs")).as("gram")).distinct()
+    val test = docGrams.filter(col("h") >= 90)
+      .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
+        explode(col("gs")).as("gram"))
+    test.join(trainGrams, "gram")
+      .groupBy(col("doc_id"), col("n_grams"))
+      .agg(count(lit(1)).as("n_shared"))
+      .select(col("doc_id"), col("n_shared"), col("n_grams"),
+        pround(col("n_shared").cast("double") / col("n_grams"), 4).as("ratio"))
   }
 
   val decontaminateSql: String = {
@@ -1030,7 +981,7 @@ object TrainPrep {
     * only 1.68× for the 10× token step (16,245 → 27,213 — the corpus
     * is already deep in its Heaps saturation regime, which is also
     * what the operator exists to report), and the stage join is a
-    * constant ≤5×5. Three-SF probe (TimeQ, warm min, idle box):
+    * constant ≤5×5. Three-SF probe (QProbe, warm min, idle box):
     * sf0.001 1.06 s / sf0.01 1.14 s / sf0.1 3.13 s — the first two
     * share the SAME 500-doc documents table, and their times are
     * equal within noise, ruling out any term that grows without the
@@ -1038,11 +989,7 @@ object TrainPrep {
     * exactly. A further 10× drives the ratio toward the asymptotic
     * 10 of any single-scan linear operator — the healthy shape; a
     * ratio ABOVE the data growth is what would mark a defect. */
-  def saturationCurve(s: SparkSession, dir: String): DataFrame =
-    saturationCurveWith(s, dir, hof = false)
-
-  private[graft] def saturationCurveWith(s: SparkSession, dir: String,
-                                         hof: Boolean): DataFrame = {
+  def saturationCurve(s: SparkSession, dir: String): DataFrame = {
     val pct = expr(s"(doc_id % $PriP) * $PriMult % $PriP % 100")
     val bucket = when(pct < SatCuts(0), 1L).when(pct < SatCuts(1), 2L)
       .when(pct < SatCuts(2), 3L).when(pct < SatCuts(3), 4L).otherwise(5L)
@@ -1053,8 +1000,7 @@ object TrainPrep {
       .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_toks"))
     val firstB = base
       .select(col("bucket"),
-        explode(if (hof) graft.functions.HashFns.shinglesHof(col("text"))
-                else graft.functions.HashFns.shingles(col("text"))).as("gram"))
+        explode(graft.functions.HashFns.shingles(col("text"))).as("gram"))
       .groupBy(col("gram")).agg(min(col("bucket")).as("bucket"))
     val gramHist = firstB.groupBy(col("bucket"))
       .agg(count(lit(1)).as("new_grams"))
@@ -1317,17 +1263,13 @@ object TrainPrep {
     * Shape: the two per-doc scans + one doc-keyed join, ONE 16-row
     * cell aggregate; every agreement statistic derives from the
     * checkpointed cells, never from a corpus re-scan. */
-  def qualityAgreement(s: SparkSession, dir: String): DataFrame =
-    qualityAgreementWith(s, dir, artifact = true)
-
-  private[graft] def qualityAgreementWith(s: SparkSession, dir: String,
-                                          artifact: Boolean): DataFrame = {
+  def qualityAgreement(s: SparkSession, dir: String): DataFrame = {
     val q = documents(s, dir).select(col("doc_id"),
         TextFns.wsTokenCount(col("text")).cast("long").as("toks"),
         TextFns.langScore(col("text"), "en").cast("long").as("hits"))
       .withColumn("wq", expr("least(100L, (hits * 200L) div greatest(toks, 1L))"))
       .withColumn("a_bucket", expr("least(3L, wq div 8)"))
-    val lm = CorpusClean.lmScoresWith(s, dir, artifact)
+    val lm = CorpusClean.lmScoresArtifact(s, dir)
     val cells = q.join(lm, Seq("doc_id"), "left_outer")
       .withColumn("fq", coalesce(
         expr(s"(sum_q * 1000) div (n_bigrams * ${CorpusClean.LmScale}L)"), lit(0L)))
@@ -1480,77 +1422,35 @@ object TrainPrep {
     * posture, never a corpus-rows window); threshold ties keep, so
     * the kept mass is ≥ N/[[DsirKeepQuarter]] and rerun-stable.
     *
-    * Shape: gram build is map-side (the keyness zip_with slices);
+    * Shape: gram build is map-side (one kernel pass per doc);
     * rows-scale shuffles are the ≤2·[[DsirB]]-key histogram
     * aggregates (map-side combine) and one doc-keyed score sum; the
     * llr table broadcasts (≤ [[DsirB]] rows). */
-  def dsirWeights(s: SparkSession, dir: String): DataFrame =
-    dsirWeightsWith(s, dir, merged = true, gramKernel = true)
-
-  /** Both histogram forms, A/B-able ([[graft.ABProbe]] `dsirh`):
-    * `merged = true` computes raw and target bucket counts in ONE
-    * aggregate over one gram pass (ctgt as a conditional sum — the
-    * left_outer re-join + fill(0) is definitionally the same number)
-    * and localCheckpoints the ≤[[DsirB]]-row histogram so the masses
-    * and llr frames derive from it instead of re-running the
-    * tokenize+explode lineage; the unmerged form re-scanned the gram
-    * pipeline FIVE times (raw, tgt, both mass aggregates, the llr
-    * join's two legs). */
-  private[graft] def dsirWeightsWith(s: SparkSession, dir: String,
-                                     merged: Boolean): DataFrame =
-    dsirWeightsWith(s, dir, merged, gramKernel = false)
-
-  /** `gramKernel = true` ([[graft.ABProbe]] `dsirg`) builds the
-    * hashed features with [[graft.plans.TokenGramHashes]] — unigram
-    * and bigram hashes in one code-point pass each, never
-    * materializing a gram string — where the chain form tokenizes,
-    * zip_withs bigram strings through an interpreted lambda, explodes
-    * the strings and re-folds each one char-by-char. Bit-identical
-    * feature ids: token_gram_hashes IS strHash of the space-joined
-    * gram by the kernel's composition contract; the < 2-token guard
-    * masks its whole-doc fallback exactly like the zip_with guard. */
-  private[graft] def dsirWeightsWith(s: SparkSession, dir: String,
-                                     merged: Boolean,
-                                     gramKernel: Boolean): DataFrame = {
-    // tokens materialize as a COLUMN before the slice fanout —
-    // Catalyst expressions are trees, so inlining the tokenizer into
-    // each slice would re-run it per reference (the keyness lesson)
-    val ws = col("ws")
-    val feats = if (gramKernel) {
-      val t2 = lower(col("text"))
-      documents(s, dir)
-        .select(col("doc_id"), col("lang"),
-          explode(concat(
-            call_function("token_gram_hashes", t2, lit(1L)),
-            when(TextFns.wsTokenCount(t2) >= 2,
-              call_function("token_gram_hashes", t2, lit(2L)))
-              .otherwise(array().cast("array<bigint>")))).as("gh"))
-        .select(col("doc_id"), col("lang"),
-          pmod(col("gh"), lit(DsirB)).as("f"))
-    } else {
-      val grams = documents(s, dir)
-        .select(col("doc_id"), col("lang"),
-          TextFns.wsTokens(lower(col("text"))).as("ws"))
-        .select(col("doc_id"), col("lang"),
-          explode(concat(ws,
-            when(size(ws) >= 2,
-              zip_with(slice(ws, lit(1), size(ws) - 1),
-                slice(ws, lit(2), size(ws) - 1),
-                (a, b) => concat(a, lit(" "), b)))
-              .otherwise(array().cast("array<string>")))).as("g"))
-      grams.select(col("doc_id"), col("lang"),
-        pmod(graft.functions.HashFns.strHash(col("g")), lit(DsirB)).as("f"))
-    }
-    val cnt =
-      if (!merged) {
-        val raw = feats.groupBy(col("f")).agg(count(lit(1)).as("craw"))
-        val tgt = feats.filter(col("lang") === "en")
-          .groupBy(col("f")).agg(count(lit(1)).as("ctgt"))
-        raw.join(tgt, Seq("f"), "left_outer").na.fill(0L, Seq("ctgt"))
-      } else feats.groupBy(col("f"))
-        .agg(count(lit(1)).as("craw"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ctgt"))
-        .localCheckpoint() // ≤ DsirB rows; masses + llr read it
+  def dsirWeights(s: SparkSession, dir: String): DataFrame = {
+    // hashed features from [[graft.plans.TokenGramHashes]] — unigram
+    // and bigram hashes in one code-point pass each, never
+    // materializing a gram string; bit-identical to strHash of the
+    // space-joined gram by the kernel's composition contract, and the
+    // < 2-token guard masks its whole-doc fallback
+    val t2 = lower(col("text"))
+    val feats = documents(s, dir)
+      .select(col("doc_id"), col("lang"),
+        explode(concat(
+          call_function("token_gram_hashes", t2, lit(1L)),
+          when(TextFns.wsTokenCount(t2) >= 2,
+            call_function("token_gram_hashes", t2, lit(2L)))
+            .otherwise(array().cast("array<bigint>")))).as("gh"))
+      .select(col("doc_id"), col("lang"),
+        pmod(col("gh"), lit(DsirB)).as("f"))
+    // raw and target bucket counts in ONE aggregate (ctgt as a
+    // conditional sum), the ≤DsirB-row histogram checkpointed so the
+    // masses and llr frames derive from it instead of re-running the
+    // tokenize+explode lineage (the two-aggregate form re-scanned the
+    // gram pipeline five times; OPTIMIZATION_r14.md rows 3 and 10)
+    val cnt = feats.groupBy(col("f"))
+      .agg(count(lit(1)).as("craw"),
+        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ctgt"))
+      .localCheckpoint() // ≤ DsirB rows; masses + llr read it
     val masses = cnt.agg(sum(col("craw")).as("rtot"),
       sum(col("ctgt")).as("ttot")) // 1-row scalar frame
     val llr = cnt
@@ -1795,14 +1695,10 @@ object TrainPrep {
     * cum-histogram (quantile_bins posture, cells never rows); each α
     * is a 1-row broadcast threshold joined against the test lane —
     * |alphas| passes over a lane, never the corpus. */
-  def conformalGate(s: SparkSession, dir: String): DataFrame =
-    conformalGateWith(s, dir, artifact = true)
-
-  private[graft] def conformalGateWith(s: SparkSession, dir: String,
-                                       artifact: Boolean): DataFrame = {
+  def conformalGate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CorpusClean
     val scored = documents(s, dir).select(col("doc_id"))
-      .join(CorpusClean.lmScoresWith(s, dir, artifact), Seq("doc_id"), "left_outer")
+      .join(CorpusClean.lmScoresArtifact(s, dir), Seq("doc_id"), "left_outer")
       .withColumn("fq", coalesce(
         expr(s"(sum_q * 1000) div (n_bigrams * ${CorpusClean.LmScale}L)"), lit(0L)))
       .withColumn("h", pmod(col("doc_id") * 2654435761L % 1000000007L, lit(100)))
@@ -1915,14 +1811,10 @@ object TrainPrep {
     * left join; the CDF is a ≤|distinct fq| cell frame broadcast
     * back; everything after is map-only integer algebra into a
     * ≤11-row decile aggregate — admission itself never shuffles. */
-  def paretoQualityGate(s: SparkSession, dir: String): DataFrame =
-    paretoQualityGateWith(s, dir, artifact = true)
-
-  private[graft] def paretoQualityGateWith(s: SparkSession, dir: String,
-                                           artifact: Boolean): DataFrame = {
+  def paretoQualityGate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CorpusClean
     val base = documents(s, dir).select(col("doc_id"))
-      .join(CorpusClean.lmScoresWith(s, dir, artifact), Seq("doc_id"), "left_outer")
+      .join(CorpusClean.lmScoresArtifact(s, dir), Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         coalesce(expr(

@@ -1398,30 +1398,22 @@ object Behavior {
     * ≤ 5·49-row lattice: K tiny join+agg steps, no corpus-sized
     * frame ever re-touched. */
   def markovAttribution(s: SparkSession, dir: String): DataFrame =
-    markovAttributionWith(s, dir, drv = true)
+    removalEffects(s, transitionCounts(s, dir))
 
-  /** Both absorption forms, A/B-able ([[graft.ABProbe]] `markov`):
-    * `drv = true` collects the variant-keyed transition matrix —
+  /** The removal-effect chain algebra over a prepared (src, dst, c)
+    * frame — [[markovAttribution]]'s lattice half, factored so specs
+    * can plant chains. The variant-keyed transition matrix is
     * ≤ 5·(channels+3)² rows BY CONSTRUCTION, corpus-size-free after
-    * [[transitionCounts]]'s one aggregation — and runs the
-    * [[MkSteps]] mass-propagation steps as a constant-size driver
-    * loop (the bounded-collect convention: kcenter's K-round argmax,
-    * pca_power's d² Gram). The relational form schedules 8 sequential
-    * join+aggregate stage barriers over ≤ 255-row frames — pure
-    * machinery at any scale, since nothing after the transition
-    * aggregate grows with the corpus. Arithmetic is the identical
-    * ppm-lattice integer chain (mass·c div r, non-negative longs),
-    * so rows match bit-for-bit. */
-  private[graft] def markovAttributionWith(s: SparkSession, dir: String,
-                                           drv: Boolean): DataFrame =
-    if (drv) removalEffectsLocal(s, transitionCounts(s, dir))
-    else removalEffects(s, transitionCounts(s, dir))
-
-  /** Driver-side twin of [[removalEffects]] over the SAME prepared
-    * (src, dst, c) frame: builds the redirected variants, runs the
-    * [[MkSteps]] chain steps locally, returns the 4-row report. */
-  private[graft] def removalEffectsLocal(s: SparkSession,
-                                         trans: DataFrame): DataFrame = {
+    * [[transitionCounts]]'s one aggregation, so it is collected and
+    * the [[MkSteps]] mass-propagation steps run as a constant-size
+    * driver loop (the bounded-collect convention: kcenter's K-round
+    * argmax, pca_power's d² Gram). The relational form (BehaviorSpec's
+    * oracle) scheduled 8 sequential join+aggregate stage barriers over
+    * ≤ 255-row frames — pure machinery at any scale. Arithmetic is the
+    * identical ppm-lattice integer chain (mass·c div r, non-negative
+    * longs), so rows match bit-for-bit. Returns the 4-row report. */
+  private[graft] def removalEffects(s: SparkSession,
+                                    trans: DataFrame): DataFrame = {
     import s.implicits._
     val base = trans.collect()
       .map(r => (r.getAs[String]("src"), r.getAs[String]("dst"),
@@ -1512,60 +1504,6 @@ object Behavior {
       .unionByName(terminal)
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("c"))
       .localCheckpoint() // ≤ 7² rows — the corpus collapses here
-  }
-
-  /** The removal-effect chain algebra over a prepared (src, dst, c)
-    * frame — [[markovAttribution]]'s lattice half, factored so
-    * specs can plant chains. */
-  private[graft] def removalEffects(s: SparkSession, trans: DataFrame): DataFrame = {
-    import s.implicits._
-    val variants = ("full" +: ShapChannels.map(_._1)).toDF("variant")
-    val redirected = variants.crossJoin(broadcast(trans))
-      .where(col("variant") === "full" || col("src") =!= col("variant"))
-      .select(col("variant"), col("src"),
-        when(col("variant") =!= "full" && col("dst") === col("variant"),
-          lit("NULL")).otherwise(col("dst")).as("dst"),
-        col("c"))
-      .groupBy(col("variant"), col("src"), col("dst"))
-      .agg(sum(col("c")).as("c"))
-    val selfLoops = variants.crossJoin(broadcast(
-      Seq(("CONV", "CONV", 1L), ("NULL", "NULL", 1L)).toDF("src", "dst", "c")))
-    val p = redirected.unionByName(selfLoops.select(col("variant"),
-        col("src"), col("dst"), col("c")))
-      .withColumn("r", sum(col("c")).over(
-        Window.partitionBy(col("variant"), col("src"))))
-      .localCheckpoint() // ≤ 5·51 rows; read every step
-    def step(v: DataFrame): DataFrame =
-      v.join(p.select(col("variant").as("pv"), col("src"), col("dst"),
-          col("c"), col("r")),
-        col("variant") === col("pv") && col("state") === col("src"))
-        .groupBy(col("variant"), col("dst"))
-        .agg(sum(expr("mass * c div r")).as("mass"))
-        .select(col("variant"), col("dst").as("state"), col("mass"))
-    val v0 = variants.select(col("variant"), lit("START").as("state"),
-      lit(1000000L).as("mass"))
-    val vK = (1 to MkSteps).foldLeft(v0)((v, _) => step(v))
-    // LEFT join from variants: a removal that makes CONV unreachable
-    // produces NO CONV mass row — exactly the most decisive channels
-    // — and must read p = 0, not vanish from the result
-    val pConv = variants.join(vK.where(col("state") === "CONV")
-        .select(col("variant").as("kv"), col("mass")),
-        col("variant") === col("kv"), "left_outer")
-      .select(col("variant"), coalesce(col("mass"), lit(0L)).as("p_ppm"))
-    val full = pConv.where(col("variant") === "full")
-      .select(col("p_ppm").as("p_full_ppm"))
-    val removals = pConv.where(col("variant") =!= "full")
-      .crossJoin(broadcast(full))
-      .select(col("variant").as("channel"), col("p_full_ppm"),
-        col("p_ppm").as("p_removed_ppm"),
-        (col("p_full_ppm") - col("p_ppm")).as("removal_ppm"))
-      .localCheckpoint() // 4 rows; read twice for the share rollup
-    val totRem = removals.agg(sum(col("removal_ppm")).as("tot_rem"))
-    removals.crossJoin(broadcast(totRem))
-      .select(col("channel"), col("p_full_ppm"), col("p_removed_ppm"),
-        col("removal_ppm"),
-        when(col("tot_rem") === 0L, lit(0L))
-          .otherwise(expr("removal_ppm * 1000 div tot_rem")).as("share_pm"))
   }
 
   lazy val markovAttributionSql: String = {

@@ -164,7 +164,7 @@ object JdbcUpsertSink {
           execBatches(conn, sql, rows, order, batchSize)
           conn.commit()
         } catch {
-          case e: Throwable => conn.rollback(); throw e
+          case e: Throwable => rollbackAndRethrow(conn, e)
         } finally conn.close()
       }
     }
@@ -224,10 +224,19 @@ object JdbcUpsertSink {
               conn.commit()
           }
         } catch {
-          case e: Throwable => conn.rollback(); throw e
+          case e: Throwable => rollbackAndRethrow(conn, e)
         } finally conn.close()
       }
     }
+  }
+
+  /** Roll back after failure `e` and rethrow `e`. A rollback that
+    * fails too (say, on a connection the failure already closed) is
+    * attached to `e` as suppressed, never thrown in its place. */
+  private def rollbackAndRethrow(conn: Connection, e: Throwable): Nothing = {
+    try conn.rollback()
+    catch { case r: Throwable => if (r ne e) e.addSuppressed(r) }
+    throw e
   }
 
   /** `bindOrder` maps statement-parameter position → row-column index

@@ -620,11 +620,10 @@ class AnnSpec extends SparkSpec {
   }
 
   test("colbert_maxsim: kernel and HOF probe forms are row-identical") {
-    def rows(hof: Boolean) =
-      graft.operators.Ann.colbertMaxsimProbe(spark, sf, hof).collect()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nb"),
         r.getAs[Int]("rnk"), r.getAs[Long]("score"))).toSet
-    assert(rows(hof = true) == rows(hof = false))
+    assert(rows(ReferenceForms.colbertMaxsimHof(spark, sf)) == rows(run("colbert_maxsim")))
   }
 
   test("label_noise_knn: per-class flag rates replay from the neighbor lists") {
@@ -751,7 +750,7 @@ class AnnSpec extends SparkSpec {
     assert(rows(spark.read.parquet(AnnOp.ensureAnnRanked(spark, sf)))
       == rows(AnnOp.annRankedFresh(spark, sf)))
     // each eval's output is identical under fresh vs artifact sources
-    val fresh = AnnOp.freshRankedOf(spark, sf, _: String)
+    val fresh = ReferenceForms.freshRankedOf(spark, sf, _: String)
     Seq[(String, org.apache.spark.sql.DataFrame)](
       "ann_recall" -> AnnOp.annRecallFrom(fresh),
       "ndcg_eval" -> AnnOp.ndcgEvalFrom(fresh),

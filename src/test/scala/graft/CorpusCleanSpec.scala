@@ -437,7 +437,7 @@ class CorpusCleanSpec extends SparkSpec {
       toks.zipWithIndex.map { case (t, p) => (id, p, t) }
     }.toDF("doc_id", "pos", "w")
     for ((l, r) <- Seq(("a", "a"), ("a", "b"), ("b", "a"))) {
-      val got = CorpusClean.applyMerge(CorpusClean.stageMerge(frame, l, r), r)
+      val got = ReferenceForms.applyMerge(ReferenceForms.stageMerge(frame, l, r), r)
         .collect().map(r0 => (r0.getLong(0), r0.getInt(1), r0.getString(2)))
         .groupBy(_._1).view
         .mapValues(_.sortBy(_._2).map(_._3).toVector).toMap
@@ -858,12 +858,12 @@ class CorpusCleanSpec extends SparkSpec {
   }
 
   test("bpe_train array-form loop emits the row-form merges and token frame, bit-for-bit") {
-    val (rowToks, rowMerges) = CorpusClean.bpeTrainRunWith(spark, sf, viaPersist = true)
-    val arrMerges = CorpusClean.bpeTrainArrReport(spark, sf)
+    val (rowToks, rowMerges) = ReferenceForms.bpeTrainRows(spark, sf)
+    val arrMerges = CorpusClean.bpeTrainReport(spark, sf)
     assert(arrMerges == rowMerges, s"arr=$arrMerges row=$rowMerges")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("pos"), r.getAs[String]("w"))).toSet
-    val (arrToks, _) = CorpusClean.bpeTrainRunArr(spark, sf)
+    val (arrToks, _) = CorpusClean.bpeTrainRun(spark, sf)
     assert(rows(arrToks) == rows(rowToks))
     rowToks.unpersist()
   }

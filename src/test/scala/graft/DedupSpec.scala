@@ -68,11 +68,9 @@ class DedupSpec extends SparkSpec {
         explode(graft.functions.TextFns.wsTokens(lower(col("text")))).as("t"))
       .select(col("doc_id"), HashFns.strHash(col("t")).as("h"))
     for ((bits, bands) <- Seq((64, 8), (128, 8))) {
-      val ker = HashFns.simhashBandsAggPortableWith(
-          toks, "doc_id", "h", bits, bands, kernel = true)
+      val ker = HashFns.simhashBandsAggPortable(toks, "doc_id", "h", bits, bands)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val scalar = HashFns.simhashBandsAggPortableWith(
-          toks, "doc_id", "h", bits, bands, kernel = false)
+      val scalar = ReferenceForms.simhashBandsScalar(toks, "doc_id", "h", bits, bands)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(ker.keySet == scalar.keySet && ker.nonEmpty)
       ker.foreach { case (id, sb) =>
@@ -84,11 +82,9 @@ class DedupSpec extends SparkSpec {
   test("portableBuckets (SignLshAgg buffer) == retired per-plane scalar form, bit-exact") {
     val e = Tables.embeddings(spark, sf)
     for ((bits, tables) <- Seq((4, 8), (8, 12))) {
-      val ker = graft.functions.VecFns.portableBucketsWith(
-          e, "vec_id", "embedding", bits, tables, kernel = true)
+      val ker = graft.functions.VecFns.portableBuckets(e, "vec_id", "embedding", bits, tables)
         .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val scalar = graft.functions.VecFns.portableBucketsWith(
-          e, "vec_id", "embedding", bits, tables, kernel = false)
+      val scalar = ReferenceForms.portableBucketsScalar(e, "vec_id", "embedding", bits, tables)
         .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
       assert(ker.keySet == scalar.keySet && ker.nonEmpty)
       ker.foreach { case (k, b) =>
@@ -699,9 +695,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("cdc_chunks: kernel and HOF probe forms are row-identical") {
-    def row(hof: Boolean) = graft.operators.Dedup.cdcChunksProbe(spark, sf, hof)
-      .collect()(0)
-    val a = row(hof = true); val b = row(hof = false)
+    val a = ReferenceForms.cdcChunksHof(spark, sf).collect()(0)
+    val b = graft.operators.Dedup.cdcChunks(spark, sf).collect()(0)
     assert((0 until a.length).forall(i => a.get(i) == b.get(i)))
   }
 }

@@ -31,10 +31,11 @@ class GraphSketchSpec extends SparkSpec {
 
   test("pagerank_iter: probe forms are row-identical (node-side div + " +
     "checkpoints change the plan, never the ranks)") {
-    val forms = Seq("ship", "ckpt", "pre", "art").map { f =>
-      f -> PageRankIter.pagerankIterProbe(spark, sf, f).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    }.toMap
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val forms = Seq("ship", "ckpt", "pre").map { f =>
+      f -> ranks(ReferenceForms.pagerankIter(spark, sf, f))
+    }.toMap + ("art" -> ranks(run("pagerank_iter")))
     assert(forms("ship").nonEmpty)
     assert(forms("ckpt") == forms("ship"), "ckpt vs ship")
     assert(forms("pre") == forms("ship"), "pre vs ship")
@@ -805,11 +806,11 @@ class GraphSketchSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("n"), r.getAs[Long]("lab"), r.getAs[Long]("plab")))
       .sortBy(_._1).toSeq
     assert(art == fresh, "artifact labels diverge from a fresh sweep")
-    // and the probe twin (fresh-sweep louvain_move) reports the same
-    // rows as the artifact-fed default path
+    // and louvain_move over a fresh sweep reports the same rows as the
+    // artifact-fed default path
     val viaArt = run("louvain_move").collect().map(_.toSeq).toSet
     val viaFresh = graft.operators.Graph
-      .louvainMoveWith(spark, sf, viaPersist = false)
+      .louvainMoveOn(spark, sf, graft.operators.Graph.lvLabelsFresh(spark, sf))
       .collect().map(_.toSeq).toSet
     assert(viaArt == viaFresh, "artifact-fed louvain_move diverges")
   }

@@ -322,7 +322,7 @@ class KernelPropertySpec extends AnyFunSuite {
 
   test("TokenGrams equals the split/slice/concat_ws/array_distinct chain " +
     "(spaces, short docs, empties, astral code points)") {
-    // the definitional chain shinglesHof computes (on pre-lowercased
+    // the definitional split/slice/concat_ws chain (on pre-lowercased
     // text): ws-tokenize, n-gram join by single spaces, keep-first
     // distinct; < n tokens collapse to one whole-doc shingle ("" for
     // an empty doc)

@@ -322,8 +322,8 @@ class PlanSpec extends SparkSpec {
 
   test("lm_score: unigram counts broadcast into the scoring join") {
     // the shipped op checkpoints its per-doc core (plan hidden);
-    // probe via barrier=false, the jaccardNeighborsFrame convention
-    val p = graft.operators.CorpusClean.lmPerDoc(spark, sf, barrier = false)
+    // probe its un-checkpointed frame, the kmvIntersectFrame convention
+    val p = graft.operators.CorpusClean.lmPerDocFrame(spark, sf)
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(p).length >= 1,
       s"unigram join is not broadcast:\n$p")

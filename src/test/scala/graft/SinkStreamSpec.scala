@@ -494,6 +494,22 @@ class SinkStreamSpec extends SparkSpec {
     assert(!log.contains("rollback") && log.contains("commit"))
   }
 
+  test("write/writeOptimistic: a failing rollback never masks the batch failure") {
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b")).toDF("uuid", "v").coalesce(1)
+    val writers = Seq[(String, () => Unit)](
+      "write" -> (() => JdbcUpsertSink.write(df, "jdbc:fake", "t", "uuid",
+        connect = RollbackFailDb.connect)),
+      "writeOptimistic" -> (() => JdbcUpsertSink.writeOptimistic(df, "jdbc:fake", "t",
+        "uuid", connect = RollbackFailDb.connect)))
+    for ((name, run) <- writers) {
+      val e = intercept[Exception](run())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.toString).mkString(" <- ")
+      assert(chain.contains("boom"), s"$name surfaced the rollback failure instead: $chain")
+    }
+  }
+
   private object Ingest {
     val JdbcBatch = graft.ingest.Ingest.JdbcBatch
     val JdbcShards = graft.ingest.Ingest.JdbcShards
@@ -632,6 +648,34 @@ object FakeDb {
           case "rollback" => log.add("rollback"); null
           case "setAutoCommit" | "close" => null
           case "toString" => "fakeconn"
+          case _ => null
+        }
+      }).asInstanceOf[java.sql.Connection]
+  }
+}
+
+/** A connection whose every executeBatch fails with "boom" and whose
+  * rollback fails as if the connection had already closed — the shape
+  * of an engine error that tears down its own session. */
+object RollbackFailDb {
+  import java.lang.reflect.{InvocationHandler, Method, Proxy}
+
+  val connect: String => java.sql.Connection = { _ =>
+    def ps(): java.sql.PreparedStatement =
+      Proxy.newProxyInstance(getClass.getClassLoader,
+        Array(classOf[java.sql.PreparedStatement]),
+        new InvocationHandler {
+          def invoke(proxy: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
+            case "executeBatch" => throw new java.sql.SQLException("boom")
+            case _ => null
+          }
+        }).asInstanceOf[java.sql.PreparedStatement]
+    Proxy.newProxyInstance(getClass.getClassLoader,
+      Array(classOf[java.sql.Connection]),
+      new InvocationHandler {
+        def invoke(proxy: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
+          case "prepareStatement" => ps()
+          case "rollback" => throw new java.sql.SQLException("No current connection.")
           case _ => null
         }
       }).asInstanceOf[java.sql.Connection]

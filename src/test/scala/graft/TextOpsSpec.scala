@@ -396,13 +396,11 @@ class TextOpsSpec extends SparkSpec {
 
   test("winnow_fingerprint: kernel, running-window and fanout forms select " +
     "identical fingerprints") {
-    import graft.queries.TextOps
-    def set(fanout: Boolean, kernel: Boolean = false) =
-      TextOps.winnowFps(spark, sf, fanout, kernel = kernel).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val shipped = set(fanout = false, kernel = true)
-    assert(shipped == set(fanout = true))
-    assert(shipped == set(fanout = false))
+    def set(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val shipped = set(graft.queries.TextOps.winnowFps(spark, sf))
+    assert(shipped == set(ReferenceForms.winnowFps(spark, sf, fanout = true)))
+    assert(shipped == set(ReferenceForms.winnowFps(spark, sf, fanout = false)))
   }
 
   test("robots_gate: longest-match beats first-match; allow wins ties; root-deny loses to /ads/ok") {
@@ -515,10 +513,8 @@ class TextOpsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("tok"),
         r.getAs[Int]("rnk"), r.getAs[Long]("rank_pm"))).toSet
-    val full = rows(graft.queries.TextOps.textrankKeywordsWith(spark, sf,
-      fused = true, stacked = true, pin = true, full = true))
-    val dist = rows(graft.queries.TextOps.textrankKeywordsWith(spark, sf,
-      fused = true, stacked = true, pin = true))
+    val full = rows(run("textrank_keywords"))
+    val dist = rows(ReferenceForms.textrankDistributed(spark, sf))
     assert(full == dist, s"full=${full.size} dist=${dist.size}")
     assert(full.nonEmpty)
   }
