@@ -11,9 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
   * }}}
   *
-  * — so a cluster user gets `vec_dot`/`bloom_agg`/`bloom_contains`
+  * — so a cluster user gets every function of the
+  * [[GraftFunctions]] table (the scalar kernels, the sketch
+  * aggregates, the bloom filter pair), with its argument contracts,
   * in SQL without calling [[GraftSession]] (which remains the
-  * programmatic path; both share [[GraftFunctions]], so the two ways
+  * programmatic path; both install the same table, so the two ways
   * in can't drift). This is the library-packaging shape Spark
   * prescribes for session extensions (functions today; the same hook
   * carries optimizer rules/strategies if an operator ever needs

@@ -367,38 +367,50 @@ object Graph {
   def jaccardNeighbors(s: SparkSession, dir: String): DataFrame = {
     val edges = coEdges(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = jaccardNeighborsFrame(edges)
+    // adjacency-sized (like the frames already cached here); both the
+    // capped wedge input and the 1-row `cut` report derive from the
+    // ranking, so without this barrier the degree broadcast + rank
+    // window would execute twice — once under the cut aggregate,
+    // once on the main path
+    val ranked = jaccardRankedFrame(edges).localCheckpoint()
+    val out = jaccardPairsFrame(edges, ranked)
       .localCheckpoint() // report-sized; release the cached edges
     edges.unpersist()
     out
   }
 
-  /** The plan of [[jaccardNeighbors]], split out so PlanSpec can
-    * assert the join shape: with `barrier = false` the ranked frame
-    * stays un-checkpointed so the rank window and cap filter remain
-    * visible below the wedge join (localCheckpoint truncates the
-    * executed plan to a Scan ExistingRDD). */
-  private[graft] def jaccardNeighborsFrame(edges: DataFrame,
-                                           barrier: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** Symmetric adjacency (n, nb) of `edges` and each node's degree. */
+  private def adjacency(edges: DataFrame): (DataFrame, DataFrame) = {
     val adj = edges.select(col("s1").as("n"), col("s2").as("nb"))
       .unionByName(edges.select(col("s2").as("n"), col("s1").as("nb")))
-    val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    // cap each wedge key's group at its top-[[JaccAdjCap]] members by
-    // (member degree DESC, member id); jaccard's denominator still
-    // uses TRUE degrees — the cap only prunes candidate generation.
-    // The rank window shuffles on nb, the SAME key as the wedge join,
-    // so the join reuses the partitioning instead of adding one.
-    // adjacency-sized (like the frames already cached here); both
-    // `capped` and the 1-row `cut` report derive from it, so without
-    // a barrier the degree broadcast + rank window would execute
-    // twice — once under the cut aggregate, once on the main path
-    val ranked0 = adj
+    (adj, adj.groupBy(col("n")).agg(count(lit(1)).as("deg")))
+  }
+
+  /** The ranked adjacency of [[jaccardNeighbors]]: each wedge key
+    * `nb`'s members `n` ranked `rk` by (member degree DESC, member
+    * id). Split from [[jaccardPairsFrame]] so the query can
+    * checkpoint it and PlanSpec can compose the two un-checkpointed
+    * (localCheckpoint truncates the executed plan to a Scan
+    * ExistingRDD). */
+  private[graft] def jaccardRankedFrame(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val (adj, deg) = adjacency(edges)
+    // the rank window shuffles on nb, the SAME key as the wedge join,
+    // so the join reuses the partitioning instead of adding one
+    adj
       .join(broadcast(deg.select(col("n").as("mn"), col("deg").as("m_deg"))),
         col("n") === col("mn"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("nb")).orderBy(col("m_deg").desc, col("n"))))
-    val ranked = if (barrier) ranked0.localCheckpoint() else ranked0
+  }
+
+  /** The wedge pairs of [[jaccardNeighbors]] over a given ranking
+    * ([[jaccardRankedFrame]] of the same `edges`). */
+  private[graft] def jaccardPairsFrame(edges: DataFrame, ranked: DataFrame): DataFrame = {
+    val (_, deg) = adjacency(edges)
+    // cap each wedge key's group at its top-[[JaccAdjCap]] members;
+    // jaccard's denominator still uses TRUE degrees — the cap only
+    // prunes candidate generation
     val capped = ranked.filter(col("rk") <= JaccAdjCap)
       .select(col("n"), col("nb"))
     // cut report: adjacency rows the cap dropped (0 until it binds)
@@ -488,7 +500,7 @@ object Graph {
 
   /** The plan of [[adamicAdar]] over a given edge list, split out so
     * the spec can pin the hub discount on a planted degree spectrum
-    * (the jaccardNeighborsFrame convention). */
+    * (the convention of the jaccard frames). */
   private[graft] def adamicAdarFrame(edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val adj = edges.select(col("s1").as("n"), col("s2").as("nb"))

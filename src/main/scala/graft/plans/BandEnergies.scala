@@ -1,15 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-frame band energies for the audio-fingerprint stub DSP, with
-  * whole-stage codegen: one code-point pass over the frame string
-  * yields ALL `bands` energies — e[b] = Σ (cp_p − 32)² over 1-based
-  * character positions p ≡ b+1 (mod bands).
+/** Per-frame band energies for the audio-fingerprint stub DSP,
+  * called from whole-stage codegen: one code-point pass over the
+  * frame string yields ALL `bands` energies — e[b] = Σ (cp_p − 32)²
+  * over 1-based character positions p ≡ b+1 (mod bands).
   *
   * The pure-`functions._` form this replaces ran one interpreted
   * `aggregate(sequence(b+1, len, bands), …)` HOF PER BAND — `bands`
@@ -21,61 +18,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * the per-band position arithmetic exactly; frames shorter than a
   * band's first position contribute 0 to it, like the empty fold.
   *
-  * Registered as the SQL function `band_energies(str, bands)` by
-  * GraftSession/GraftExtensions; `bands` must be a positive literal
+  * Registered as `band_energies(str, bands)` by the
+  * [[graft.GraftFunctions]] table; `bands` must be a positive literal
   * (it fixes the result width at plan time).
   */
-case class BandEnergies(child: Expression, bands: Int)
-    extends UnaryExpression {
-
-  require(bands > 0, s"band_energies needs bands > 0, got $bands")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"band_energies expects string, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "band_energies"
-
-  override def nullSafeEval(str: Any): Any =
-    new GenericArrayData(
-      BandEnergies.compute(str.asInstanceOf[UTF8String].toString, bands))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val s = ctx.freshName("s")
-      val e = ctx.freshName("e")
-      val i = ctx.freshName("i")
-      val idx = ctx.freshName("idx")
-      val cp = ctx.freshName("cp")
-      val d = ctx.freshName("d")
-      s"""
-         |String $s = $t.toString();
-         |long[] $e = new long[$bands];
-         |int $i = 0;
-         |int $idx = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  long $d = (long) $cp - 32L;
-         |  $e[$idx % $bands] += $d * $d;
-         |  $idx++;
-         |  $i += Character.charCount($cp);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($e);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BandEnergies =
-    copy(child = newChild)
-}
-
 object BandEnergies {
-  /** Shared by the interpreted path and tests. */
-  def compute(s: String, bands: Int): Array[Long] = {
+  def compute(u: UTF8String, bands: Int): ArrayData = {
+    val s = u.toString
     val e = new Array[Long](bands)
     var i = 0
     var idx = 0
@@ -86,6 +35,6 @@ object BandEnergies {
       idx += 1
       i += Character.charCount(cp)
     }
-    e
+    new GenericArrayData(e)
   }
 }

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Adjacent token pairs of an array in ONE pass:
@@ -14,37 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * round; on the array-per-doc frame the pairs are a map-side
   * projection). Arrays under 2 elements yield an empty array, like
   * the lead-null filter. */
-case class TokPairs(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == ArrayType(StringType, containsNull = true) ||
-        child.dataType == ArrayType(StringType, containsNull = false))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"tok_pairs expects array<string>, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("w", StringType, nullable = false),
-      StructField("w1", StringType, nullable = false))),
-    containsNull = false)
-
-  override def prettyName: String = "tok_pairs"
-
-  override def nullSafeEval(arr: Any): Any =
-    TokPairs.compute(arr.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.TokPairs.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokPairs =
-    copy(child = newChild)
-}
-
 object TokPairs {
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n < 2) return new GenericArrayData(new Array[AnyRef](0))
@@ -68,41 +36,7 @@ object TokPairs {
   * (stageMerge/applyMerge) is ScalaCheck-pinned against, now AS the
   * executable form on the array-per-doc frame (no lag/lead windows,
   * no re-index window, no exchange). */
-case class BpeMerge(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val arrOk = first.dataType == ArrayType(StringType, containsNull = true) ||
-      first.dataType == ArrayType(StringType, containsNull = false)
-    if (arrOk && second.dataType == StringType && third.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"bpe_merge expects (array<string>, string, string), got " +
-        s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-        s"${third.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "bpe_merge"
-
-  override def nullSafeEval(arr: Any, l: Any, r: Any): Any =
-    BpeMerge.compute(arr.asInstanceOf[ArrayData],
-      l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, l, r) =>
-      s"${ev.value} = graft.plans.BpeMerge.compute($a, $l, $r);")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): BpeMerge =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object BpeMerge {
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(arr: ArrayData, l: UTF8String, r: UTF8String): ArrayData = {
     val n = arr.numElements()
     val fused = UTF8String.fromString(l.toString + "_" + r.toString)

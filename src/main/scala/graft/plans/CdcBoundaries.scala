@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined-chunking boundary positions in one pass:
@@ -15,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * column form it replaces (substring counts code points in both
   * Spark and DuckDB, so positions agree across engines).
   *
-  * Why a native Expression: the HOF filter is CodegenFallback and its
+  * Why a kernel: the HOF filter is CodegenFallback and its
   * predicate allocates a w-char substring per position before
   * char-folding it — O(len·w) work plus len allocations per payload.
   * This kernel folds the text ONCE into prefix hashes H[i] and powers
@@ -23,43 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `hash(cp[a..b)) = (H[b] − H[a]·31^{b−a}) mod P` — O(len) total,
   * no allocation beyond the output array.
   */
-case class CdcBoundaries(first: Expression, second: Expression,
-                         third: Expression) extends TernaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = first.dataType == StringType &&
-      second.dataType == LongType && third.dataType == LongType
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"cdc_boundaries expects (string, bigint, bigint), got " +
-        s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-        s"${third.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "cdc_boundaries"
-
-  override def nullSafeEval(t: Any, w: Any, m: Any): Any =
-    CdcBoundaries.compute(t.asInstanceOf[UTF8String],
-      w.asInstanceOf[Long].toInt, m.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, w, m) =>
-      s"${ev.value} = graft.plans.CdcBoundaries.compute($t, (int) $w, $m);")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): CdcBoundaries =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object CdcBoundaries {
   val P = 1000000007L
 
-  /** One-pass kernel; shared by eval and codegen. Positions count
-    * CODE POINTS (the SQL substring unit), hashing is by code point
+  /** Positions count CODE POINTS (the SQL substring unit), hashing is by code point
     * like [[StrPolyHash]]. */
   def compute(u: UTF8String, w: Int, mask: Long): ArrayData = {
     val s = u.toString

@@ -1,12 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Scalar code-point kernels for the multimodal byte-DSP stubs, with
-  * whole-stage codegen — the [[BandEnergies]] playbook applied to the
+/** Scalar code-point kernels for the multimodal byte-DSP stubs,
+  * called from whole-stage codegen — the [[BandEnergies]] playbook applied to the
   * remaining interpreted per-character folds (r13 VERDICT item 3):
   *
   * - `cp_sum(str)`: Σ code points — the K140 scene_cut luma proxy.
@@ -24,47 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole), as do DuckDB `string_split`/`ascii` — so one codePointAt
   * loop reproduces the HOF arithmetic exactly, astral chars included.
   */
-case class CpSum(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"cp_sum expects string, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "cp_sum"
-
-  override def nullSafeEval(str: Any): Any =
-    CpSum.compute(str.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val s = ctx.freshName("s")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      s"""
-         |String $s = $t.toString();
-         |long $acc = 0L;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  $acc += (long) $cp;
-         |  $i += Character.charCount($cp);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CpSum =
-    copy(child = newChild)
-}
-
 object CpSum {
-  /** Shared by the interpreted path and tests. */
-  def compute(s: String): Long = {
+  def compute(u: UTF8String): Long = {
+    val s = u.toString
     var acc = 0L
     var i = 0
     while (i < s.length) {
@@ -76,60 +35,9 @@ object CpSum {
   }
 }
 
-case class LapEnergy(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"lap_energy expects string, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "lap_energy"
-
-  override def nullSafeEval(str: Any): Any =
-    LapEnergy.compute(str.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val s = ctx.freshName("s")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      s"""
-         |String $s = $t.toString();
-         |long $acc = 0L;
-         |int $i = 0;
-         |int $n = 0;      // code points consumed
-         |long $a = 0L;    // cp[k-2]
-         |long $b = 0L;    // cp[k-1]
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  if ($n >= 2) {
-         |    long $d = $a - 2L * $b + (long) $cp;
-         |    $acc += $d * $d;
-         |  }
-         |  $a = $b;
-         |  $b = (long) $cp;
-         |  $n++;
-         |  $i += Character.charCount($cp);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): LapEnergy =
-    copy(child = newChild)
-}
-
 object LapEnergy {
-  /** Shared by the interpreted path and tests. */
-  def compute(s: String): Long = {
+  def compute(u: UTF8String): Long = {
+    val s = u.toString
     var acc = 0L
     var i = 0
     var n = 0

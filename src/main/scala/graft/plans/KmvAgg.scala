@@ -88,13 +88,6 @@ case class KmvAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "kmv_agg"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"kmv_agg expects bigint input, got ${child.dataType.simpleString}")
-
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvAgg =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): KmvAgg =

@@ -1,11 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Late-interaction MaxSim score in one codegen'd pass:
+/** Late-interaction MaxSim score in one pass:
   * `maxsim_score(a, b, d)` = Σ over a's d-wide sub-vectors of the
   * MAX dot product against any of b's d-wide sub-vectors — the
   * ColBERT scoring function over lattice-quantized integer arrays,
@@ -13,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `aggregate(sequence, array_max(transform(sequence, Σ element_at·element_at)))`
   * column form it replaces.
   *
-  * Why a native Expression: the nested-HOF form is CodegenFallback —
+  * Why a kernel: the nested-HOF form is CodegenFallback —
   * every one of the T² sub-vector dots walks an interpreted
   * expression tree with per-element `element_at` boxing. This kernel
   * is two primitive long-array loops (the arrays copy out ONCE via
@@ -24,44 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * folding convention); a trailing partial chunk is ignored, and two
   * empty inputs score 0.
   */
-case class MaxSimScore(first: Expression, second: Expression,
-                       third: Expression) extends TernaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = first.dataType == ArrayType(LongType, containsNull = false) ||
-      first.dataType == ArrayType(LongType, containsNull = true)
-    val ok2 = second.dataType == ArrayType(LongType, containsNull = false) ||
-      second.dataType == ArrayType(LongType, containsNull = true)
-    if (ok && ok2 && third.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"maxsim_score expects (array<bigint>, array<bigint>, bigint), got " +
-        s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-        s"${third.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "maxsim_score"
-
-  override def nullSafeEval(a: Any, b: Any, d: Any): Any =
-    MaxSimScore.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      d.asInstanceOf[Long].toInt)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, d) =>
-      s"${ev.value} = graft.plans.MaxSimScore.compute($a, $b, (int) $d);")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): MaxSimScore =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object MaxSimScore {
 
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(aData: ArrayData, bData: ArrayData, d: Int): Long = {
     val a = aData.toLongArray()
     val b = bData.toLongArray()

@@ -93,13 +93,6 @@ case class MinhashAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "minhash_agg"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"minhash_agg expects bigint input, got ${child.dataType.simpleString}")
-
   override def withNewMutableAggBufferOffset(newOffset: Int): MinhashAgg =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): MinhashAgg =

@@ -1,10 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StructField, StructType}
 
 /** Per-patch byte sums in ONE pass: `patch_sums(payload, n)` returns
   * the ascending-`k` array of `struct(k, sv, nv)` cells — exactly the
@@ -26,46 +23,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, St
   * where Spark 4's strict decode raises MALFORMED_CHARACTER_CODING;
   * absent patches (len < n) emit no cell, like the grouped form.
   *
-  * `n` must be a positive literal. Registered by
-  * GraftSession/GraftExtensions; [[PhashSketch]]'s sibling (that
+  * `n` must be a positive literal. Registered by the
+  * [[graft.GraftFunctions]] table; [[PhashSketch]]'s sibling (that
   * kernel folds its cells straight into band bits; this one returns
   * the cells, because its consumers aggregate them differently).
   */
-case class PatchSums(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n > 0, s"patch_sums needs n > 0, got $n")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"patch_sums expects binary, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("k", LongType, nullable = false),
-      StructField("sv", LongType, nullable = false),
-      StructField("nv", LongType, nullable = false))),
-    containsNull = false)
-
-  override def prettyName: String = "patch_sums"
-
-  override def nullSafeEval(payload: Any): Any =
-    PatchSums.compute(payload.asInstanceOf[Array[Byte]], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, p =>
-      s"${ev.value} = graft.plans.PatchSums.compute($p, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): PatchSums =
-    copy(child = newChild)
-}
-
 object PatchSums {
 
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(bytes: Array[Byte], n: Int): ArrayData = {
     val len = bytes.length
     val sv = new Array[Long](n)

@@ -1,11 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StructField, StructType}
 
 /** The full per-doc pHash band sketch in ONE byte pass:
   * `phash_sketch(payload, bits, band_bits)` returns
@@ -37,42 +34,11 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, St
   *    the grouped form.
   *
   * `bits` and `band_bits` must be positive literals with
-  * band_bits | bits (they fix loop widths at plan time). Registered
-  * by GraftSession/GraftExtensions.
+  * band_bits | bits and band_bits ≤ 63 (they fix loop widths at plan
+  * time). Registered by the [[graft.GraftFunctions]] table.
   */
-case class PhashSketch(child: Expression, bits: Int, bandBits: Int)
-    extends UnaryExpression {
-
-  require(bits > 0 && bandBits > 0 && bits % bandBits == 0,
-    s"phash_sketch needs bits > 0, band_bits > 0, band_bits | bits; got ($bits, $bandBits)")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"phash_sketch expects binary, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("idxs", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("sb", ArrayType(LongType, containsNull = false), nullable = false)))
-
-  override def prettyName: String = "phash_sketch"
-
-  override def nullSafeEval(payload: Any): Any =
-    PhashSketch.compute(payload.asInstanceOf[Array[Byte]], bits, bandBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, p =>
-      s"${ev.value} = graft.plans.PhashSketch.compute($p, $bits, $bandBits);")
-
-  override protected def withNewChildInternal(newChild: Expression): PhashSketch =
-    copy(child = newChild)
-}
-
 object PhashSketch {
 
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(bytes: Array[Byte], bits: Int, bandBits: Int): InternalRow = {
     val n = bytes.length
     val sv = new Array[Long](bits)

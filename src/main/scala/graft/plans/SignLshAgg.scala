@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Sign-LSH bucket values as a FIRST-CLASS aggregate — the
   * [[MinhashAgg]]/[[SimhashAgg]] treatment applied to
@@ -119,14 +119,6 @@ case class SignLshAgg(
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "signlsh_agg"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == IntegerType && right.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"signlsh_agg expects (int dim, bigint q), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
 
   override def withNewMutableAggBufferOffset(newOffset: Int): SignLshAgg =
     copy(mutableAggBufferOffset = newOffset)

@@ -112,13 +112,6 @@ case class SimhashAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "simhash_agg"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"simhash_agg expects bigint input, got ${child.dataType.simpleString}")
-
   override def withNewMutableAggBufferOffset(newOffset: Int): SimhashAgg =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): SimhashAgg =

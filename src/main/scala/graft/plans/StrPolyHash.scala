@@ -1,11 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native portable polynomial string hash with whole-stage codegen:
+/** Portable polynomial string hash:
   * `h = fold(codePoints(s), 0, (acc, c) => (acc·mult + c) mod P)`,
   * P = 1e9+7 — the [[graft.functions.HashFns.strHash]] kernel.
   *
@@ -13,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantically identical but interpreted: it materializes a
   * one-string-per-character array and runs a boxed-lambda fold per
   * token — on the simhash sketch path that's millions of tiny array
-  * allocations per scan. This compiles to a tight code-point loop
-  * with no allocation beyond the String view.
+  * allocations per scan. This is a tight code-point loop with no
+  * allocation beyond the String view.
   *
   * Semantics notes (these keep the DuckDB oracle bit-exact):
   * Java regex `split("")` segments by CODE POINT (surrogate pairs
@@ -23,57 +20,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * matches DuckDB's `string_split(t, '')` + `ascii(c)`, which are
   * also code-point based. Empty string → 0, like the empty fold.
   *
-  * Registered as the SQL function `str_poly_hash(str, mult)` by
-  * GraftSession/GraftExtensions.
+  * Registered as `str_poly_hash(str, mult)` by the
+  * [[graft.GraftFunctions]] table (`mult` a literal in [1, P)).
   */
-case class StrPolyHash(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = left.dataType == StringType && right.dataType == LongType
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"str_poly_hash expects (string, bigint), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "str_poly_hash"
-
-  override def nullSafeEval(str: Any, m: Any): Any =
-    StrPolyHash.hash(str.asInstanceOf[UTF8String].toString, m.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, m) => {
-      val s = ctx.freshName("s")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      s"""
-         |String $s = $t.toString();
-         |long $acc = 0L;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  $acc = ($acc * $m + $cp) % ${StrPolyHash.P}L;
-         |  $i += Character.charCount($cp);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): StrPolyHash =
-    copy(left = newLeft, right = newRight)
-}
-
 object StrPolyHash {
   val P = 1000000007L
 
-  /** Shared by the interpreted path and tests. */
-  def hash(s: String, mult: Long): Long = {
+  def compute(u: UTF8String, mult: Long): Long = {
+    val s = u.toString
     var acc = 0L
     var i = 0
     while (i < s.length) {

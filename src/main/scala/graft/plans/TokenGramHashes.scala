@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Positional token n-gram poly-hashes in one pass:
@@ -17,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * column chain it replaces, so swapping a consumer changes no
   * oracle.
   *
-  * Why a native Expression: the column chain materializes every
+  * Why a kernel: the column chain materializes every
   * n-gram STRING (each token's chars copied into n gram strings)
   * before char-folding it. This kernel never builds a gram: each
   * token folds ONCE into (hash, 31^cpLen mod P), and a gram hash
@@ -31,39 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * surrogate-safe); hashing is by CODE POINT like [[StrPolyHash]].
   * Consumers pass already-lowercased text, as with the chain form.
   */
-case class TokenGramHashes(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = left.dataType == StringType && right.dataType == LongType
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"token_gram_hashes expects (string, bigint), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "token_gram_hashes"
-
-  override def nullSafeEval(str: Any, n: Any): Any =
-    TokenGramHashes.compute(str.asInstanceOf[UTF8String],
-      n.asInstanceOf[Long].toInt)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, n) =>
-      s"${ev.value} = graft.plans.TokenGramHashes.compute($t, (int) $n);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TokenGramHashes =
-    copy(left = newLeft, right = newRight)
-}
-
 object TokenGramHashes {
   val P = 1000000007L
 
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(u: UTF8String, n: Int): ArrayData = {
     val s = u.toString
     // tokenize + fold each token once into (hash, 31^cpLen mod P)

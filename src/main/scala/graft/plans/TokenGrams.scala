@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct token n-gram shingle STRINGS in one pass:
@@ -15,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * array_distinct's keep-first-occurrence order — so swapping a
   * consumer changes no oracle.
   *
-  * Why a native Expression ([[TokenGramHashes]]' sibling — that kernel
+  * Why a kernel ([[TokenGramHashes]]' sibling — that kernel
   * serves consumers who only need gram HASHES; this one serves the
   * gram-STRING consumers, ngram_novelty and saturation_curve, whose
   * joins/aggregates key on the exact gram text): the column chain runs
@@ -29,38 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * surrogate-safe). Consumers pass already-lowercased text, as with
   * the chain form.
   */
-case class TokenGrams(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = left.dataType == StringType && right.dataType == LongType
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"token_grams expects (string, bigint), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "token_grams"
-
-  override def nullSafeEval(str: Any, n: Any): Any =
-    TokenGrams.compute(str.asInstanceOf[UTF8String],
-      n.asInstanceOf[Long].toInt)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, n) =>
-      s"${ev.value} = graft.plans.TokenGrams.compute($t, (int) $n);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TokenGrams =
-    copy(left = newLeft, right = newRight)
-}
-
 object TokenGrams {
 
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(u: UTF8String, n: Int): ArrayData = {
     val s = u.toString
     // tokenize: maximal runs of non-space chars

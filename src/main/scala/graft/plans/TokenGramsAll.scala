@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** ALL token n-gram shingle strings, multiplicity kept, in one pass:
@@ -17,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokens yield an EMPTY array — exactly the row set of the chain
   * behind its `size(ts) >= n` guard (no whole-doc fallback).
   *
-  * Why a native Expression: the zip_with chain runs an interpreted
+  * Why a kernel: the zip_with chain runs an interpreted
   * lambda per gram per row — slice allocates token sub-arrays and
   * concat re-copies every token (the r14 decontaminate lesson: the
   * loss is the lambda chain, not the plan shape). One scan
@@ -27,38 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Tokenization matches `filter(split(text, " "), _ != "")`; callers
   * pass already-lowercased text, as with the chain form.
   */
-case class TokenGramsAll(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = left.dataType == StringType && right.dataType == LongType
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"token_grams_all expects (string, bigint), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "token_grams_all"
-
-  override def nullSafeEval(str: Any, n: Any): Any =
-    TokenGramsAll.compute(str.asInstanceOf[UTF8String],
-      n.asInstanceOf[Long].toInt)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, n) =>
-      s"${ev.value} = graft.plans.TokenGramsAll.compute($t, (int) $n);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TokenGramsAll =
-    copy(left = newLeft, right = newRight)
-}
-
 object TokenGramsAll {
 
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(u: UTF8String, n: Int): ArrayData = {
     val s = u.toString
     // tokenize: maximal runs of non-space chars (U+0020 is BMP, so

@@ -1,10 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The ENTIRE per-doc TextRank over a [[TrSurvPairs]] struct:
@@ -30,80 +28,50 @@ import org.apache.spark.unsafe.types.UTF8String
   * and DuckDB collation coincide. `rnk` is 1-based like the
   * row_number it replaces.
   *
+  * The node universe is the distinct `toks` plus any pair endpoint
+  * not among them, indexed alike, so the kernel is total over its
+  * struct shape; on [[TrSurvPairs]] output every endpoint is a
+  * survivor and the universe is exactly the distinct `toks`.
+  *
   * All four config args must be positive literals. */
-case class TrRank(child: Expression, rounds: Int, topK: Int,
-                  scale: Long, base: Long)
-    extends UnaryExpression {
-
-  require(rounds > 0 && topK > 0 && scale > 0 && base > 0,
-    s"tr_rank needs positive config, got ($rounds, $topK, $scale, $base)")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StructType(Array(StructField("toks", ArrayType(StringType, _), _, _),
-          StructField("pairs", ArrayType(StructType(_), _), _, _))) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"tr_rank expects the tr_surv_pairs struct, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("tok", StringType, nullable = false),
-      StructField("rnk", IntegerType, nullable = false),
-      StructField("rank_pm", LongType, nullable = false))),
-    containsNull = false)
-
-  override def prettyName: String = "tr_rank"
-
-  override def nullSafeEval(sp: Any): Any =
-    TrRank.compute(sp.asInstanceOf[InternalRow], rounds, topK, scale, base)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, sp =>
-      s"${ev.value} = graft.plans.TrRank.compute($sp, $rounds, $topK, ${scale}L, ${base}L);")
-
-  override protected def withNewChildInternal(newChild: Expression): TrRank =
-    copy(child = newChild)
-}
-
 object TrRank {
 
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(sp: InternalRow, rounds: Int, topK: Int,
               scale: Long, base: Long): GenericArrayData = {
     val toksArr = sp.getArray(0)
     val pairsArr = sp.getArray(1)
-    // node universe: distinct survivors (order irrelevant — sorted at
-    // the end); index them for dense arrays
+    // node universe: distinct survivors plus any pair endpoint not
+    // among them (order irrelevant — sorted at the end); index them
+    // for dense arrays
     val idx = new java.util.LinkedHashMap[String, Integer]()
+    def index(u: UTF8String): Int = {
+      val prev = idx.putIfAbsent(u.toString, idx.size)
+      if (prev == null) idx.size - 1 else prev.intValue()
+    }
     var i = 0
     while (i < toksArr.numElements()) {
-      idx.putIfAbsent(toksArr.getUTF8String(i).toString, idx.size)
+      index(toksArr.getUTF8String(i))
+      i += 1
+    }
+    // symmetric weighted edges: counts over pairs ∪ reversed pairs
+    val w = new java.util.HashMap[Long, Long]() // (src << 32 | dst) -> count
+    def bump(a: Int, b: Int): Unit = {
+      val k = (a.toLong << 32) | (b.toLong & 0xffffffffL)
+      w.put(k, w.getOrDefault(k, 0L) + 1L)
+      ()
+    }
+    i = 0
+    while (i < pairsArr.numElements()) {
+      val p = pairsArr.getStruct(i, 2)
+      val a = index(p.getUTF8String(0))
+      val b = index(p.getUTF8String(1))
+      bump(a, b); bump(b, a)
       i += 1
     }
     val n = idx.size
     val names = new Array[String](n)
     val it = idx.entrySet().iterator()
     while (it.hasNext) { val e = it.next(); names(e.getValue) = e.getKey }
-    // symmetric weighted edges: counts over pairs ∪ reversed pairs
-    val w = new java.util.HashMap[Long, Long]() // (src << 32 | dst) -> count
-    def bump(a: Int, b: Int): Unit = {
-      val k = (a.toLong << 32) | (b.toLong & 0xffffffffL)
-      val prev = w.get(k)
-      w.put(k, (if (prev == null) 0L else prev.longValue()) + 1L)
-      ()
-    }
-    i = 0
-    while (i < pairsArr.numElements()) {
-      val p = pairsArr.getStruct(i, 2)
-      val a = idx.get(p.getUTF8String(0).toString).intValue()
-      val b = idx.get(p.getUTF8String(1).toString).intValue()
-      bump(a, b); bump(b, a)
-      i += 1
-    }
     val wdeg = new Array[Long](n)
     val we = w.entrySet().iterator()
     while (we.hasNext) {

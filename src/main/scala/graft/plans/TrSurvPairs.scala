@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** TextRank candidate survivors AND their banded co-occurrence pairs
@@ -33,55 +31,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `min_len`/`window` must be positive literals; `stops` a string
   * literal of space-joined stopwords (fixed vocabulary — parsed once
-  * at plan time, never per row).
+  * at plan time by [[stopSet]] into an object literal, never per
+  * row).
   */
-case class TrSurvPairs(child: Expression, minLen: Int, window: Int,
-                       stops: String)
-    extends UnaryExpression {
+object TrSurvPairs {
 
-  require(minLen > 0 && window > 0,
-    s"tr_surv_pairs needs min_len > 0 and window > 0, got ($minLen, $window)")
-
-  @transient private lazy val stopSet: java.util.HashSet[String] = {
+  /** The stop vocabulary: `stops` split on spaces. */
+  def stopSet(stops: String): java.util.HashSet[String] = {
     val h = new java.util.HashSet[String]()
     stops.split(' ').foreach(w => if (w.nonEmpty) h.add(w))
     h
   }
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"tr_surv_pairs expects string, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("toks", ArrayType(StringType, containsNull = false),
-      nullable = false),
-    StructField("pairs", ArrayType(
-      StructType(Seq(
-        StructField("src", StringType, nullable = false),
-        StructField("dst", StringType, nullable = false))),
-      containsNull = false), nullable = false)))
-
-  override def prettyName: String = "tr_surv_pairs"
-
-  override def nullSafeEval(str: Any): Any =
-    TrSurvPairs.compute(str.asInstanceOf[UTF8String], minLen, window, stopSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.plans.TrSurvPairs.compute($t, $minLen, $window, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TrSurvPairs =
-    copy(child = newChild)
-}
-
-object TrSurvPairs {
-
-  /** One-pass kernel; shared by eval and codegen. */
   def compute(u: UTF8String, minLen: Int, window: Int,
               stops: java.util.HashSet[String]): GenericInternalRow = {
     val s = u.toString
@@ -112,7 +73,10 @@ object TrSurvPairs {
     val toks = new Array[AnyRef](n)
     var k = 0
     while (k < n) { toks(k) = UTF8String.fromString(tok.get(k)); k += 1 }
-    val pairs = new java.util.ArrayList[AnyRef](n * window)
+    // capacity for the usual all-distinct band, capped so a wide
+    // window cannot overflow or over-allocate it
+    val pairs = new java.util.ArrayList[AnyRef](
+      math.min(n.toLong * window, 1L << 16).toInt)
     var a = 0
     while (a < n) {
       var b = a + 1

@@ -1,50 +1,25 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native dot product over two `array<float>` columns, with
-  * whole-stage codegen.
+/** Dot product over two `array<float>` columns: `vec_dot(a, b)`.
   *
   * The pure-`functions._` form (`aggregate(zip_with(a, b, _*_), …)`)
   * is semantically identical but runs as interpreted higher-order
   * lambdas — per-element closure calls and boxed accumulators. This
-  * expression compiles to a tight primitive loop (measured ~10× on
-  * the all-pairs cosine workload), while keeping the exact same
-  * numeric result: floats promoted to double, multiplied, and
-  * accumulated left-to-right — bit-identical to the oracle's
-  * `list_dot_product(a::DOUBLE[], b::DOUBLE[])`.
+  * kernel is a tight primitive loop called from whole-stage codegen
+  * (measured ~10× on the all-pairs cosine workload), while keeping
+  * the exact same numeric result: floats promoted to double,
+  * multiplied, and accumulated left-to-right — bit-identical to the
+  * oracle's `list_dot_product(a::DOUBLE[], b::DOUBLE[])`. A null
+  * element reads as 0; extra elements of the longer array are
+  * ignored.
   *
-  * Registered as the SQL function `vec_dot` by GraftSession;
+  * Registered by the [[graft.GraftFunctions]] table;
   * [[graft.functions.VecFns.dot]] is the typed entry point.
   */
-case class VecDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  // no ExpectsInputTypes (AbstractDataType is private[sql]); inputs
-  // must already be array<float> — enforced at the call sites and
-  // checked here at analysis time
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"vec_dot expects (array<float>, array<float>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "vec_dot"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+object VecDotProduct {
+  def compute(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var sum = 0.0
     var i = 0
@@ -54,23 +29,4 @@ case class VecDotProduct(left: Expression, right: Expression)
     }
     sum
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $sum = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $sum += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VecDotProduct =
-    copy(left = newLeft, right = newRight)
 }

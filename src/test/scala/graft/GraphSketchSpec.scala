@@ -289,7 +289,8 @@ class GraphSketchSpec extends SparkSpec {
     val C = graft.operators.Graph.JaccAdjCap
     val edges = spark.createDataFrame(
       (1L to 150L).map(i => (0L, i))).toDF("s1", "s2")
-    val out = graft.operators.Graph.jaccardNeighborsFrame(edges).collect()
+    val g = graft.operators.Graph
+    val out = g.jaccardPairsFrame(edges, g.jaccardRankedFrame(edges)).collect()
     assert(out.length == graft.operators.Graph.JaccTopK)
     assert(out.forall(_.getAs[Long]("n_adj_dropped") == (150L - C)))
     // all pairs are retained-spoke pairs: common = 1 (the hub),

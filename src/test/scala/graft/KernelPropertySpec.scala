@@ -4,6 +4,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.forAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.plans.{KmvAgg, MinhashAgg, StrPolyHash}
 
 /** Property tests for the custom Catalyst kernels that back ORACLED
@@ -21,6 +24,20 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  private def u(s: String): UTF8String = UTF8String.fromString(s)
+
+  private def hash(s: String): Long = StrPolyHash.compute(u(s), 31L)
+
+  /** Interpreted eval of a table kernel call: the StaticInvoke the
+    * optimizer swaps in, evaluated by reflection. */
+  private def evalCall(name: String, args: Expression*): Any =
+    GraftFunctions.all.toMap.apply(name)(args) match {
+      case k: GraftFunctions.KernelCall => k.replacement.eval(null)
+    }
+
+  private def textLit(s: String): Literal =
+    Literal(u(s), org.apache.spark.sql.types.StringType)
+
   private val asciiString: Gen[String] =
     Gen.listOf(Gen.choose(32.toChar, 126.toChar)).map(_.mkString)
 
@@ -31,7 +48,7 @@ class KernelPropertySpec extends AnyFunSuite {
 
   test("StrPolyHash.hash equals the definitional fold on ASCII strings") {
     check(forAll(asciiString) { s =>
-      StrPolyHash.hash(s, 31L) == refFold(s, 31L)
+      hash(s) == refFold(s, 31L)
     })
   }
 
@@ -40,7 +57,7 @@ class KernelPropertySpec extends AnyFunSuite {
       Gen.listOf(Gen.frequency(
         5 -> Gen.choose(32.toChar, 126.toChar),
         1 -> Gen.choose(0x00A1.toChar, 0x2FFF.toChar))).map(_.mkString)
-    check(forAll(bmp) { s => StrPolyHash.hash(s, 31L) == refFold(s, 31L) })
+    check(forAll(bmp) { s => hash(s) == refFold(s, 31L) })
   }
 
   /** Strings over the FULL code-point range, astral plane included —
@@ -57,26 +74,21 @@ class KernelPropertySpec extends AnyFunSuite {
       .map(_.flatMap(Character.toChars(_).toSeq).mkString)
 
   test("StrPolyHash.hash handles astral code points (4-byte UTF-8) by code point") {
-    check(forAll(anyPlane) { s => StrPolyHash.hash(s, 31L) == refFold(s, 31L) })
+    check(forAll(anyPlane) { s => hash(s) == refFold(s, 31L) })
   }
 
   test("StrPolyHash expression eval (UTF8String round-trip) matches the fold on astral input") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.unsafe.types.UTF8String
     check(forAll(anyPlane) { s =>
-      // the interpreted Expression path decodes from UTF-8 bytes — the
-      // exact representation executor rows carry
-      val e = StrPolyHash(
-        Literal(UTF8String.fromString(s), org.apache.spark.sql.types.StringType),
-        Literal(31L))
-      e.eval(null).asInstanceOf[Long] == refFold(s, 31L)
+      // the interpreted path decodes from UTF-8 bytes — the exact
+      // representation executor rows carry
+      evalCall("str_poly_hash", textLit(s), Literal(31L)) == refFold(s, 31L)
     })
   }
 
   test("StrPolyHash stays within [0, P) and empty hashes to 0") {
-    assert(StrPolyHash.hash("", 31L) == 0L)
+    assert(hash("") == 0L)
     check(forAll(asciiString) { s =>
-      val h = StrPolyHash.hash(s, 31L)
+      val h = hash(s)
       h >= 0L && h < StrPolyHash.P
     })
   }
@@ -282,7 +294,7 @@ class KernelPropertySpec extends AnyFunSuite {
       }
     }
     check(forAll(gen) { case (s, bands) =>
-      graft.plans.BandEnergies.compute(s, bands).toSeq == ref(s, bands)
+      graft.plans.BandEnergies.compute(u(s), bands).toLongArray().toSeq == ref(s, bands)
     })
   }
 
@@ -297,7 +309,7 @@ class KernelPropertySpec extends AnyFunSuite {
   test("CpSum.compute equals the per-code-point ascii fold " +
     "(ASCII, spaces, astral code points)") {
     check(forAll(mediaPayload) { s =>
-      graft.plans.CpSum.compute(s) ==
+      graft.plans.CpSum.compute(u(s)) ==
         s.codePoints().toArray.map(_.toLong).sum
     })
   }
@@ -314,10 +326,10 @@ class KernelPropertySpec extends AnyFunSuite {
       }.sum
     }
     check(forAll(mediaPayload) { s =>
-      graft.plans.LapEnergy.compute(s) == ref(s)
+      graft.plans.LapEnergy.compute(u(s)) == ref(s)
     })
-    assert(graft.plans.LapEnergy.compute("") == 0L)
-    assert(graft.plans.LapEnergy.compute("ab") == 0L)
+    assert(graft.plans.LapEnergy.compute(u("")) == 0L)
+    assert(graft.plans.LapEnergy.compute(u("ab")) == 0L)
   }
 
   test("TokenGrams equals the split/slice/concat_ws/array_distinct chain " +
@@ -436,30 +448,51 @@ class KernelPropertySpec extends AnyFunSuite {
     })
   }
 
+  /** The relational rank algebra replayed directly; the node universe
+    * is the distinct toks plus any pair endpoint outside them. */
+  private def trRankRef(toks: Seq[String], pairs: Seq[(String, String)],
+                        rounds: Int, topK: Int, scale: Long,
+                        base: Long): Seq[(String, Int, Long)] = {
+    val sym = (pairs ++ pairs.map(p => (p._2, p._1)))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val wdeg = sym.toSeq.groupBy(_._1._1).view
+      .mapValues(_.map(_._2).sum).toMap
+    val nodes = (toks ++ pairs.flatMap(p => Seq(p._1, p._2))).distinct
+    var r: Map[String, Long] =
+      nodes.map(n => n -> (if (wdeg.contains(n)) scale else base)).toMap
+    for (_ <- 1 to rounds) {
+      val m = sym.toSeq.groupBy(_._1._2).view.mapValues(_.map {
+        case ((src, _), w) => w * (r(src) / wdeg(src))
+      }.sum).toMap
+      r = r.map { case (n, v) =>
+        n -> (if (wdeg.contains(n)) base + (85L * m.getOrElse(n, 0L)) / 100L
+              else v)
+      }
+    }
+    nodes.sortBy(n => (-r(n), n)).take(topK)
+      .zipWithIndex.map { case (n, i) => (n, i + 1, r(n)) }
+  }
+
+  /** TrRank.compute on a (toks, pairs) struct, as (tok, rnk, rank_pm). */
+  private def trRankOf(toks: Seq[String], pairs: Seq[(String, String)],
+                       rounds: Int, topK: Int): Seq[(String, Int, Long)] = {
+    val sp = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          toks.map(u).toArray[AnyRef]),
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          pairs.map(p =>
+            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+              Array[Any](u(p._1), u(p._2)))).toArray[AnyRef])))
+    val arr = graft.plans.TrRank.compute(sp, rounds, topK, 1000000L, 150000L)
+    (0 until arr.numElements()).map { i =>
+      val s = arr.getStruct(i, 3)
+      (s.getUTF8String(0).toString, s.getInt(1), s.getLong(2))
+    }
+  }
+
   test("TrRank equals a direct replay of the relational rank algebra " +
     "(multi-edges, ties, isolated nodes, empty docs)") {
-    import org.apache.spark.unsafe.types.UTF8String
-    def ref(toks: Seq[String], pairs: Seq[(String, String)], rounds: Int,
-            topK: Int, scale: Long, base: Long): Seq[(String, Int, Long)] = {
-      val sym = (pairs ++ pairs.map(p => (p._2, p._1)))
-        .groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val wdeg = sym.toSeq.groupBy(_._1._1).view
-        .mapValues(_.map(_._2).sum).toMap
-      val nodes = toks.distinct
-      var r: Map[String, Long] =
-        nodes.map(n => n -> (if (wdeg.contains(n)) scale else base)).toMap
-      for (_ <- 1 to rounds) {
-        val m = sym.toSeq.groupBy(_._1._2).view.mapValues(_.map {
-          case ((src, _), w) => w * (r(src) / wdeg(src))
-        }.sum).toMap
-        r = r.map { case (n, v) =>
-          n -> (if (wdeg.contains(n)) base + (85L * m.getOrElse(n, 0L)) / 100L
-                else v)
-        }
-      }
-      nodes.sortBy(n => (-r(n), n)).take(topK)
-        .zipWithIndex.map { case (n, i) => (n, i + 1, r(n)) }
-    }
     val word: Gen[String] = Gen.oneOf("aa", "bb", "cc", "dd", "ee")
     val gen = for {
       toks <- Gen.listOf(word)
@@ -472,22 +505,29 @@ class KernelPropertySpec extends AnyFunSuite {
       topK <- Gen.choose(1, 5)
     } yield (toks, pairs, rounds, topK)
     check(forAll(gen) { case (toks, pairs, rounds, topK) =>
-      val sp = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            toks.map(UTF8String.fromString).toArray[AnyRef]),
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            pairs.map(p =>
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                Array[Any](UTF8String.fromString(p._1),
-                  UTF8String.fromString(p._2)))).toArray[AnyRef])))
-      val arr = graft.plans.TrRank.compute(sp, rounds, topK, 1000000L, 150000L)
-      val got = (0 until arr.numElements()).map { i =>
-        val s = arr.getStruct(i, 3)
-        (s.getUTF8String(0).toString, s.getInt(1), s.getLong(2))
-      }
-      got == ref(toks, pairs, rounds, topK, 1000000L, 150000L)
+      trRankOf(toks, pairs, rounds, topK) ==
+        trRankRef(toks, pairs, rounds, topK, 1000000L, 150000L)
     })
+  }
+
+  test("TrRank is total: a pair endpoint outside toks is indexed like a " +
+    "token (no NPE), and the rank algebra still replays") {
+    val word: Gen[String] = Gen.oneOf("aa", "bb", "cc")
+    val foreign: Gen[String] = Gen.oneOf("xx", "yy")
+    val gen = for {
+      toks <- Gen.listOf(word)
+      pairs <- Gen.nonEmptyListOf(Gen.zip(Gen.oneOf(word, foreign),
+          Gen.oneOf(word, foreign)))
+        .map(_.filter { case (a, b) => a != b })
+      rounds <- Gen.choose(1, 3)
+      topK <- Gen.choose(1, 6)
+    } yield (toks, pairs, rounds, topK)
+    check(forAll(gen) { case (toks, pairs, rounds, topK) =>
+      trRankOf(toks, pairs, rounds, topK) ==
+        trRankRef(toks, pairs, rounds, topK, 1000000L, 150000L)
+    })
+    // the smallest foreign case: no toks at all, one pair
+    assert(trRankOf(Seq.empty, Seq("xx" -> "yy"), 1, 5).map(_._1) == Seq("xx", "yy"))
   }
 
   test("TokPairs equals sliding adjacent pairs; BpeMerge equals the " +
@@ -585,15 +625,26 @@ class KernelPropertySpec extends AnyFunSuite {
 
   test("cp_sum / lap_energy expression eval (UTF8String round-trip) " +
     "matches compute on astral input") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.unsafe.types.UTF8String
     check(forAll(mediaPayload) { s =>
-      val lit = Literal(UTF8String.fromString(s),
-        org.apache.spark.sql.types.StringType)
-      graft.plans.CpSum(lit).eval(null).asInstanceOf[Long] ==
-        graft.plans.CpSum.compute(s) &&
-      graft.plans.LapEnergy(lit).eval(null).asInstanceOf[Long] ==
-        graft.plans.LapEnergy.compute(s)
+      evalCall("cp_sum", textLit(s)) == graft.plans.CpSum.compute(u(s)) &&
+      evalCall("lap_energy", textLit(s)) == graft.plans.LapEnergy.compute(u(s))
     })
+    // and through SQL, inside whole-stage codegen and fully
+    // interpreted; the rows come from an RDD so the projection runs
+    // on executors instead of folding into a local relation
+    val spark = SharedSpark.spark
+    import spark.implicits._
+    val payloads = Gen.listOfN(100, mediaPayload).sample.get
+    SharedSpark.inBothPaths { codegen =>
+      val got = spark.sparkContext.parallelize(payloads, 2).toDF("t")
+        .selectExpr("t", "cp_sum(t)", "lap_energy(t)").collect()
+      assert(got.length == payloads.length)
+      got.foreach { r =>
+        val s = r.getString(0)
+        assert(r.getLong(1) == graft.plans.CpSum.compute(u(s)) &&
+          r.getLong(2) == graft.plans.LapEnergy.compute(u(s)),
+          s"codegen = $codegen on ${s.codePoints().toArray.mkString("[", ",", "]")}")
+      }
+    }
   }
 }

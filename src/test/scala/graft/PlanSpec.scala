@@ -377,10 +377,10 @@ class PlanSpec extends SparkSpec {
 
   test("jaccard_neighbors: wedge pairs run on the rank-capped frame, degrees broadcast") {
     // the public operator localCheckpoints (truncating the plan), so
-    // assert on the un-checkpointed frame over the same edges
-    val p = graft.operators.Graph
-      .jaccardNeighborsFrame(graft.operators.Graph.coEdges(spark, sf),
-        barrier = false)
+    // assert on the two frames composed without the checkpoint
+    val g = graft.operators.Graph
+    val edges = g.coEdges(spark, sf)
+    val p = g.jaccardPairsFrame(edges, g.jaccardRankedFrame(edges))
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(p).length >= 2, p)
     assert(!p.contains("CartesianProduct"))
