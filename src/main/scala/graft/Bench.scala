@@ -311,16 +311,23 @@ object Bench {
     * denominators). */
   val SlopeSlack = 1.5
 
+  /** Builds, outside the timed path, every write-once artifact and
+    * fixture the suite reads: each is an
+    * [[graft.ingest.ArtifactCache.Artifact]] under `target/graft_*`
+    * keyed by its source tables' token, so a call whose artifacts
+    * exist builds nothing. The bucketed tables are session-catalog
+    * state, written once per JVM. */
   private def buildFixtures(spark: SparkSession, sfDir: String): Unit = {
     operators.ScalePatterns.ensureBucketed(spark, sfDir)
-    operators.ScalePatterns.ensurePartitioned(spark, sfDir)
     operators.ScalePatterns.ensureDrift(spark, sfDir)
-    operators.ScalePatterns.compactFiles(spark, sfDir) // builds the compacted layout
+    operators.ScalePatterns.compactFiles(spark, sfDir) // builds both event layouts
     ingest.ZipFixture.ensure(spark, sfDir)
     ingest.CsvBadFixture.ensure(spark, sfDir)
     ingest.JsonlFixture.ensure(spark, sfDir)
+    ingest.OrcFixture.ensure(spark, sfDir)
     ingest.FetchFixture.ensure(spark, sfDir)
     ingest.DecisionFixture.ensure(spark, sfDir)
+    operators.Maintenance.ensureIvmView(spark, sfDir) // ivm_agg/stream_ivm read it
     operators.Dedup.ensureCorpusIndex(spark, sfDir) // dedup_incremental reads it
     operators.Dedup.ensurePairStats(spark, sfDir) // the exact-similarity family reads it
     operators.Dedup.ensureMinhashSig(spark, sfDir) // minhash_est/band_tune read it

@@ -58,12 +58,14 @@ object PlanProbe {
 
   /** Ids that differ run to run without the plan changing: expression
     * ids (`#123`), `plan_id=`, a checkpointed scan's RDD id and
-    * call-site line, lambda-variable and closure-class suffixes, and
-    * the checkout directory in artifact paths. */
+    * call-site line, lambda-variable and closure-class suffixes, the
+    * checkout directory in artifact paths, and the artifact token in
+    * `graft_<name>/<base>_<token>` (it changes with any signature). */
   def normalize(plan: String): String = Seq(
       "#\\d+" -> "#N", "plan_id=\\d+" -> "plan_id=N", "RDD\\[\\d+\\]" -> "RDD[N]",
       "\\.scala:\\d+" -> ".scala:N", "(lambda \\w+)_\\d+" -> "$1_N",
-      "\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+" -> "\\$Lambda\\$N")
+      "\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+" -> "\\$Lambda\\$N",
+      "(graft_\\w+/[^/\\s]*_)\\p{XDigit}{12}\\b" -> "$1TOKEN")
     .foldLeft(plan.replace("file:" + sys.props("user.dir") + "/", "file:./")) {
       case (p, (re, to)) => p.replaceAll(re, to)
     }

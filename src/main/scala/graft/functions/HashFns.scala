@@ -19,6 +19,10 @@ object HashFns {
   val Bands     = 16
   val RowsPerBand: Int = NumHashes / Bands
 
+  /** Token n-gram width of the dedup shingles ([[shingles]]' default);
+    * every artifact derived from shingles names it in its signature. */
+  val ShingleWidth = 3
+
   /** Fixed universal-hash coefficients h_i(x) = (a_i·x + b_i) mod P.
     * Seeded PRNG at object init → identical on every JVM. */
   private val rnd = new scala.util.Random(42)
@@ -97,7 +101,7 @@ object HashFns {
     * codegen [[graft.plans.TokenGrams]] kernel — bit-identical to the
     * split/slice/concat_ws/array_distinct chain by its ScalaCheck
     * contract, 3× faster (OPTIMIZATION_r14.md row 8). */
-  def shingles(text: Column, n: Int = 3): Column =
+  def shingles(text: Column, n: Int = ShingleWidth): Column =
     call_function("token_grams", lower(text), lit(n.toLong))
 
   /** Shingle set → non-negative hashes in [0, P). */

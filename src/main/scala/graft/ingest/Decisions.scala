@@ -2,7 +2,6 @@ package graft.ingest
 
 import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -368,37 +367,23 @@ object Decisions {
   * repartition). Every third archive is a nested zip whose member
   * uses reversed header order (the header map must realign it,
   * utils.go:167-171); the rest are plain CSV members. Built once per
-  * (sf, row-count) under target/fixtures.
+  * events table.
   */
 object DecisionFixture {
   /** Archive count — production is thousands of dailies; 12 is
     * enough that the scan stage's task count is a real claim (> the
     * 2-way split it replaced) while fixture build stays cheap. */
   val NumArchives = 12
-  /** dir → resolved fixture path. The row count only names the
-    * fixture dir, so once built (or found) for a testdata dir the
-    * synth-and-count scan need not repeat — three queries per run
-    * share this fixture. */
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def ensure(s: SparkSession, dir: String): String = {
-    val hit = resolved.get(dir)
-    if (hit != null) return hit
-    val path = ensureUncached(s, dir)
-    resolved.put(dir, path)
-    path
-  }
+  val Fixture: ArtifactCache.Artifact =
+    ArtifactCache.Artifact("decisions", Seq("events"), s"archives=$NumArchives")
 
-  private def ensureUncached(s: SparkSession, dir: String): String = {
-    val df = Decisions.synth(s, dir)
-    val n = df.count()
-    val out = Paths.get("/root/repo/target/fixtures/" +
-      s"decisions${NumArchives}x_${dir.replaceAll("[^0-9.]", "")}_$n")
-    FixtureDir.ensure(out) { tmp =>
+  def ensure(s: SparkSession, dir: String): String =
+    Fixture.ensure(dir) { tmp =>
       // driver-side by design: fabricates the dump archives a cluster
       // would fetch from object storage
       val names = Decisions.FieldNames
-      val rows = df.orderBy("event_id").collect()
+      val rows = Decisions.synth(s, dir).orderBy("event_id").collect()
       def csv(header: Seq[String], rs: Seq[org.apache.spark.sql.Row]): Array[Byte] = {
         val sb = new StringBuilder(header.mkString(","))
         sb.append('\n')
@@ -413,7 +398,7 @@ object DecisionFixture {
       val chunk = math.max(1, (rows.length + NumArchives - 1) / NumArchives)
       rows.grouped(chunk).zipWithIndex.foreach { case (dayRows, i) =>
         val day = f"day_$i%02d"
-        val z = new ZipOutputStream(new FileOutputStream(tmp.resolve(s"$day.zip").toFile))
+        val z = new ZipOutputStream(new FileOutputStream(s"$tmp/$day.zip"))
         if (i % 3 == 1) {
           // nested archive with reversed header — the realign path
           val nested = new java.io.ByteArrayOutputStream()
@@ -432,5 +417,4 @@ object DecisionFixture {
         z.close()
       }
     }
-  }
 }

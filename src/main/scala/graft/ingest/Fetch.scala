@@ -87,20 +87,20 @@ object Fetch {
 /** Plain-CSV fixture for the fetch_ingest query: the documents table
   * split over three `part_<doc_id % 3>.csv` files (deterministic
   * membership → the oracle can recompute per-file rows AND exact
-  * byte sizes from the table), built once per (sf, row-count) under
-  * target/fixtures.
+  * byte sizes from the table), built once per documents table.
   */
 object FetchFixture {
   val Cols: Seq[String] = Seq("doc_id", "text", "lang", "source", "n_chars")
 
-  def ensure(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir).select(Cols.head, Cols.tail: _*)
-    val n = docs.count()
-    val out = Paths.get(s"/root/repo/target/fixtures/fetchcsv_${dir.replaceAll("[^0-9.]", "")}_$n")
-    FixtureDir.ensure(out) { tmp =>
+  val Fixture: ArtifactCache.Artifact =
+    ArtifactCache.Artifact("fetchcsv", Seq("documents"), "parts=3")
+
+  def ensure(s: SparkSession, dir: String): String =
+    Fixture.ensure(dir) { tmp =>
       // driver-side by design: fabricates the remote files a cluster
       // would fetch from object storage
-      val rows = docs.orderBy("doc_id").collect()
+      val rows = Tables.documents(s, dir).select(Cols.head, Cols.tail: _*)
+        .orderBy("doc_id").collect()
       (0 until 3).foreach { part =>
         val sb = new StringBuilder(Cols.mkString(","))
         sb.append('\n')
@@ -108,11 +108,10 @@ object FetchFixture {
           sb.append(Cols.indices.map(i => Csv.quote(String.valueOf(r.get(i)))).mkString(","))
           sb.append('\n')
         }
-        Files.write(tmp.resolve(s"part_$part.csv"),
+        Files.write(Paths.get(tmp, s"part_$part.csv"),
           sb.toString.getBytes(StandardCharsets.UTF_8))
       }
     }
-  }
 }
 
 /** file:// manifest over the [[FetchFixture]] parts plus one
@@ -120,7 +119,7 @@ object FetchFixture {
   * whose fetch 403s permanently). */
 object FetchManifest {
   def manifest(s: SparkSession, dir: String): DataFrame = {
-    val base = FetchFixture.ensure(s, dir)
+    val base = Paths.get(FetchFixture.ensure(s, dir)).toAbsolutePath
     import s.implicits._
     Seq("part_0.csv", "part_1.csv", "part_2.csv", "part_404.csv")
       .map(f => s"file://$base/$f").toDF("url")

@@ -489,13 +489,12 @@ object Ingest {
   * `% 17 = 0` appends a spurious extra column. Exactly one mode per
   * row, so the status accounting is closed-form. */
 object CsvBadFixture {
-  def ensure(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
-    val n = docs.count()
-    val out = Paths.get(
-      s"/root/repo/target/fixtures/csvbad_${dir.replaceAll("[^0-9.]", "")}_$n")
-    FixtureDir.ensure(out) { tmp =>
-      val rows = docs.orderBy("doc_id").collect()
+  val Fixture: ArtifactCache.Artifact = ArtifactCache.Artifact("csvbad", Seq("documents"), "v1")
+
+  def ensure(s: SparkSession, dir: String): String =
+    Fixture.ensure(dir) { tmp =>
+      val rows = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
+        .orderBy("doc_id").collect()
       val sb = new StringBuilder("doc_id,lang,n_chars\n")
       rows.foreach { r =>
         val (id, lang, nc) = (r.getLong(0), r.getString(1), r.getLong(2))
@@ -503,10 +502,22 @@ object CsvBadFixture {
         else if (id % 17 == 0) sb.append(s"$id,$lang,$nc,junk\n")
         else sb.append(s"$id,$lang,$nc\n")
       }
-      Files.write(tmp.resolve("dump.csv"),
+      Files.write(Paths.get(tmp, "dump.csv"),
         sb.toString.getBytes(StandardCharsets.UTF_8))
     }
-  }
+}
+
+/** ORC copy of the documents projection for K90 — written by Spark's
+  * own distributed ORC writer (the round-trip under test), once per
+  * documents table. */
+object OrcFixture {
+  val Fixture: ArtifactCache.Artifact = ArtifactCache.Artifact("orc", Seq("documents"), "v1")
+
+  def ensure(s: SparkSession, dir: String): String =
+    Fixture.ensure(dir) { tmp =>
+      Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars")
+        .write.orc(s"$tmp/docs")
+    }
 }
 
 /** Deterministic JSONL fixture for K85: the documents table as JSON
@@ -516,31 +527,13 @@ object CsvBadFixture {
   * corrupt, JSON's failure unit, unlike CSV's per-field one); else
   * `% 13 = 0` → the `lang` field is MISSING (valid JSON — parses with
   * a null, NOT corrupt; schema-on-read absorbs absent fields). */
-/** ORC copy of the documents projection for K90 — written by Spark's
-  * own distributed ORC writer (the round-trip under test), once per
-  * (sf, row-count) under target/fixtures. */
-object OrcFixture {
-  def ensure(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-      .select("doc_id", "lang", "source", "n_chars")
-    val n = docs.count()
-    val out = Paths.get(
-      s"/root/repo/target/fixtures/orc_${dir.replaceAll("[^0-9.]", "")}_$n")
-    FixtureDir.ensure(out) { tmp =>
-      docs.write.orc(tmp.resolve("docs").toString)
-    }
-    out.toString
-  }
-}
-
 object JsonlFixture {
-  def ensure(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
-    val n = docs.count()
-    val out = Paths.get(
-      s"/root/repo/target/fixtures/jsonl_${dir.replaceAll("[^0-9.]", "")}_$n")
-    FixtureDir.ensure(out) { tmp =>
-      val rows = docs.orderBy("doc_id").collect()
+  val Fixture: ArtifactCache.Artifact = ArtifactCache.Artifact("jsonl", Seq("documents"), "v1")
+
+  def ensure(s: SparkSession, dir: String): String =
+    Fixture.ensure(dir) { tmp =>
+      val rows = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
+        .orderBy("doc_id").collect()
       val sb = new StringBuilder
       rows.foreach { r =>
         val (id, lang, nc) = (r.getLong(0), r.getString(1), r.getLong(2))
@@ -548,29 +541,27 @@ object JsonlFixture {
         else if (id % 13 == 0) sb.append(s"""{"doc_id":$id,"n_chars":$nc}""" + "\n")
         else sb.append(s"""{"doc_id":$id,"lang":"$lang","n_chars":$nc}""" + "\n")
       }
-      Files.write(tmp.resolve("dump.jsonl"),
+      Files.write(Paths.get(tmp, "dump.jsonl"),
         sb.toString.getBytes(StandardCharsets.UTF_8))
     }
-    out.toString
-  }
 }
 
 /** Deterministic zip fixture for A2: the documents table written as
   * properly-quoted CSV, split across one plain member and a nested
   * zip with two members (exercising both extraction paths), plus a
   * shuffled-column-order header on one member (exercising the
-  * header map). Built once per (sf, row-count) under target/fixtures.
+  * header map). Built once per documents table.
   */
 object ZipFixture {
-  def ensure(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-      .select("doc_id", "text", "lang", "source", "n_chars")
-    val n = docs.count()
-    val out = Paths.get(s"/root/repo/target/fixtures/zipcsv_${dir.replaceAll("[^0-9.]", "")}_$n")
-    FixtureDir.ensure(out) { tmp =>
+  val Fixture: ArtifactCache.Artifact = ArtifactCache.Artifact("zipcsv", Seq("documents"), "v1")
+
+  def ensure(s: SparkSession, dir: String): String =
+    Fixture.ensure(dir) { tmp =>
       // fixture generation is driver-side by design (it fabricates the
       // input archives a cluster would fetch from object storage)
-      val rows = docs.orderBy("doc_id").collect()
+      val rows = Tables.documents(s, dir)
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .orderBy("doc_id").collect()
       def csv(header: Seq[String], rs: Seq[org.apache.spark.sql.Row]): Array[Byte] = {
         val sb = new StringBuilder(header.mkString(","))
         sb.append('\n')
@@ -596,7 +587,7 @@ object ZipFixture {
       nz.closeEntry()
       nz.close()
 
-      val zout = new ZipOutputStream(new FileOutputStream(tmp.resolve("dump.zip").toFile))
+      val zout = new ZipOutputStream(new FileOutputStream(s"$tmp/dump.zip"))
       zout.putNextEntry(new ZipEntry("part_a.csv"))
       zout.write(csv(Seq("doc_id", "text", "lang", "source", "n_chars"), aRows))
       zout.closeEntry()
@@ -608,5 +599,4 @@ object ZipFixture {
       zout.closeEntry()
       zout.close()
     }
-  }
 }

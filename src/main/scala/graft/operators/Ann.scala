@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.Portable.pround
 import graft.functions.VecFns
+import graft.ingest.ArtifactCache.Artifact
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §2 D*). Probe set = `vec_id < NumQueries` (broadcast);
@@ -297,6 +298,17 @@ object Ann {
        |FROM cn LEFT JOIN h ON h.p = cn.p""".stripMargin
   }
 
+  /** The materialized exact top-[[K]] neighbor lists — the
+    * O(N²)-by-declaration recall oracle that TWO operators consume
+    * (H7's ranking itself and K81's label eval): at 100 TB an exact
+    * ranking is a batch job whose output every eval joins, never an
+    * inline recompute (the pair-stats lifecycle). */
+  val KnnTopk: Artifact = Artifact("knn_topk", Seq("embeddings"),
+    s"k=$K;blocks=${Dedup.CosBlocks}")
+
+  def ensureKnnTopk(s: SparkSession, dir: String): String =
+    KnnTopk.ensure(dir)(knnJoinFresh(s, dir).write.mode("overwrite").parquet(_))
+
   /** H7: k-NN JOIN — top-[[K]] cosine neighbors for EVERY vector, not
     * just a probe set (the pairwise step of dedup-graph / kNN-graph
     * builds). All-pairs cosine via the C5 balanced blocked equi-join
@@ -306,27 +318,6 @@ object Ann {
     * construction; a corpus where N² dots are infeasible swaps the
     * pair generator for the banded-LSH candidates at a pruning
     * threshold — the ranking stages are unchanged. */
-  /** Root for the materialized exact top-[[K]] neighbor lists — the
-    * O(N²)-by-declaration recall oracle that TWO operators consume
-    * (H7's ranking itself and K81's label eval): at 100 TB an exact
-    * ranking is a batch job whose output every eval joins, never an
-    * inline recompute (the pair-stats lifecycle). Subdir embeds an
-    * [[graft.ingest.ArtifactCache]] token over the embeddings table
-    * + the ranking constants. */
-  val KnnTopkRoot = "target/graft_knn_topk"
-
-  def knnTopkPath(dir: String): String =
-    s"$KnnTopkRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("embeddings"),
-        s"k=$K;blocks=${Dedup.CosBlocks}")
-
-  def ensureKnnTopk(s: SparkSession, dir: String): String = {
-    val path = knnTopkPath(dir)
-    graft.ingest.ArtifactCache.ensure(path) {
-      knnJoinFresh(s, dir).write.mode("overwrite").parquet(path)
-    }
-  }
-
   def knnJoin(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensureKnnTopk(s, dir))
 
@@ -639,31 +630,25 @@ object Ann {
        |  (sqq::DOUBLE / n - (sq::DOUBLE / n) * (sq::DOUBLE / n)) / 100000000.0 < $DeadVarFloor AS dead
        |FROM a""".stripMargin
 
-  /** Root for the materialized eval RANKINGS — the four ranking
-    * pipelines (D1 exact, D2 LSH, D3 IVF, K72 PQ) that the THREE
-    * eval operators (ann_recall, K151 ndcg_eval, K164 mrr_eval)
-    * each re-ran inline before r13 — ~12 ranking pipelines per
-    * eval-suite pass. At 100 TB a ranking run is a batch job whose
-    * output every eval joins (the knn_topk / purchase-pairs
-    * write-once lifecycle), never an inline recompute × 3. One
-    * frame (path, qid, nb, rnk); subdir embeds an
-    * [[graft.ingest.ArtifactCache]] token over the embeddings table
-    * + every constant all four paths read, so a parameter change
-    * self-invalidates. The per-path operators (ann_lsh …) stay
-    * fresh computations — they ARE the thing under eval; only the
-    * evals read the artifact. Measured ([[graft.ABProbe]]
-    * `annevals`, sf0.1, alternating, 4 rounds, warm med of the trio
-    * as one job): 8.19 s fresh → 1.72 s artifact (4.8×), with the
-    * build itself outside the timed path (the Bench fixture
-    * convention). */
-  val AnnRankedRoot = "target/graft_ann_ranked"
-
-  def annRankedPath(dir: String): String =
-    s"$AnnRankedRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("embeddings"),
-        s"k=$K;nq=$NumQueries;lsh=$LshBits/$LshTables;" +
-          s"ivf=$IvfCentroids/$IvfProbes;" +
-          s"pq=$PqSubDim/$PqK/$PqProbes/$PqTopK;blocks=${Dedup.CosBlocks}")
+  /** The materialized eval RANKINGS — the four ranking pipelines
+    * (D1 exact, D2 LSH, D3 IVF, K72 PQ) that the THREE eval operators
+    * (ann_recall, K151 ndcg_eval, K164 mrr_eval) each re-ran inline
+    * before r13 — ~12 ranking pipelines per eval-suite pass. At
+    * 100 TB a ranking run is a batch job whose output every eval
+    * joins (the knn_topk / purchase-pairs write-once lifecycle),
+    * never an inline recompute × 3. One frame (path, qid, nb, rnk);
+    * the signature names every constant all four paths read. The
+    * per-path operators (ann_lsh …) stay fresh computations — they
+    * ARE the thing under eval; only the evals read the artifact.
+    * Measured ([[graft.ABProbe]] `annevals`, sf0.1, alternating,
+    * 4 rounds, warm med of the trio as one job): 8.19 s fresh →
+    * 1.72 s artifact (4.8×), with the build itself outside the timed
+    * path (the Bench fixture convention). Lazy: the PQ constants are
+    * declared further down this object. */
+  lazy val AnnRanked: Artifact = Artifact("ann_ranked", Seq("embeddings"),
+    s"k=$K;nq=$NumQueries;lsh=$LshBits/$LshTables;" +
+      s"ivf=$IvfCentroids/$IvfProbes;" +
+      s"pq=$PqSubDim/$PqK/$PqProbes/$PqTopK;blocks=${Dedup.CosBlocks}")
 
   /** The from-scratch four-path ranking union — the artifact
     * builder. */
@@ -678,12 +663,8 @@ object Ann {
         .select(lit("pq").as("path"), col("probe_id").as("qid"),
           col("neighbor").as("nb"), col("rank").as("rnk")))
 
-  def ensureAnnRanked(s: SparkSession, dir: String): String = {
-    val path = annRankedPath(dir)
-    graft.ingest.ArtifactCache.ensure(path) {
-      annRankedFresh(s, dir).write.mode("overwrite").parquet(path)
-    }
-  }
+  def ensureAnnRanked(s: SparkSession, dir: String): String =
+    AnnRanked.ensure(dir)(annRankedFresh(s, dir).write.mode("overwrite").parquet(_))
 
   /** One path's persisted ranking (qid, nb, rnk). */
   private def rankedOf(s: SparkSession, dir: String, p: String): DataFrame =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.Portable.pround
 import graft.functions.TextFns
+import graft.ingest.ArtifactCache.Artifact
 
 /** Corpus-cleaning operators (SURVEY.md §2 I-line): the
   * line/segment-level dedup and repetition filters a web-scale
@@ -515,30 +516,19 @@ object CorpusClean {
       .agg(count(lit(1)).as("n_bigrams"), sum(col("q")).as("sum_q"))
   }
 
-  /** Root for the materialized per-doc LM fluency scores — the
-    * write-once artifact the gate/bucket family reads (the
-    * lv_labels/lsh_pairs lifecycle): ccnet_buckets,
-    * quality_agreement, conformal_gate and pareto_quality_gate are
-    * all CONSUMERS of the corpus-LM score table (a real pipeline
-    * scores once and gates many), yet each re-ran the full
-    * tokenize → bigram-window → count-joins → doc-aggregate sweep
-    * that lm_score had already run. lm_score itself stays a FRESH
-    * computation — it IS the scorer under eval (the ann_ranked
-    * convention). Subdir embeds an [[graft.ingest.ArtifactCache]]
-    * token over the corpus + [[LmScale]]. */
-  val LmScoresRoot = "target/graft_lm_scores"
+  /** The materialized per-doc LM fluency scores — the write-once
+    * artifact the gate/bucket family reads (the lv_labels/lsh_pairs
+    * lifecycle): ccnet_buckets, quality_agreement, conformal_gate and
+    * pareto_quality_gate are all CONSUMERS of the corpus-LM score
+    * table (a real pipeline scores once and gates many), yet each
+    * re-ran the full tokenize → bigram-window → count-joins →
+    * doc-aggregate sweep that lm_score had already run. lm_score
+    * itself stays a FRESH computation — it IS the scorer under eval
+    * (the ann_ranked convention). */
+  val LmScores: Artifact = Artifact("lm_scores", Seq("documents"), s"lmscale=$LmScale;bigram;v1")
 
-  def lmScoresPath(dir: String): String =
-    s"$LmScoresRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("documents"),
-        s"lmscale=$LmScale;bigram;v1")
-
-  /** Build the score table at most once per (JVM, scale dir);
-    * concurrent first callers serialize on the ArtifactCache lock. */
   def ensureLmScores(s: SparkSession, dir: String): String =
-    graft.ingest.ArtifactCache.ensure(lmScoresPath(dir)) {
-      lmPerDocFrame(s, dir).write.mode("overwrite").parquet(lmScoresPath(dir))
-    }
+    LmScores.ensure(dir)(lmPerDocFrame(s, dir).write.mode("overwrite").parquet(_))
 
   /** The PERSISTED (doc_id, n_bigrams, sum_q) scores — set
     * semantics, row-identical to [[lmPerDoc]] (spec-pinned). */
@@ -683,29 +673,15 @@ object CorpusClean {
     (out, merges)
   }
 
-  /** Root for the materialized ENCODED corpus (doc_id, pos, w) after
-    * BPE training — the [[graft.operators.Dedup.ClusterLabelsRoot]]
-    * write-once lifecycle for the tokenizer artifact: training runs
-    * once, every downstream consumer reads the persisted encoding. */
-  val BpeTokensRoot = "target/graft_bpe_tokens"
+  /** The materialized ENCODED corpus (doc_id, pos, w) after BPE
+    * training — the [[graft.operators.Dedup.ClusterLabels]] write-once
+    * lifecycle for the tokenizer artifact: training runs once, every
+    * downstream consumer reads the persisted encoding. */
+  val BpeTokens: Artifact = Artifact("bpe_tokens", Seq("documents"),
+    s"rounds=$BpeTrainRounds;ws-lower")
 
-  /** Subdir name embeds an [[graft.ingest.ArtifactCache]] token
-    * (corpus files + merge-round count), so a regenerated corpus or a
-    * [[BpeTrainRounds]] change self-invalidates the persisted
-    * encoding instead of serving a stale tokenization. */
-  def bpeTokensPath(dir: String): String =
-    s"$BpeTokensRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("documents"),
-        s"rounds=$BpeTrainRounds;ws-lower")
-
-  /** Train + persist the encoded corpus at most once per (JVM, dir);
-    * concurrent first callers serialize on the ArtifactCache lock. */
-  def ensureBpeTokens(s: SparkSession, dir: String): String = {
-    val path = bpeTokensPath(dir)
-    graft.ingest.ArtifactCache.ensure(path) {
-      bpeTrainRun(s, dir)._1.write.mode("overwrite").parquet(path)
-    }
-  }
+  def ensureBpeTokens(s: SparkSession, dir: String): String =
+    BpeTokens.ensure(dir)(bpeTrainRun(s, dir)._1.write.mode("overwrite").parquet(_))
 
   /** K68: APPLY the trained BPE merges — the encode half of the
     * tokenizer loop (K63 trains, this measures the encoding): per

@@ -6,6 +6,7 @@ import graft.Tables._
 import graft.Portable.pround
 import graft.functions.HashFns._
 import graft.functions.VecFns
+import graft.ingest.ArtifactCache.Artifact
 
 /** Deduplication operators over `documents` / `embeddings`
   * (SURVEY.md §2 C*). The shared shape: signatures are computed
@@ -109,34 +110,23 @@ object Dedup {
     verifyJaccardPosts(cand, gp)
   }
 
-  /** Root for the materialized verified LSH pair list — the
-    * write-once artifact K-line dedup_clusters reads (the
-    * lv_labels/purchase-pairs lifecycle): cluster labeling is BY
-    * DEFINITION a pass over the near-dup pair list, and before this
-    * artifact dedup_clusters recomputed the entire C2 sweep
-    * (postings → signatures → banding → exact-Jaccard verify, ~2.5 s
-    * of its 2.9 s warm) that dedup_minhash_lsh had already run.
-    * dedup_minhash_lsh itself stays a FRESH computation — it IS the
-    * pair sweep under eval (the ann_ranked convention: per-path
-    * operators fresh, downstream consumers read the artifact). The
-    * subdir embeds an [[graft.ingest.ArtifactCache]] token over the
-    * corpus and the signature constants, so a regenerated corpus or
-    * a parameter bump self-invalidates. */
-  val LshPairsRoot = "target/graft_lsh_pairs"
+  /** The materialized verified LSH pair list — the write-once
+    * artifact K-line dedup_clusters reads (the lv_labels/purchase-pairs
+    * lifecycle): cluster labeling is BY DEFINITION a pass over the
+    * near-dup pair list, and before this artifact dedup_clusters
+    * recomputed the entire C2 sweep (postings → signatures → banding
+    * → exact-Jaccard verify, ~2.5 s of its 2.9 s warm) that
+    * dedup_minhash_lsh had already run. dedup_minhash_lsh itself stays
+    * a FRESH computation — it IS the pair sweep under eval (the
+    * ann_ranked convention: per-path operators fresh, downstream
+    * consumers read the artifact). */
+  val LshPairs: Artifact = Artifact("lsh_pairs", Seq("documents"),
+    s"minhash=${NumHashes}x$P;bands=$Bands;df=$DfCap;shingle=$ShingleWidth;j>=0.5;v1")
 
-  def lshPairsPath(dir: String): String = {
-    import graft.functions.HashFns.{Bands, NumHashes, P => HashP}
-    s"$LshPairsRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("documents"),
-        s"minhash=${NumHashes}x$HashP;bands=$Bands;df=$DfCap;j>=0.5;v1")
-  }
-
-  /** Build the verified pair list at most once per (JVM, scale dir);
-    * concurrent first callers serialize on the ArtifactCache lock. */
   def ensureLshPairs(s: SparkSession, dir: String): String =
-    graft.ingest.ArtifactCache.ensure(lshPairsPath(dir)) {
+    LshPairs.ensure(dir) { out =>
       val gp = gramPosts(s, dir)
-      lshPairs(gp).write.mode("overwrite").parquet(lshPairsPath(dir))
+      lshPairs(gp).write.mode("overwrite").parquet(out)
       gp.unpersist()
     }
 
@@ -149,26 +139,17 @@ object Dedup {
     * existing corpus. */
   private val isNewDoc = col("doc_id") % 10 === 7
 
-  /** Root for materialized corpus LSH indexes, one subdir per scale
-    * dir. Lifecycle contract: [[buildCorpusIndex]] (re)writes it;
-    * [[dedupIncremental]] builds it once if absent and READS it
-    * thereafter. The subdir name embeds an [[graft.ingest
-    * .ArtifactCache]] token over the corpus files AND the signature
-    * constants, so a changed corpus or parameter bump self-invalidates
-    * (fresh path → rebuild) — no manual delete needed. */
-  val CorpusIndexRoot = "target/graft_corpus_index"
-
   /** Constants whose change invalidates the persisted index: the
-    * minhash family (hash count, modulus), banding geometry, df cap,
-    * and the batch-split predicate. */
-  private def corpusIndexSig: String = {
-    import graft.functions.HashFns.{Bands, NumHashes, P => HashP}
-    s"minhash=${NumHashes}x$HashP;bands=$Bands;df=$DfCap;newdoc=7%10"
-  }
+    * minhash family (hash count, modulus), shingle width, banding
+    * geometry, df cap, and the batch-split predicate. */
+  private def corpusIndexSig: String =
+    s"minhash=${NumHashes}x$P;bands=$Bands;df=$DfCap;shingle=$ShingleWidth;newdoc=7%10"
 
-  def corpusIndexPath(dir: String): String =
-    s"$CorpusIndexRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("documents"), corpusIndexSig)
+  /** The materialized corpus LSH index, one dir per scale dir.
+    * Lifecycle contract: [[buildCorpusIndex]] writes it;
+    * [[dedupIncremental]] builds it once if absent and READS it
+    * thereafter. */
+  val CorpusIndex: Artifact = Artifact("corpus_index", Seq("documents"), corpusIndexSig)
 
   /** Build and PERSIST the corpus's LSH band index — the write-once
     * half of the incremental-dedup lifecycle. Three parquet tables
@@ -204,43 +185,21 @@ object Dedup {
     raw.unpersist()
   }
 
-  /** Build the corpus index at most once per (JVM, scale dir);
-    * concurrent first callers serialize on the ArtifactCache lock. */
-  def ensureCorpusIndex(s: SparkSession, dir: String): String = {
-    val path = corpusIndexPath(dir)
-    graft.ingest.ArtifactCache.ensure(s"$path/bands") {
-      buildCorpusIndex(s, dir, path)
-    }
-    path
-  }
+  def ensureCorpusIndex(s: SparkSession, dir: String): String =
+    CorpusIndex.ensure(dir)(buildCorpusIndex(s, dir, _))
 
-  /** Root for materialized cluster-label frames, one subdir per
-    * scale dir — the same write-once/read-thereafter lifecycle as
-    * [[CorpusIndexRoot]], for the CLUSTERING's output instead of the
-    * LSH index: (doc_id, cluster_id, cluster_size) as plain keyed
-    * parquet. [[dedupClusters]] is the job that produces it;
-    * downstream consumers ([[dedupApply]]) join the persisted labels
-    * instead of re-running LSH + union-find per query. The subdir
-    * name embeds an [[graft.ingest.ArtifactCache]] token (corpus
-    * files + clustering signature), so a corpus or threshold change
-    * self-invalidates instead of serving stale labels. */
-  val ClusterLabelsRoot = "target/graft_cluster_labels"
+  /** The materialized cluster-label frame, one dir per scale dir —
+    * the same write-once/read-thereafter lifecycle as [[CorpusIndex]],
+    * for the CLUSTERING's output instead of the LSH index: (doc_id,
+    * cluster_id, cluster_size) as plain keyed parquet.
+    * [[dedupClusters]] is the job that produces it; downstream
+    * consumers ([[dedupApply]]) join the persisted labels instead of
+    * re-running LSH + union-find per query. */
+  val ClusterLabels: Artifact = Artifact("cluster_labels", Seq("documents"),
+    s"$corpusIndexSig;j>=0.5;unionfind")
 
-  def clusterLabelsPath(dir: String): String =
-    s"$ClusterLabelsRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("documents"),
-        s"$corpusIndexSig;j>=0.5;unionfind")
-
-  /** Run the clustering once and PERSIST its labels. */
-  def buildClusterLabels(s: SparkSession, dir: String, path: String): Unit =
-    dedupClusters(s, dir).write.mode("overwrite").parquet(path)
-
-  /** Build the label frame at most once per (JVM, scale dir);
-    * concurrent first callers serialize on the ArtifactCache lock. */
-  def ensureClusterLabels(s: SparkSession, dir: String): String = {
-    val path = clusterLabelsPath(dir)
-    graft.ingest.ArtifactCache.ensure(path)(buildClusterLabels(s, dir, path))
-  }
+  def ensureClusterLabels(s: SparkSession, dir: String): String =
+    ClusterLabels.ensure(dir)(dedupClusters(s, dir).write.mode("overwrite").parquet(_))
 
   /** The DAILY-RUN half of incremental dedup: shingle ONLY today's
     * batch, anti-join the index's hot-gram list (broadcast), sign and
@@ -742,29 +701,19 @@ object Dedup {
     * so the oracle replays signatures bit-for-bit; signatures and
     * pairs reuse ONE persisted postings frame — no second shingle
     * scan. */
-  /** Root for the materialized shared-gram PAIR-STATS frame
+  /** The materialized shared-gram PAIR-STATS frame
     * (ia, ib, inter, sa, sb): the capped-postings self-join that
     * FIVE operators verify against (ngram_jaccard, dedup_sweep,
     * containment_pairs, minhash_est, minhash_band_tune — each with
     * its own threshold/denominator over the same intersections).
     * At 100 TB the postings self-join is the expensive stage; a
     * dedup pipeline materializes it once and every report derives
-    * by column arithmetic (the corpus-index lifecycle). The subdir
-    * embeds an [[graft.ingest.ArtifactCache]] token over the corpus
-    * + the shingle/df-cap constants, so a corpus or parameter change
-    * self-invalidates. */
-  val PairStatsRoot = "target/graft_pair_stats"
+    * by column arithmetic (the corpus-index lifecycle). */
+  val PairStats: Artifact = Artifact("pair_stats", Seq("documents"),
+    s"dfCap=$DfCap;shingle=$ShingleWidth")
 
-  def pairStatsPath(dir: String): String =
-    s"$PairStatsRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("documents"),
-        s"dfCap=$DfCap;shingle=3")
-
-  /** Build the pair-stats frame at most once per (JVM, scale dir);
-    * concurrent first callers serialize on the ArtifactCache lock. */
-  def ensurePairStats(s: SparkSession, dir: String): String = {
-    val path = pairStatsPath(dir)
-    graft.ingest.ArtifactCache.ensure(path) {
+  def ensurePairStats(s: SparkSession, dir: String): String =
+    PairStats.ensure(dir) { out =>
       val gp = gramPosts(s, dir)
       val sizes = gp.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
       gp.as("x")
@@ -773,11 +722,9 @@ object Dedup {
         .agg(count(lit(1)).as("inter"))
         .join(sizes.select(col("doc_id").as("ia"), col("sz").as("sa")), "ia")
         .join(sizes.select(col("doc_id").as("ib"), col("sz").as("sb")), "ib")
-        .write.mode("overwrite").parquet(path)
+        .write.mode("overwrite").parquet(out)
       gp.unpersist()
     }
-    path
-  }
 
   /** The persisted pair stats with the exact Jaccard derived — the
     * shared verify base for the whole exact-similarity family. */
@@ -785,29 +732,23 @@ object Dedup {
     s.read.parquet(ensurePairStats(s, dir))
       .withColumn("j", col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
 
-  /** Root for the materialized PORTABLE MinHash signatures (doc_id,
+  /** The materialized PORTABLE MinHash signatures (doc_id,
     * sig: array<bigint>) — the strHash-laned signature the
     * oracle-replayable estimators (minhash_est, minhash_band_tune)
     * share; built once from the capped postings (the pair-stats
     * lifecycle; C2's production path keeps its own xxhash64 index in
-    * [[CorpusIndexRoot]]). */
-  val MinhashSigRoot = "target/graft_minhash_sig"
+    * [[CorpusIndex]]). */
+  val MinhashSig: Artifact = Artifact("minhash_sig", Seq("documents"),
+    s"dfCap=$DfCap;shingle=$ShingleWidth;lanes=$NumHashes;hash=strPoly31")
 
-  def minhashSigPath(dir: String): String =
-    s"$MinhashSigRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("documents"),
-        s"dfCap=$DfCap;shingle=3;lanes=${graft.functions.HashFns.NumHashes};hash=strPoly31")
-
-  def ensureMinhashSig(s: SparkSession, dir: String): String = {
-    val path = minhashSigPath(dir)
-    graft.ingest.ArtifactCache.ensure(path) {
+  def ensureMinhashSig(s: SparkSession, dir: String): String =
+    MinhashSig.ensure(dir) { out =>
       val gp = gramPosts(s, dir)
       minhashSigAgg(gp.select(col("doc_id"), strHash(col("gram")).as("h")),
         "doc_id", "h")
-        .write.mode("overwrite").parquet(path)
+        .write.mode("overwrite").parquet(out)
       gp.unpersist()
     }
-  }
 
   private def portableSig(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensureMinhashSig(s, dir))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.Portable.pround
+import graft.ingest.ArtifactCache.Artifact
 
 /** J-line: triangle counting over the supplier co-supply graph —
   * the graph-shape statistic (clustering / community density) a
@@ -52,28 +53,16 @@ object Graph {
       .select(col("s1"), col("s2"))
   }
 
-  /** Root for the materialized co-supply edge list — the write-once
+  /** The materialized co-supply edge list — the write-once
     * artifact the whole graph family shares (the corpus-index
     * lifecycle): SEVEN operators consume this graph, and at 100 TB
     * the co-occurrence join over the fact tables is the expensive
     * stage — a graph pipeline materializes its edge list once and
-    * every algorithm reads keyed parquet. The subdir embeds an
-    * [[graft.ingest.ArtifactCache]] token over the fact tables and
-    * the edge-cut constant, so a regenerated corpus or a changed cut
-    * self-invalidates. */
-  val CoEdgesRoot = "target/graft_co_edges"
+    * every algorithm reads keyed parquet. */
+  val CoEdges: Artifact = Artifact("co_edges", Seq("lineitem", "orders"), s"maxEdges=$MaxEdges")
 
-  def coEdgesPath(dir: String): String =
-    s"$CoEdgesRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("lineitem", "orders"),
-        s"maxEdges=$MaxEdges")
-
-  /** Build the edge list at most once per (JVM, scale dir);
-    * concurrent first callers serialize on the ArtifactCache lock. */
   def ensureCoEdges(s: SparkSession, dir: String): String =
-    graft.ingest.ArtifactCache.ensure(coEdgesPath(dir)) {
-      coEdgesFresh(s, dir).write.mode("overwrite").parquet(coEdgesPath(dir))
-    }
+    CoEdges.ensure(dir)(coEdgesFresh(s, dir).write.mode("overwrite").parquet(_))
 
   /** The shared graph input: the PERSISTED edge list (set semantics —
     * no operator depends on edge-row order). */
@@ -574,27 +563,23 @@ object Graph {
   /** Report depth per role for [[hitsScores]]. */
   val HitsTopK = 20
 
-  /** Root for the materialized DIRECTED customer→supplier purchase
-    * pairs — the bipartite edge list of the fact chain, distinct
+  /** The materialized DIRECTED customer→supplier purchase pairs —
+    * the bipartite edge list of the fact chain, distinct
     * (o_custkey, l_suppkey). Write-once artifact (the coEdges
     * lifecycle): the lineitem⨝orders distinct is the expensive stage
     * (~5 s warm at sf0.1, measured — the whole fact join), and the
     * link-analysis consumers ([[hitsScores]]; I10 `pagerank_iter` is
     * the documented next swap, pending its own A/B per house rule)
     * only need the ~edge-sized result. */
-  val PurchasePairsRoot = "target/graft_purchase_pairs"
-
-  def purchasePairsPath(dir: String): String =
-    s"$PurchasePairsRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("lineitem", "orders"), "v1")
+  val PurchasePairs: Artifact = Artifact("purchase_pairs", Seq("lineitem", "orders"), "v1")
 
   def ensurePurchasePairs(s: SparkSession, dir: String): String =
-    graft.ingest.ArtifactCache.ensure(purchasePairsPath(dir)) {
+    PurchasePairs.ensure(dir) { out =>
       lineitem(s, dir)
         .join(orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_suppkey").as("sk"))
         .distinct()
-        .write.mode("overwrite").parquet(purchasePairsPath(dir))
+        .write.mode("overwrite").parquet(out)
     }
 
   private[graft] def purchasePairs(s: SparkSession, dir: String): DataFrame =
@@ -1108,7 +1093,7 @@ object Graph {
     (lab, labPrev)
   }
 
-  /** Root for the materialized Louvain parent labels — the write-once
+  /** The materialized Louvain parent labels — the write-once
     * artifact K171 louvain_move and K178 leiden_refine share (the
     * coEdges/purchase-pairs lifecycle, r13-judge-approved): BOTH
     * operators need the full [[LvRounds]] local-move sweep over the
@@ -1116,17 +1101,10 @@ object Graph {
     * scratch (the one known duplicated-work path left after r13). A
     * real pipeline materializes the move phase's labels once — Leiden
     * refinement is BY DEFINITION a pass over the move phase's output.
-    * The subdir embeds an [[graft.ingest.ArtifactCache]] token over
-    * the fact tables and the sweep constants, so a regenerated corpus
-    * or a parameter bump self-invalidates. Stored per node: the final
-    * label and the previous sweep's label (louvain_move's
-    * n_moved_last needs both). */
-  val LvLabelsRoot = "target/graft_lv_labels"
-
-  def lvLabelsPath(dir: String): String =
-    s"$LvLabelsRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("lineitem", "orders"),
-        s"maxEdges=$MaxEdges|lvRounds=$LvRounds|v1")
+    * Stored per node: the final label and the previous sweep's label
+    * (louvain_move's n_moved_last needs both). */
+  val LvLabels: Artifact = Artifact("lv_labels", Seq("lineitem", "orders"),
+    s"maxEdges=$MaxEdges|lvRounds=$LvRounds|v1")
 
   /** The full local-move sweep computed FRESH — the artifact
     * builder. Returns (n, lab, plab). */
@@ -1141,12 +1119,8 @@ object Graph {
     lab.join(labPrev.withColumnRenamed("lab", "plab"), "n")
   }
 
-  /** Build the parent labels at most once per (JVM, scale dir);
-    * concurrent first callers serialize on the ArtifactCache lock. */
   def ensureLvLabels(s: SparkSession, dir: String): String =
-    graft.ingest.ArtifactCache.ensure(lvLabelsPath(dir)) {
-      lvLabelsFresh(s, dir).write.mode("overwrite").parquet(lvLabelsPath(dir))
-    }
+    LvLabels.ensure(dir)(lvLabelsFresh(s, dir).write.mode("overwrite").parquet(_))
 
   /** The PERSISTED parent labels (n, lab, plab) — set semantics. */
   private[graft] def lvLabels(s: SparkSession, dir: String): DataFrame =

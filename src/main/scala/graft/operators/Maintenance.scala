@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.ingest.ArtifactCache.Artifact
 
 /** Table-maintenance operators (round-3 H-line): MERGE-style
   * change-feed application and snapshot diffing — the mutations a
@@ -329,26 +330,18 @@ object Maintenance {
       |    AS n_resurrections
       |FROM seq GROUP BY user_id""".stripMargin
 
-  /** Root for the materialized aggregate view [[ivmAgg]] maintains —
-    * the write-once artifact lifecycle ([[graft.ingest.ArtifactCache]]
-    * token over the base table + the view definition version). */
-  val IvmViewRoot = "target/graft_ivm_view"
+  /** The materialized aggregate view [[ivmAgg]] maintains — the
+    * "materialized view on disk" the incremental refresh reads,
+    * versioned by its view definition. */
+  val IvmView: Artifact = Artifact("ivm_view", Seq("documents"), "ivm_view=source_lang_v1")
 
-  def ivmViewPath(dir: String): String =
-    s"$IvmViewRoot/${new java.io.File(dir).getName}_" +
-      graft.ingest.ArtifactCache.token(dir, Seq("documents"), "ivm_view=source_lang_v1")
-
-  /** Build the per-(source, lang) aggregate view once and persist it —
-    * the "materialized view on disk" the incremental refresh reads. */
-  def ensureIvmView(s: SparkSession, dir: String): String = {
-    val p = ivmViewPath(dir)
-    graft.ingest.ArtifactCache.ensure(p) {
+  def ensureIvmView(s: SparkSession, dir: String): String =
+    IvmView.ensure(dir) { out =>
       documents(s, dir).groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars").cast("long")).as("sum_chars"))
-        .write.mode("overwrite").parquet(p)
+        .write.mode("overwrite").parquet(out)
     }
-  }
 
   /** K101: INCREMENTAL VIEW MAINTENANCE — refresh the materialized
     * per-(source, lang) aggregate view under the [[changes]] feed

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.ingest.ArtifactCache.Artifact
 
 /** Scale patterns as first-class operators (SURVEY.md §5): each
   * demonstrates — with an exact oracle, since none of them changes
@@ -104,17 +105,22 @@ object ScalePatterns {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority""".stripMargin
 
-  /** One-time bucketed-table fixture per sf dir (16 buckets on the
-    * join key, sorted within buckets → shuffle-free sort-merge). */
+  /** One-time bucketed-table fixture per orders/lineitem content (16
+    * buckets on the join key, sorted within buckets → shuffle-free
+    * sort-merge). The bucket spec lives in the session catalog, not
+    * in the files, so these are catalog tables tagged with the
+    * sources' [[graft.ingest.ArtifactCache.token]] rather than
+    * artifact dirs; the lock serializes the drop-and-recreate of
+    * shared catalog state. */
   def ensureBucketed(s: SparkSession, dir: String): Unit = synchronized {
-    val tag = dir.replaceAll("[^0-9]", "")
+    val tag = graft.ingest.ArtifactCache.token(dir, Seq("orders", "lineitem"), "buckets=16")
     if (!s.catalog.tableExists("orders_b") ||
         s.conf.getOption("graft.bucketed.tag").getOrElse("") != tag) {
       // the warehouse dir outlives the in-memory catalog across JVMs;
       // clear both so saveAsTable never hits LOCATION_ALREADY_EXISTS
       Seq("orders_b", "lineitem_b").foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
-        deleteRec(new java.io.File(
+        graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(
           s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
       }
       orders(s, dir).select("o_orderkey", "o_orderpriority")
@@ -127,19 +133,13 @@ object ScalePatterns {
     }
   }
 
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete(): Unit
-  }
-
   /** Partition-pruned scan: events written date-partitioned (the
     * daily-dump staging layout from SURVEY §5), then aggregated with
     * a partition filter — the scan touches only matching partitions
     * (spec asserts the pruning). Oracle = same filter on the flat
     * table. */
   def prunedScan(s: SparkSession, dir: String): DataFrame = {
-    ensurePartitioned(s, dir)
-    s.read.parquet(partDir(dir))
+    s.read.parquet(ensurePartitioned(s, dir))
       .filter(col("d") >= "2024-01-10" && col("d") <= "2024-01-12")
       .groupBy(col("d"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -163,8 +163,7 @@ object ScalePatterns {
     * the `dynamicpruning` partition filter is in the executed plan;
     * the oracle replays the join's semantics on the flat table. */
   def dppJoin(s: SparkSession, dir: String): DataFrame = {
-    ensurePartitioned(s, dir)
-    val fact = s.read.parquet(partDir(dir))
+    val fact = s.read.parquet(ensurePartitioned(s, dir))
     // date dim with an attribute the fact doesn't carry; Mondays only
     val dim = fact.select(col("d")).distinct()
       .filter(weekday(col("d").cast("date")) === 0)
@@ -182,22 +181,16 @@ object ScalePatterns {
       |FROM ev WHERE isodow(CAST(d AS DATE)) = 1
       |GROUP BY 1, 2""".stripMargin
 
-  def partDir(dir: String): String =
-    s"/root/repo/target/fixtures/events_by_day_${dir.replaceAll("[^0-9]", "")}"
+  /** The events table written date-partitioned (`d=yyyy-MM-dd`) —
+    * the daily-dump staging layout. */
+  val EventsByDay: Artifact = Artifact("events_by_day", Seq("events"), "d=yyyy-MM-dd")
 
-  def ensurePartitioned(s: SparkSession, dir: String): Unit = synchronized {
-    val out = partDir(dir)
-    if (!new java.io.File(out).exists()) {
-      // write to a temp sibling + atomic rename: the output dir
-      // exists from the committer's first moment, so dir-existence
-      // must not be visible until the write is complete
-      graft.ingest.FixtureDir.ensure(java.nio.file.Paths.get(out)) { tmp =>
-        events(s, dir)
-          .withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
-          .write.mode("overwrite").partitionBy("d").parquet(tmp.toString)
-      }: Unit
+  def ensurePartitioned(s: SparkSession, dir: String): String =
+    EventsByDay.ensure(dir) { out =>
+      events(s, dir)
+        .withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
+        .write.mode("overwrite").partitionBy("d").parquet(out)
     }
-  }
 
   /** Z-curve bit width per dimension (20-bit z-values). */
   val ZBits = 10
@@ -280,8 +273,8 @@ object ScalePatterns {
       |              WHERE o_custkey = c_custkey
       |                AND o_orderpriority = '1-URGENT')""".stripMargin
 
-  def compactDir(dir: String): String =
-    s"/root/repo/target/fixtures/events_compacted_${dir.replaceAll("[^0-9]", "")}"
+  /** [[EventsByDay]] rewritten into 4 right-sized files. */
+  val EventsCompacted: Artifact = Artifact("events_compacted", Seq("events"), "coalesce=4")
 
   /** H11: small-file compaction — the maintenance pass every
     * long-lived ingest table needs (the reference's Postgres table
@@ -293,16 +286,9 @@ object ScalePatterns {
     * invisible to the oracle views → rows-only. At scale the rewrite
     * is one shuffle-free coalescing pass per partition group. */
   def compactFiles(s: SparkSession, dir: String): DataFrame = {
-    ensurePartitioned(s, dir)
-    val out = compactDir(dir)
-    synchronized {
-      if (!new java.io.File(out).exists()) {
-        graft.ingest.FixtureDir.ensure(java.nio.file.Paths.get(out)) { tmp =>
-          s.read.parquet(partDir(dir)).drop("d")
-            .coalesce(4)
-            .write.mode("overwrite").parquet(tmp.toString)
-        }: Unit
-      }
+    val staged = ensurePartitioned(s, dir)
+    val compacted = EventsCompacted.ensure(dir) { out =>
+      s.read.parquet(staged).drop("d").coalesce(4).write.mode("overwrite").parquet(out)
     }
     def layoutStats(path: String, layout: String): DataFrame =
       s.read.parquet(path)
@@ -310,31 +296,26 @@ object ScalePatterns {
         .agg(count(lit(1)).as("rows_in_file"))
         .agg(lit(layout).as("layout"), count(lit(1)).as("n_files"),
           sum(col("rows_in_file")).as("n_rows"), sum(col("sz")).as("n_bytes"))
-    layoutStats(partDir(dir), "staged_daily")
-      .unionByName(layoutStats(out, "compacted"))
+    layoutStats(staged, "staged_daily")
+      .unionByName(layoutStats(compacted, "compacted"))
   }
-
-  def driftDir(dir: String): String =
-    s"/root/repo/target/fixtures/orders_drift_${dir.replaceAll("[^0-9]", "")}"
 
   /** One-time schema-evolution fixture: two order snapshots under
     * day=1 / day=2 partition dirs, where day 2 added a column
     * (o_orderstatus) that day 1 predates — the drift every long-lived
     * ingest layout accumulates. */
-  def ensureDrift(s: SparkSession, dir: String): Unit = synchronized {
-    val out = driftDir(dir)
-    if (!new java.io.File(out).exists()) {
-      graft.ingest.FixtureDir.ensure(java.nio.file.Paths.get(out)) { tmp =>
-        orders(s, dir).filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .write.mode("overwrite").parquet(s"$tmp/day=1")
-        orders(s, dir).filter(col("o_orderkey") % 2 === 1)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-            col("o_orderstatus"))
-          .write.mode("overwrite").parquet(s"$tmp/day=2")
-      }: Unit
+  val OrdersDrift: Artifact = Artifact("orders_drift", Seq("orders"), "v1")
+
+  def ensureDrift(s: SparkSession, dir: String): String =
+    OrdersDrift.ensure(dir) { out =>
+      orders(s, dir).filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        .write.mode("overwrite").parquet(s"$out/day=1")
+      orders(s, dir).filter(col("o_orderkey") % 2 === 1)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+          col("o_orderstatus"))
+        .write.mode("overwrite").parquet(s"$out/day=2")
     }
-  }
 
   /** I8: schema-drift read — `mergeSchema` unions the per-day file
     * schemas (day 1 lacks o_orderstatus; its rows surface typed
@@ -345,8 +326,7 @@ object ScalePatterns {
     * for the pre-drift generation. Oracle re-derives both snapshots
     * relationally. */
   def schemaDrift(s: SparkSession, dir: String): DataFrame = {
-    ensureDrift(s, dir)
-    s.read.option("mergeSchema", "true").parquet(driftDir(dir))
+    s.read.option("mergeSchema", "true").parquet(ensureDrift(s, dir))
       .groupBy(col("day").cast("int").as("day"),
         coalesce(col("o_orderstatus"), lit("<pre-drift>")).as("status"))
       .agg(count(lit(1)).as("n"),

@@ -43,23 +43,12 @@ object Staging {
     * SINGLE-LEVEL by design — for flat staging dirs this session
     * wrote; a nested subdir (a Spark `_temporary` leftover, a crc
     * sidecar dir) makes the final delete a silent no-op. Trees that
-    * may contain writer leftovers use [[deleteTree]]. */
+    * may contain writer leftovers use
+    * [[graft.ingest.ArtifactCache.deleteTree]]. */
   def clearDir(dir: Path): Unit = {
     listing(dir)(_.forEach(p => Files.deleteIfExists(p): Unit))
     Files.deleteIfExists(dir)
   }
-
-  /** Recursively delete a directory tree, deepest-first — the
-    * cleanup for roots that Spark writers populate (parquet part
-    * dirs, `_temporary` leftovers), where [[clearDir]]'s single
-    * level would leave the root behind without error. */
-  def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p): Unit)
-      finally s.close()
-    }
 
   /** State partition count for the file-drop streams. A streaming
     * query's shuffle-partition count is FIXED into its checkpoint at

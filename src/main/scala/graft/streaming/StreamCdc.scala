@@ -90,7 +90,7 @@ object StreamCdc {
     val minTs = e.agg(min(col("ts"))).head.getTimestamp(0)
     val cut = new Timestamp(minTs.getTime + 15L * 86400 * 1000)
 
-    val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "stream_cdc")
+    val base = Files.createTempDirectory(Paths.get("target"), "stream_cdc")
     val watch = Files.createDirectory(base.resolve("ops"))
     val mem = "stream_cdc_" + java.util.UUID.randomUUID().toString.replace("-", "")
 

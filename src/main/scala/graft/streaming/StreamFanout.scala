@@ -66,17 +66,8 @@ object StreamFanout {
       // 3-row report: materialize, then the per-run transport dirs can
       // go — repeated runs must not accumulate event-sized temp parquet
       .localCheckpoint()
-    deleteRec(java.nio.file.Paths.get(base))
+    graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(base))
     report
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(c => deleteRec(c)) finally s.close()
-    }
-    Files.deleteIfExists(p)
   }
 
   val sql: String =

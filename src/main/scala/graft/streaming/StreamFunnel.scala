@@ -101,7 +101,7 @@ object StreamFunnel {
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     val cut = chainCut(s, dir)
 
-    val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "stream_funnel")
+    val base = Files.createTempDirectory(Paths.get("target"), "stream_funnel")
     val watch = Files.createDirectory(base.resolve("ops"))
     val mem = "stream_funnel_" + java.util.UUID.randomUUID().toString.replace("-", "")
 

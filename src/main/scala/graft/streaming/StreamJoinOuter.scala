@@ -40,7 +40,7 @@ object StreamJoinOuter {
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("event_id").as("pid"), col("user_id").as("p_user"), col("ts").as("pts"))
 
-    val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "stream_join_outer")
+    val base = Files.createTempDirectory(Paths.get("target"), "stream_join_outer")
     val vDir = Files.createDirectory(base.resolve("views"))
     val pDir = Files.createDirectory(base.resolve("purchases"))
     val mem = "stream_join_outer_" + java.util.UUID.randomUUID().toString.replace("-", "")

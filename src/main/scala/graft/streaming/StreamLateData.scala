@@ -41,7 +41,7 @@ object StreamLateData {
     val b = e.filter(col("event_id") % 4 === 0)
 
     val watch = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream_late_watch")
+      Paths.get("target"), "stream_late_watch")
     // unique per run: concurrent suites each get their own memory
     // sink and watch dir, so runs never share streaming state
     val mem = "stream_late_" +

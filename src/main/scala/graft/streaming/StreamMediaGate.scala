@@ -111,7 +111,7 @@ object StreamMediaGate {
     // sidecars or _temporary leftovers) — recursive delete, then
     // assert the temp root is actually gone (r9 advisory: the
     // single-level clear left base behind silently)
-    Staging.deleteTree(base)
+    graft.ingest.ArtifactCache.deleteTree(base)
     assert(!Files.exists(base), s"stream_mgate temp root survived cleanup: $base")
 
     import scala.jdk.CollectionConverters._

@@ -33,7 +33,7 @@ object StreamSessionWindow {
   def run(s: SparkSession, dir: String): DataFrame = {
     val events = Tables.events(s, dir).select(col("user_id"), col("ts"))
 
-    val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "stream_session_window")
+    val base = Files.createTempDirectory(Paths.get("target"), "stream_session_window")
     val eDir = Files.createDirectory(base.resolve("events"))
     val mem = "stream_session_window_" + java.util.UUID.randomUUID().toString.replace("-", "")
 

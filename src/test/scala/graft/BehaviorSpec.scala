@@ -162,9 +162,9 @@ class BehaviorSpec extends SparkSpec {
     assert(af < bf, s"no file-count reduction: $bf -> $af")
     assert(ab > 0 && bb > 0)
     // content equality, not just counts
-    val before = spark.read.parquet(graft.operators.ScalePatterns.partDir(sf))
+    val before = spark.read.parquet(graft.operators.ScalePatterns.EventsByDay.path(sf))
       .drop("d").collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
-    val after = spark.read.parquet(graft.operators.ScalePatterns.compactDir(sf))
+    val after = spark.read.parquet(graft.operators.ScalePatterns.EventsCompacted.path(sf))
       .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
     assert(before.sameElements(after), "compaction changed data")
   }

@@ -376,12 +376,7 @@ class CorpusCleanSpec extends SparkSpec {
   }
 
   test("bpe-token artifact: delete → rebuild equals a fresh training run") {
-    val path = CorpusClean.bpeTokensPath(sf)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
+    graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(CorpusClean.BpeTokens.path(sf)))
     val built = CorpusClean.ensureBpeTokens(spark, sf)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("pos"), r.getAs[String]("w"))).toSet

@@ -279,12 +279,8 @@ class DedupSpec extends SparkSpec {
   test("dedup_incremental: index-read path equals the retired full-recompute path") {
     // force a FRESH index build so the lifecycle (build → read) is
     // exercised end-to-end, not a stale artifact from an earlier run
-    val path = graft.operators.Dedup.corpusIndexPath(sf)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
+    graft.ingest.ArtifactCache.deleteTree(
+      java.nio.file.Paths.get(graft.operators.Dedup.CorpusIndex.path(sf)))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Double]("jaccard"))).toSet
     val fromIndex = rows(run("dedup_incremental"))
@@ -294,12 +290,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("cluster-label artifact: delete → rebuild equals a live clustering") {
-    val path = graft.operators.Dedup.clusterLabelsPath(sf)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
+    graft.ingest.ArtifactCache.deleteTree(
+      java.nio.file.Paths.get(graft.operators.Dedup.ClusterLabels.path(sf)))
     val built = graft.operators.Dedup.ensureClusterLabels(spark, sf)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
