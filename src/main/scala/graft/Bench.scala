@@ -316,7 +316,7 @@ object Bench {
     * [[graft.ingest.ArtifactCache.Artifact]] under `target/graft_*`
     * keyed by its source tables' token, so a call whose artifacts
     * exist builds nothing. The bucketed tables are session-catalog
-    * state, written once per JVM. */
+    * state, written once per JVM and scale. */
   private def buildFixtures(spark: SparkSession, sfDir: String): Unit = {
     operators.ScalePatterns.ensureBucketed(spark, sfDir)
     operators.ScalePatterns.ensureDrift(spark, sfDir)

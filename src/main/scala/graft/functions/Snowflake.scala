@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Discord snowflake id ↔ event-time conversions.
+/** Discord snowflake id → event-time conversion.
   *
   * Semantics from the reference's `parseSnowflake`
   * (utils.go:290-297): ms = (id >> 22) + 1420070400000. Pure column
@@ -15,12 +15,4 @@ object Snowflake {
   /** snowflake id → epoch milliseconds. */
   def snowflakeMs(id: Column): Column =
     shiftright(id, 22) + lit(DiscordEpochMs)
-
-  /** snowflake id → TIMESTAMP (UTC instant). */
-  def snowflakeTs(id: Column): Column = timestamp_millis(snowflakeMs(id))
-
-  /** epoch ms → the smallest snowflake with that timestamp (for
-    * building time-range predicates over snowflake-keyed data). */
-  def firstSnowflakeOf(epochMs: Column): Column =
-    shiftleft(epochMs - lit(DiscordEpochMs), 22)
 }

@@ -4,7 +4,7 @@ import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -187,10 +187,15 @@ object Decisions {
       .map { case (n, c) => c.as(n) } :+
       lit(null).cast("boolean").as("incompatible_content_illegal"): _*)
 
-  private val parsedSelect: String =
-    Fields.flatMap { case (n, k) => parseSqls(n, k) }
-      .mkString(",\n    ") +
-      ",\n    CAST(NULL AS BOOLEAN) AS incompatible_content_illegal"
+  /** DuckDB twin of [[parse]] over the synthesized rows: the `synth`
+    * and `parsed` CTEs every Decision oracle starts from. */
+  private val parsedCte: String =
+    s"""$synthCte,
+       |parsed AS (
+       |  SELECT
+       |    ${Fields.flatMap { case (n, k) => parseSqls(n, k) }.mkString(",\n    ")},
+       |    CAST(NULL AS BOOLEAN) AS incompatible_content_illegal
+       |  FROM synth)""".stripMargin
 
   /** Output column order (the 40-column contract). */
   val OutCols: Seq[String] =
@@ -200,12 +205,17 @@ object Decisions {
     } :+ "incompatible_content_illegal"
 
   // ---- LWW total order ----
-  // (created_at DESC, platform_uid DESC) alone is not total: distinct
-  // rows can share a uuid, a formatted-second created_at AND the
-  // 'oneword' platform_uid, leaving the winner engine-arbitrary. A
-  // deterministic md5 over every remaining column makes the order
-  // total over DISTINCT rows (rows equal in all 40 columns tie, but
-  // then any winner is the same row), identically on both engines.
+  // (created_at, platform_uid) alone is not total: distinct rows can
+  // share a uuid, a formatted-second created_at AND the 'oneword'
+  // platform_uid, leaving the winner engine-arbitrary. A deterministic
+  // md5 over every remaining column makes the order total over
+  // DISTINCT rows (rows equal in all 40 columns tie, but then any
+  // winner is the same row), identically on every engine. Every form
+  // of the order below derives from [[LwwKeys]] plus that hash.
+
+  /** The LWW keys, most significant first; the row hash is the final
+    * key. The larger key wins (newest created_at first). */
+  private val LwwKeys: Seq[String] = Seq("created_at", "platform_uid")
 
   /** Columns feeding the row-hash tiebreak — every output column
     * except the always-null typed bool. */
@@ -217,17 +227,14 @@ object Decisions {
 
   /** SQL twin of [[rowHash]] (md5 hex is lowercase in DuckDB and
     * Postgres alike) with a column-qualifier prefix — `""` for the
-    * oracle CTEs, `"EXCLUDED."`/`"t."` for the upsert-guard SQL. */
+    * oracle CTEs, `"EXCLUDED."`/`"t."` for the upsert guard. */
   def rowHashSqlFor(prefix: String): String = "md5(concat_ws(chr(1), " +
     TiebreakCols.map(c => s"coalesce(CAST($prefix$c AS VARCHAR), chr(0))").mkString(", ") + "))"
-
-  /** DuckDB twin of [[rowHash]]. */
-  val rowHashSql: String = rowHashSqlFor("")
 
   /** JVM twin of [[rowHash]] for cross-micro-batch comparison on
     * collected rows (casts mirror Spark's string casts: longs print
     * bare, booleans lowercase). */
-  def rowHashJvm(r: org.apache.spark.sql.Row): String = {
+  def rowHashJvm(r: Row): String = {
     val s = TiebreakCols.map { c =>
       val v = r.getAs[Any](c)
       if (v == null) "\u0000" else String.valueOf(v)
@@ -237,10 +244,34 @@ object Decisions {
       .map(b => f"$b%02x").mkString
   }
 
-  /** The full LWW ordering, newest-first: created_at DESC,
-    * platform_uid DESC, row-hash DESC. */
-  def lwwOrder: Seq[Column] =
-    Seq(col("created_at").desc, col("platform_uid").desc, rowHash.desc)
+  private def lwwKeyCols: Seq[Column] = LwwKeys.map(col) :+ rowHash
+
+  private def lwwKeySqls(prefix: String): Seq[String] =
+    LwwKeys.map(prefix + _) :+ rowHashSqlFor(prefix)
+
+  /** SQL `ORDER BY` list of the LWW order, every key `dir` (ASC/DESC). */
+  private def lwwOrderSql(dir: String): String =
+    lwwKeySqls("").map(k => s"$k $dir").mkString(", ")
+
+  /** The full LWW ordering, newest-first. */
+  def lwwOrder: Seq[Column] = lwwKeyCols.map(_.desc)
+
+  /** The upsert guard: the incoming row (`EXCLUDED.`) replaces the
+    * stored one (`t.`) only if it wins the LWW order — the row hash
+    * computed in SQL over the stored columns, so the guard needs no
+    * extra column. [[graft.streaming.StreamDecisions]] passes it to
+    * the sink's replay; its store fake applies [[beats]], the same
+    * predicate. */
+  val lwwGuardSql: String =
+    s"(${lwwKeySqls("EXCLUDED.").mkString(", ")}) > (${lwwKeySqls("t.").mkString(", ")})"
+
+  /** True iff `a` beats `b` under the LWW order — the JVM twin of
+    * [[lwwOrder]] and [[lwwGuardSql]]. created_at is a
+    * `yyyy-MM-dd HH:mm:ss` string, so lexicographic IS chronological. */
+  private[graft] def beats(a: Row, b: Row): Boolean = {
+    def key(r: Row): Seq[String] = LwwKeys.map(k => r.getAs[String](k)) :+ rowHashJvm(r)
+    Ordering.Implicits.seqOrdering[Seq, String].gt(key(a), key(b))
+  }
 
   // ---- queries ----
 
@@ -253,24 +284,24 @@ object Decisions {
     * there are thousands of daily archives, but the redistribution
     * costs one shuffle of raw strings and must not gate on archive
     * count. */
-  def decisionRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val fixture = DecisionFixture.ensure(s, dir)
-    val shuffleP = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val raw = ZipCsv.read(s, fixture, FieldNames).drop("_src").repartition(shuffleP)
-    val parsed = parse(raw).filter(col("uuid") =!= "")
-    Upsert.lastWriteWins(parsed, Seq("uuid"), lwwOrder)
+  def decisionRoundtrip(s: SparkSession, dir: String): DataFrame =
+    Upsert.lastWriteWins(parsedKeyed(s, dir), Seq("uuid"), lwwOrder)
       .select(OutCols.map(col): _*)
+
+  /** The fixture read, repartitioned, parsed, with missing-UUID rows
+    * dropped — the common prefix of the keyed Decision queries. */
+  private def parsedKeyed(s: SparkSession, dir: String): DataFrame = {
+    val shuffleP = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val raw = ZipCsv.read(s, DecisionFixture.ensure(s, dir), FieldNames)
+      .drop("_src").repartition(shuffleP)
+    parse(raw).filter(col("uuid") =!= "")
   }
 
   val decisionRoundtripSql: String =
-    s"""$synthCte,
-       |parsed AS (
-       |  SELECT
-       |    $parsedSelect
-       |  FROM synth)
+    s"""$parsedCte
        |SELECT ${OutCols.mkString(", ")} FROM (
        |  SELECT *, row_number() OVER (PARTITION BY uuid
-       |    ORDER BY created_at DESC, platform_uid DESC, $rowHashSql DESC) AS rn
+       |    ORDER BY ${lwwOrderSql("DESC")}) AS rn
        |  FROM parsed WHERE uuid <> '')
        |WHERE rn = 1""".stripMargin
 
@@ -292,11 +323,7 @@ object Decisions {
   }
 
   val decisionQualitySql: String =
-    s"""$synthCte,
-       |parsed AS (
-       |  SELECT
-       |    $parsedSelect
-       |  FROM synth)
+    s"""$parsedCte
        |SELECT count(*) AS n_rows,
        |  sum(CASE WHEN uuid = '' THEN 1 ELSE 0 END)::BIGINT AS n_missing_uuid,
        |  sum(CASE WHEN end_date_visibility_restriction IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_bad_ts,
@@ -325,13 +352,8 @@ object Decisions {
     * standalone 1.62 is the suite effect (JIT-warm small-SF
     * denominator, contended headline numerator), not a plan term. */
   def scd2History(s: SparkSession, dir: String): DataFrame = {
-    val fixture = DecisionFixture.ensure(s, dir)
-    val shuffleP = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val raw = ZipCsv.read(s, fixture, FieldNames).drop("_src").repartition(shuffleP)
-    val parsed = parse(raw).filter(col("uuid") =!= "")
-    val w = Window.partitionBy(col("uuid"))
-      .orderBy(col("created_at").asc, col("platform_uid").asc, rowHash.asc)
-    parsed
+    val w = Window.partitionBy(col("uuid")).orderBy(lwwKeyCols.map(_.asc): _*)
+    parsedKeyed(s, dir)
       .withColumn("version", row_number().over(w))
       .withColumn("valid_to", lead(col("created_at"), 1).over(w))
       .select(col("uuid"), col("version"),
@@ -341,11 +363,7 @@ object Decisions {
   }
 
   val scd2HistorySql: String =
-    s"""$synthCte,
-       |parsed AS (
-       |  SELECT
-       |    $parsedSelect
-       |  FROM synth)
+    s"""$parsedCte
        |SELECT uuid, version, valid_from, valid_to,
        |  valid_to IS NULL AS is_current, platform_name, content_language
        |FROM (
@@ -356,7 +374,7 @@ object Decisions {
        |    platform_name, content_language
        |  FROM parsed WHERE uuid <> ''
        |  WINDOW w AS (PARTITION BY uuid
-       |    ORDER BY created_at ASC, platform_uid ASC, $rowHashSql ASC))""".stripMargin
+       |    ORDER BY ${lwwOrderSql("ASC")}))""".stripMargin
 }
 
 /** Zip-of-CSV fixtures carrying the full 36-field Decision records —
@@ -383,18 +401,8 @@ object DecisionFixture {
       // driver-side by design: fabricates the dump archives a cluster
       // would fetch from object storage
       val names = Decisions.FieldNames
+      // the CSV carries only the 36 Decision cols, not event_id
       val rows = Decisions.synth(s, dir).orderBy("event_id").collect()
-      def csv(header: Seq[String], rs: Seq[org.apache.spark.sql.Row]): Array[Byte] = {
-        val sb = new StringBuilder(header.mkString(","))
-        sb.append('\n')
-        rs.foreach { r =>
-          // field 0 is event_id; CSV carries only the 36 Decision cols
-          sb.append(header.map(h => Csv.quote(String.valueOf(r.get(names.indexOf(h) + 1))))
-            .mkString(","))
-          sb.append('\n')
-        }
-        sb.toString.getBytes(StandardCharsets.UTF_8)
-      }
       val chunk = math.max(1, (rows.length + NumArchives - 1) / NumArchives)
       rows.grouped(chunk).zipWithIndex.foreach { case (dayRows, i) =>
         val day = f"day_$i%02d"
@@ -404,14 +412,14 @@ object DecisionFixture {
           val nested = new java.io.ByteArrayOutputStream()
           val nz = new ZipOutputStream(nested)
           nz.putNextEntry(new ZipEntry(s"$day.csv"))
-          nz.write(csv(names.reverse, dayRows))
+          nz.write(Csv.render(names.reverse, dayRows))
           nz.closeEntry()
           nz.close()
           z.putNextEntry(new ZipEntry("inner.zip"))
           z.write(nested.toByteArray)
         } else {
           z.putNextEntry(new ZipEntry(s"$day.csv"))
-          z.write(csv(names, dayRows))
+          z.write(Csv.render(names, dayRows))
         }
         z.closeEntry()
         z.close()

@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
@@ -102,14 +101,8 @@ object FetchFixture {
       val rows = Tables.documents(s, dir).select(Cols.head, Cols.tail: _*)
         .orderBy("doc_id").collect()
       (0 until 3).foreach { part =>
-        val sb = new StringBuilder(Cols.mkString(","))
-        sb.append('\n')
-        rows.filter(r => r.getLong(0) % 3 == part).foreach { r =>
-          sb.append(Cols.indices.map(i => Csv.quote(String.valueOf(r.get(i)))).mkString(","))
-          sb.append('\n')
-        }
         Files.write(Paths.get(tmp, s"part_$part.csv"),
-          sb.toString.getBytes(StandardCharsets.UTF_8))
+          Csv.render(Cols, rows.filter(r => r.getLong(0) % 3 == part)))
       }
     }
 }

@@ -559,37 +559,26 @@ object ZipFixture {
     Fixture.ensure(dir) { tmp =>
       // fixture generation is driver-side by design (it fabricates the
       // input archives a cluster would fetch from object storage)
-      val rows = Tables.documents(s, dir)
-        .select("doc_id", "text", "lang", "source", "n_chars")
+      val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+      val rows = Tables.documents(s, dir).select(cols.head, cols.tail: _*)
         .orderBy("doc_id").collect()
-      def csv(header: Seq[String], rs: Seq[org.apache.spark.sql.Row]): Array[Byte] = {
-        val sb = new StringBuilder(header.mkString(","))
-        sb.append('\n')
-        val srcIdx = Seq("doc_id", "text", "lang", "source", "n_chars")
-        rs.foreach { r =>
-          sb.append(header.map(h => Csv.quote(String.valueOf(r.get(srcIdx.indexOf(h)))))
-            .mkString(","))
-          sb.append('\n')
-        }
-        sb.toString.getBytes(StandardCharsets.UTF_8)
-      }
       val (aRows, rest) = rows.splitAt(rows.length / 3)
       val (bRows, cRows) = rest.splitAt(rest.length / 2)
 
       val nested = new ByteArrayOutputStream()
       val nz = new ZipOutputStream(nested)
       nz.putNextEntry(new ZipEntry("part_b.csv"))
-      nz.write(csv(Seq("doc_id", "text", "lang", "source", "n_chars"), bRows))
+      nz.write(Csv.render(cols, bRows))
       nz.closeEntry()
       nz.putNextEntry(new ZipEntry("part_c.csv"))
-      // shuffled header order: the header map must realign it
-      nz.write(csv(Seq("n_chars", "source", "lang", "text", "doc_id"), cRows))
+      // reversed header order: the header map must realign it
+      nz.write(Csv.render(cols.reverse, cRows))
       nz.closeEntry()
       nz.close()
 
       val zout = new ZipOutputStream(new FileOutputStream(s"$tmp/dump.zip"))
       zout.putNextEntry(new ZipEntry("part_a.csv"))
-      zout.write(csv(Seq("doc_id", "text", "lang", "source", "n_chars"), aRows))
+      zout.write(Csv.render(cols, aRows))
       zout.closeEntry()
       zout.putNextEntry(new ZipEntry("inner.zip"))
       zout.write(nested.toByteArray)

@@ -113,4 +113,17 @@ object Csv {
     if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
+
+  /** UTF-8 CSV text: the `header` line, then one line per row with the
+    * row's fields named by `header`, in header order (quoted as needed,
+    * null as "null") — the fixture writers' one renderer. */
+  def render(header: Seq[String], rows: Iterable[Row]): Array[Byte] = {
+    val sb = new StringBuilder(header.mkString(","))
+    sb.append('\n')
+    rows.foreach { r =>
+      sb.append(header.map(h => quote(String.valueOf(r.getAs[Any](h)))).mkString(","))
+      sb.append('\n')
+    }
+    sb.toString.getBytes(StandardCharsets.UTF_8)
+  }
 }

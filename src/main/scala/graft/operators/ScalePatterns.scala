@@ -82,9 +82,9 @@ object ScalePatterns {
     * between re-shuffling the fact table per query and reading
     * co-located buckets. Result (and oracle) = the plain join. */
   def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    ensureBucketed(s, dir)
-    val o = s.table("orders_b")
-    val l = s.table("lineitem_b")
+    val (ordersB, lineitemB) = ensureBucketed(s, dir)
+    val o = s.table(ordersB)
+    val l = s.table(lineitemB)
     // merge hint: at toy scale AQE would broadcast instead, hiding
     // the property under test — bucketed SMJ with no exchange/sort
     l.join(o.hint("merge"), col("l_orderkey") === col("o_orderkey"))
@@ -108,29 +108,30 @@ object ScalePatterns {
   /** One-time bucketed-table fixture per orders/lineitem content (16
     * buckets on the join key, sorted within buckets → shuffle-free
     * sort-merge). The bucket spec lives in the session catalog, not
-    * in the files, so these are catalog tables tagged with the
-    * sources' [[graft.ingest.ArtifactCache.token]] rather than
-    * artifact dirs; the lock serializes the drop-and-recreate of
-    * shared catalog state. */
-  def ensureBucketed(s: SparkSession, dir: String): Unit = synchronized {
+    * in the files, so these are catalog tables rather than artifact
+    * dirs; their names carry the sources'
+    * [[graft.ingest.ArtifactCache.token]], so each scale keeps its own
+    * pair. Returns the (orders, lineitem) table names; the lock
+    * serializes the drop-and-recreate of shared catalog state. */
+  def ensureBucketed(s: SparkSession, dir: String): (String, String) = synchronized {
     val tag = graft.ingest.ArtifactCache.token(dir, Seq("orders", "lineitem"), "buckets=16")
-    if (!s.catalog.tableExists("orders_b") ||
-        s.conf.getOption("graft.bucketed.tag").getOrElse("") != tag) {
+    val names @ (ordersB, lineitemB) = (s"orders_b_$tag", s"lineitem_b_$tag")
+    if (!s.catalog.tableExists(ordersB) || !s.catalog.tableExists(lineitemB)) {
       // the warehouse dir outlives the in-memory catalog across JVMs;
       // clear both so saveAsTable never hits LOCATION_ALREADY_EXISTS
-      Seq("orders_b", "lineitem_b").foreach { t =>
+      Seq(ordersB, lineitemB).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
         graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(
           s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
       }
       orders(s, dir).select("o_orderkey", "o_orderpriority")
         .write.mode("overwrite").bucketBy(16, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable("orders_b")
+        .saveAsTable(ordersB)
       lineitem(s, dir).select("l_orderkey", "l_extendedprice")
         .write.mode("overwrite").bucketBy(16, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable("lineitem_b")
-      s.conf.set("graft.bucketed.tag", tag)
+        .saveAsTable(lineitemB)
     }
+    names
   }
 
   /** Partition-pruned scan: events written date-partitioned (the

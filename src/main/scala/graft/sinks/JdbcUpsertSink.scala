@@ -12,16 +12,19 @@ import org.apache.spark.sql.{DataFrame, Row}
   * Spark-first shape: the DataFrame is deduped/partitioned upstream
   * (see ingest.Upsert); each partition opens one connection and
   * writes its rows in `batchSize` chunks, committing once per
-  * partition — N executors write N independent transactions, the
-  * per-partition idempotence coming from the upsert statement. No
+  * partition — N executors write N independent transactions. No
   * driver-side collect at any scale.
   *
-  * Two statement dialects: Postgres `ON CONFLICT` (the reference's
-  * target) and ANSI `MERGE` (via `mergeTypes`) for engines without
-  * it. The full path — driver-manager connection, per-partition
-  * transaction, batch, 23505 retry, guarded LWW — is integration-
-  * tested against embedded Derby (DerbySinkSpec), which raises the
-  * SAME 23505 duplicate-key SQLSTATE the reference string-matches.
+  * One write path, [[writeOptimistic]]: a plain INSERT, replayed as
+  * an upsert on a duplicate-key conflict. The replay carries the
+  * caller's optional guard, so a guarded insert-then-replay leaves
+  * the same table as a guarded upsert. Two statement dialects:
+  * Postgres `ON CONFLICT` (the reference's target) and ANSI `MERGE`
+  * (via `mergeTypes`) for engines without it. The full path —
+  * driver-manager connection, per-partition transaction, batch,
+  * 23505 replay, guarded LWW — is integration-tested against
+  * embedded Derby (DerbySinkSpec), which raises the SAME 23505
+  * duplicate-key SQLSTATE the reference string-matches.
   */
 object JdbcUpsertSink {
 
@@ -35,7 +38,7 @@ object JdbcUpsertSink {
     * keeps a later micro-batch carrying an OLDER row from overwriting
     * the newer stored one. Without a guard that invariant does NOT
     * hold on a real database — a caller that needs it must pass one
-    * (see [[graft.streaming.StreamDecisions.lwwGuardSql]]). */
+    * (see [[graft.ingest.Decisions.lwwGuardSql]]). */
   def upsertSql(table: String, columns: Seq[String], key: String,
                 guard: String = null): String = {
     require(columns.contains(key), s"key $key not in $columns")
@@ -60,7 +63,7 @@ object JdbcUpsertSink {
     * typed parameter markers over `SYSIBM.SYSDUMMY1`; each column may
     * therefore bind MORE than once (ON, guard, UPDATE SET, INSERT) —
     * the returned `Seq[Int]` maps statement-parameter position →
-    * row-column index, in appearance order, for [[write]]'s batch
+    * row-column index, in appearance order, for the replay's batch
     * binder. `types` are the SQL types the untyped markers are CAST
     * to (Derby requires the cast). `guard` references the incoming
     * row as `v.<col>` and the stored one as `t.<col>`; it becomes
@@ -125,49 +128,11 @@ object JdbcUpsertSink {
   }
 
   /** Run [[ddlSql]] once on a connection — the migrate step a
-    * production pipeline calls before its first [[write]]. */
+    * production pipeline calls before its first [[writeOptimistic]]. */
   def migrate(conn: Connection, table: String,
               schema: org.apache.spark.sql.types.StructType, key: String): Unit = {
     val st = conn.createStatement()
     try st.execute(ddlSql(table, schema, key)) finally st.close()
-  }
-
-  /** Row count of each `batchSize` chunk of `n` rows — the batching
-    * math, shared by `write` and the driver-facing query. */
-  def batchSizes(n: Long, batchSize: Int): Seq[Long] =
-    (0L until (n + batchSize - 1) / batchSize)
-      .map(b => math.min(batchSize.toLong, n - b * batchSize))
-
-  /** Upsert `df` into `table` over JDBC, one transaction per
-    * partition, `batchSize`-row executeBatch chunks. `connect` is
-    * injectable (same contract as [[writeOptimistic]]) so the
-    * no-database container can drive the FULL foreachPartition
-    * control flow against a fake/store-backed connection — the
-    * default is the standard driver-manager path. */
-  def write(df: DataFrame, url: String, table: String, key: String,
-            batchSize: Int = 1000, props: java.util.Properties = new java.util.Properties,
-            connect: String => Connection = null, guard: String = null,
-            mergeTypes: Seq[String] = null): Unit = {
-    val mkConn: String => Connection =
-      if (connect != null) connect else u => DriverManager.getConnection(u, props)
-    val columns = df.columns.toSeq
-    // mergeTypes switches the statement to the ANSI MERGE dialect
-    // (engines without ON CONFLICT); guard syntax follows the dialect
-    val (sql, order) =
-      if (mergeTypes == null) (upsertSql(table, columns, key, guard), columns.indices.toSeq)
-      else mergeSql(table, columns, mergeTypes, key, guard)
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
-        val conn: Connection = mkConn(url)
-        try {
-          conn.setAutoCommit(false)
-          execBatches(conn, sql, rows, order, batchSize)
-          conn.commit()
-        } catch {
-          case e: Throwable => rollbackAndRethrow(conn, e)
-        } finally conn.close()
-      }
-    }
   }
 
   /** SQLSTATE for unique-violation — what the reference string-matches
@@ -187,27 +152,32 @@ object JdbcUpsertSink {
     case _ => isDuplicateKey(e.getCause)
   }
 
-  /** The reference's optimistic control flow (main.go:176-201): try
-    * the plain INSERT first (cheapest when the day's dump is new);
-    * on a duplicate-key conflict roll back and replay the same rows
-    * as ON-CONFLICT upserts. Per partition the rows are buffered for
-    * the possible second pass — the direct analog of the reference
-    * holding one zip's decisions; a partition is the unit of retry
-    * exactly as a zip is there. */
+  /** Write `df` into `table` over JDBC with the reference's optimistic
+    * control flow (main.go:176-201): try the plain INSERT first
+    * (cheapest when the day's dump is new); on a duplicate-key
+    * conflict roll back and replay the same rows as upserts — ON
+    * CONFLICT, or MERGE when `mergeTypes` is given — conditional on
+    * `guard` when one is given (syntax per dialect, see [[upsertSql]]
+    * and [[mergeSql]]). One transaction per partition,
+    * `batchSize`-row executeBatch chunks. Per partition the rows are
+    * buffered for the possible second pass — the direct analog of the
+    * reference holding one zip's decisions; a partition is the unit
+    * of retry exactly as a zip is there. `connect` is injectable so
+    * a no-database container can drive the full control flow against
+    * a fake connection; the default is the driver-manager path. */
   def writeOptimistic(df: DataFrame, url: String, table: String, key: String,
                       batchSize: Int = 1000,
                       props: java.util.Properties = new java.util.Properties,
-                      // injectable for the no-DB test container; the
-                      // default is the standard driver-manager path
                       connect: String => Connection = null,
-                      mergeTypes: Seq[String] = null): Unit = {
+                      mergeTypes: Seq[String] = null,
+                      guard: String = null): Unit = {
     val mkConn: String => Connection =
       if (connect != null) connect else u => DriverManager.getConnection(u, props)
     val columns = df.columns.toSeq
     val ins = insertSql(table, columns)
     val (ups, order) =
-      if (mergeTypes == null) (upsertSql(table, columns, key), columns.indices.toSeq)
-      else mergeSql(table, columns, mergeTypes, key)
+      if (mergeTypes == null) (upsertSql(table, columns, key, guard), columns.indices.toSeq)
+      else mergeSql(table, columns, mergeTypes, key, guard)
     df.foreachPartition { rows: Iterator[Row] =>
       val buf = rows.toArray
       if (buf.nonEmpty) {

@@ -15,8 +15,10 @@ import graft.ingest.{Decisions, Upsert}
   * semantics).
   *
   * The sink IS the production path: each micro-batch goes through
-  * `JdbcUpsertSink.write` — foreachPartition on executor threads, one
-  * transaction per partition, no driver-side collect at any scale.
+  * the batch ingest's one write path, `JdbcUpsertSink.writeOptimistic`
+  * — foreachPartition on executor threads, one transaction per
+  * partition, no driver-side collect at any scale — with
+  * [[Decisions.lwwGuardSql]] on its duplicate-key replay.
   * The container has no database, so the injectable connection
   * factory points at [[storeConnection]], an in-memory uuid-keyed
   * stand-in for the Postgres table with the same conditional-upsert
@@ -44,16 +46,19 @@ object StreamDecisions {
   }
 
   /** Store-backed `java.sql.Connection`: what stands in for Postgres
-    * in the no-database container. [[graft.sinks.JdbcUpsertSink.write]]
-    * drives it per PARTITION on executor threads with the production
-    * control flow (prepare → setObject×40 → addBatch → executeBatch
-    * per 1000 → commit) — no driver-side collect anywhere; a real
-    * deployment passes the JDBC url and drops this factory, changing
-    * nothing else. executeBatch applies the conditional upsert: a row
-    * replaces the stored one only if it [[beats]] it — the SAME
-    * predicate the production SQL carries, because [[run]] passes
-    * [[lwwGuardSql]] to the sink (an unguarded upsert would NOT give
-    * cross-batch LWW on a real database).
+    * in the no-database container.
+    * [[graft.sinks.JdbcUpsertSink.writeOptimistic]] drives it per
+    * PARTITION on executor threads with the production control flow
+    * (prepare → setObject×40 → addBatch → executeBatch per 1000 →
+    * commit) — no driver-side collect anywhere; a real deployment
+    * passes the JDBC url and drops this factory, changing nothing
+    * else. The fake ignores statement text and raises no duplicate-key
+    * error: executeBatch applies the conditional upsert to the plain
+    * INSERT already — a row replaces the stored one only if it
+    * [[Decisions.beats]] it, the SAME predicate the production replay
+    * carries, because [[upsertBatch]] passes [[Decisions.lwwGuardSql]]
+    * to the sink (an unguarded replay would NOT give cross-batch LWW
+    * on a real database).
     * (The shared-JVM Store is a local-mode artifact; on a cluster the
     * database itself is the shared store.) */
   private[graft] def storeConnection(schema: StructType): java.sql.Connection = {
@@ -98,55 +103,31 @@ object StreamDecisions {
       }).asInstanceOf[java.sql.Connection]
   }
 
-  /** True iff `a` beats `b` under the LWW total order (created_at
-    * DESC, platform_uid DESC, row-hash DESC) — the cross-batch twin
-    * of [[Decisions.lwwOrder]]. created_at is a `yyyy-MM-dd HH:mm:ss`
-    * string, so lexicographic IS chronological. */
-  private[graft] def beats(a: Row, b: Row): Boolean = {
-    def key(r: Row) = (r.getAs[String]("created_at"),
-      r.getAs[String]("platform_uid"), Decisions.rowHashJvm(r))
-    Ordering[(String, String, String)].gt(key(a), key(b))
-  }
-
-  /** The production-SQL twin of [[beats]]: the upsert's DO UPDATE
-    * fires only when the incoming row wins the LWW order, with the
-    * row-hash tiebreak computed IN SQL over the stored columns
-    * (md5 is identical in Postgres), so the guard needs no extra
-    * column. [[run]] passes this to [[graft.sinks.JdbcUpsertSink
-    * .write]]; the store fake's [[mergeRow]] applies the same
-    * predicate row-wise — fake and SQL agree. */
-  val lwwGuardSql: String =
-    s"(EXCLUDED.created_at, EXCLUDED.platform_uid, ${Decisions.rowHashSqlFor("EXCLUDED.")})" +
-      s" > (t.created_at, t.platform_uid, ${Decisions.rowHashSqlFor("t.")})"
-
   /** ON CONFLICT (uuid) DO UPDATE ... WHERE excluded wins (the
-    * [[lwwGuardSql]] guard): a row replaces the stored one only if it
-    * beats it, so last-write-wins holds across micro-batches even
-    * when the file source splits the input (maxFilesPerTrigger, late
-    * staging) and a later batch carries an OLDER row. */
+    * [[Decisions.lwwGuardSql]] guard): a row replaces the stored one
+    * only if it beats it, so last-write-wins holds across micro-batches
+    * even when the file source splits the input (maxFilesPerTrigger,
+    * late staging) and a later batch carries an OLDER row. */
   private[graft] def mergeRow(r: Row): Unit = {
     Store.merges.incrementAndGet()
     val k = r.getAs[String]("uuid")
     Store.rows.get(k) match {
-      case Some(cur) if !beats(r, cur) => // stored row is newer: keep
+      case Some(cur) if !Decisions.beats(r, cur) => // stored row is newer: keep
       case _ => Store.rows.put(k, r)
     }
   }
 
-  private[graft] def mergeBatch(rows: Iterable[Row]): Unit =
-    rows.foreach(mergeRow)
-
   /** One micro-batch through THE production sink: per-batch LWW, then
-    * JdbcUpsertSink.write — foreachPartition on executor threads (no
-    * driver-side collect at any scale) against the store-backed
-    * connection; a deployment with a database passes its JDBC url
-    * instead. */
+    * JdbcUpsertSink.writeOptimistic with the LWW guard on its replay —
+    * foreachPartition on executor threads (no driver-side collect at
+    * any scale) against the store-backed connection; a deployment
+    * with a database passes its JDBC url instead. */
   private[graft] def upsertBatch(batch: DataFrame): Unit = {
     val lww = Upsert.lastWriteWins(batch, Seq("uuid"), Decisions.lwwOrder)
     val schema = lww.schema
     Store.schema = schema
-    graft.sinks.JdbcUpsertSink.write(lww, "jdbc:store", "decisions", "uuid",
-      connect = _ => storeConnection(schema), guard = lwwGuardSql)
+    graft.sinks.JdbcUpsertSink.writeOptimistic(lww, "jdbc:store", "decisions", "uuid",
+      connect = _ => storeConnection(schema), guard = Decisions.lwwGuardSql)
   }
 
   /** The runnable pipeline: watched staging dir → parse → LWW upsert

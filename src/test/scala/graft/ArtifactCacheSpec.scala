@@ -4,8 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import ingest.ArtifactCache.{Artifact, deleteTree}
 
 /** The write-once artifact lifecycle. The invalidation token: any
@@ -149,31 +147,7 @@ class ArtifactCacheSpec extends SparkSpec {
 
   test("an existing fixture is found without running a Spark job") {
     ingest.ZipFixture.ensure(spark, sf) // build it, or find it built
-    val sc = spark.sparkContext
-    val group = s"fixture_lookup_${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger()
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group.marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "zipcsv_read fixture lookup")
-      ingest.ZipFixture.ensure(spark, sf)
-      // listener events arrive in order: once the marker job is seen,
-      // every job the lookup started has been counted
-      sc.setJobGroup(s"$group.marker", "marker")
-      spark.range(1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
-      assert(jobs.get == 0, s"the fixture lookup ran ${jobs.get} Spark job(s)")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val jobs = jobsRunBy(ingest.ZipFixture.ensure(spark, sf))
+    assert(jobs == 0, s"the fixture lookup ran $jobs Spark job(s)")
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.ingest.Decisions
+import graft.ingest.{Decisions, Upsert}
 
 class DecisionsSpec extends SparkSpec {
 
@@ -95,15 +96,35 @@ class DecisionsSpec extends SparkSpec {
       newer.toSeq.toArray.updated(caIdx, "1999-01-01 00:00:00": Any), newer.schema)
     // newer first, older in a later batch: the put must NOT overwrite
     StreamDecisions.Store.rows.clear()
-    StreamDecisions.mergeBatch(Seq(newer))
-    StreamDecisions.mergeBatch(Seq(older))
+    StreamDecisions.mergeRow(newer)
+    StreamDecisions.mergeRow(older)
     assert(StreamDecisions.Store.rows(newer.getAs[String]("uuid")) eq newer)
     // older first, newer later: the put must overwrite
     StreamDecisions.Store.rows.clear()
-    StreamDecisions.mergeBatch(Seq(older))
-    StreamDecisions.mergeBatch(Seq(newer))
+    StreamDecisions.mergeRow(older)
+    StreamDecisions.mergeRow(newer)
     assert(StreamDecisions.Store.rows(newer.getAs[String]("uuid")) eq newer)
     StreamDecisions.Store.rows.clear()
+  }
+
+  test("lwwOrder and beats pick the same winner on every key: created_at, platform_uid, row hash") {
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    val base = rt.limit(1).collect()(0).asInstanceOf[GenericRowWithSchema]
+    def row(vals: (String, Any)*): Row = new GenericRowWithSchema(vals.foldLeft(base.toSeq.toArray) {
+      case (vs, (c, v)) => vs.updated(base.schema.fieldIndex(c), v) }, base.schema)
+    // one uuid per pair; a pair ties on every LWW key before the one
+    // its change decides (content_language leaves only the row hash)
+    val pairs = Seq("created_at" -> "1999-01-01 00:00:00", "platform_uid" -> "0-0-user",
+      "content_language" -> "zz_hash_only").map { case (c, v) => (row("uuid" -> c), row("uuid" -> c, c -> v)) }
+    pairs.foreach { case (a, b) => assert(Decisions.beats(a, b) != Decisions.beats(b, a)) }
+    val expected = pairs.map { case (a, b) =>
+      a.getAs[String]("uuid") -> (if (Decisions.beats(a, b)) a else b).toSeq }.toMap
+    val got = Upsert.lastWriteWins(
+      spark.createDataFrame(spark.sparkContext.parallelize(pairs.flatMap(p => Seq(p._1, p._2)), 2),
+        base.schema),
+      Seq("uuid"), Decisions.lwwOrder).collect()
+      .map(r => r.getAs[String]("uuid") -> r.toSeq).toMap
+    assert(got == expected)
   }
 
   test("scd2_history: contiguous versions, one current row agreeing with LWW") {

@@ -14,7 +14,7 @@ import graft.sinks.JdbcUpsertSink
   * per-partition transactions, prepared-statement batches, a genuine
   * duplicate-key failure carrying the reference's 23505 SQLSTATE
   * (main.go:191-201 — Derby and Postgres share it), the retry-as-
-  * upsert replay, the guarded LWW merge, and Spark's own JDBC source
+  * upsert replay with the guarded LWW merge, and Spark's own JDBC source
   * reading the table back.
   */
 class DerbySinkSpec extends SparkSpec {
@@ -63,8 +63,8 @@ class DerbySinkSpec extends SparkSpec {
     assert(tableRows(url).keySet == Set(1L, 2L, 3L))
 
     // second wave overlaps key 2 — the plain INSERT must fail with a
-    // genuine Derby 23505, roll back, and replay as unguarded MERGE
-    // (last write wins unconditionally, like the reference's
+    // genuine Derby 23505, roll back, and replay as MERGE (no guard:
+    // last write wins unconditionally, like the reference's
     // UpdateAll:true), also carrying a brand-new key
     JdbcUpsertSink.writeOptimistic(df(
       (2L, "b2", "2024-02-01 00:00:00"),
@@ -77,11 +77,12 @@ class DerbySinkSpec extends SparkSpec {
 
   test("write on Derby with LWW guard: newer incoming row updates, older one is kept out") {
     val url = freshDb("g2")
-    JdbcUpsertSink.write(df(
+    JdbcUpsertSink.writeOptimistic(df(
       (1L, "stored", "2024-06-01 00:00:00"),
       (2L, "stored", "2024-06-01 00:00:00")), url, "d", "k", mergeTypes = mergeTypes)
-    // guard in the MERGE dialect: incoming row is v., stored is t.
-    JdbcUpsertSink.write(df(
+    // keys 1 and 2 hit a real 23505 on the plain INSERT; the guard
+    // rides on the MERGE replay (incoming row is v., stored is t.)
+    JdbcUpsertSink.writeOptimistic(df(
       (1L, "newer", "2024-07-01 00:00:00"),   // wins the guard
       (2L, "older", "2024-01-01 00:00:00"),   // loses: no update
       (3L, "fresh", "2024-05-01 00:00:00")),  // unmatched: insert
@@ -96,7 +97,7 @@ class DerbySinkSpec extends SparkSpec {
   test("write on Derby: batch chunking survives a real executeBatch (batchSize < rows per partition)") {
     val url = freshDb("g3")
     val many = (1L to 57L).map(i => (i, s"v$i", f"2024-01-01 00:00:${i % 60}%02d"))
-    JdbcUpsertSink.write(df(many: _*), url, "d", "k",
+    JdbcUpsertSink.writeOptimistic(df(many: _*), url, "d", "k",
       batchSize = 10, mergeTypes = mergeTypes)
     val rows = tableRows(url)
     assert(rows.size == 57)
@@ -119,7 +120,7 @@ class DerbySinkSpec extends SparkSpec {
       .write.mode("append").format("jdbc")
       .option("url", url).option("dbtable", "d").save()
     // ...and the sink upserts on top of it
-    JdbcUpsertSink.write(df((2L, "merged", "2024-02-01 00:00:00")),
+    JdbcUpsertSink.writeOptimistic(df((2L, "merged", "2024-02-01 00:00:00")),
       url, "d", "k", mergeTypes = mergeTypes)
     val rows = tableRows(url)
     assert(rows(1L)._1 == "bulk" && rows(2L)._1 == "merged")

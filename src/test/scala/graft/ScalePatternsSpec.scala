@@ -29,6 +29,24 @@ class ScalePatternsSpec extends SparkSpec {
       Tables.lineitem(spark, sf).count())
   }
 
+  test("ensureBucketed: each scale keeps its own tables; returning to a built scale runs no job") {
+    val other = java.nio.file.Files.createTempDirectory("bucketed_scale").toString
+    Seq("orders" -> Tables.orders(spark, sf), "lineitem" -> Tables.lineitem(spark, sf))
+      .foreach { case (t, df) => df.limit(100).coalesce(1).write.parquet(s"$other/$t.parquet") }
+    val a = ScalePatterns.ensureBucketed(spark, sf)
+    val b = ScalePatterns.ensureBucketed(spark, other)
+    try {
+      assert(a != b, s"two scales share the bucketed tables $a")
+      var again: (String, String) = null
+      val jobs = jobsRunBy { again = ScalePatterns.ensureBucketed(spark, sf) }
+      assert(again == a)
+      assert(jobs == 0, s"returning to a built scale ran $jobs Spark job(s)")
+    } finally {
+      Seq(b._1, b._2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(other))
+    }
+  }
+
   test("pruned_scan: only the 3 filtered date partitions are read") {
     val df = run("pruned_scan")
     val p = df.queryExecution.executedPlan.toString

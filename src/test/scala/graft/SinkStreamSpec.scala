@@ -23,7 +23,7 @@ class SinkStreamSpec extends SparkSpec {
       "WHERE EXCLUDED.reason > t.reason")
     // the stream_decisions guard compares the LWW triple on both
     // sides, with the row-hash tiebreak computed in SQL
-    val g = graft.streaming.StreamDecisions.lwwGuardSql
+    val g = graft.ingest.Decisions.lwwGuardSql
     assert(g.startsWith("(EXCLUDED.created_at, EXCLUDED.platform_uid, md5(concat_ws(chr(1)"))
     assert(g.contains(" > (t.created_at, t.platform_uid, md5(concat_ws(chr(1)"))
     assert(g.contains("EXCLUDED.decision_visibility") && g.contains("t.decision_visibility"))
@@ -57,10 +57,16 @@ class SinkStreamSpec extends SparkSpec {
     assert(FakeDb.entries.exists(e => e.startsWith("exec:CREATE TABLE IF NOT EXISTS decisions")))
   }
 
+  /** Row count of each `batchSize` chunk of `n` rows — the sink's
+    * batching math, recomputed independently of its executeBatch loop. */
+  private def batchSizes(n: Long, batchSize: Int): Seq[Long] =
+    (0L until (n + batchSize - 1) / batchSize)
+      .map(b => math.min(batchSize.toLong, n - b * batchSize))
+
   test("batchSizes: 1000-row chunking matches the reference's batching") {
-    assert(JdbcUpsertSink.batchSizes(2500, 1000) == Seq(1000L, 1000L, 500L))
-    assert(JdbcUpsertSink.batchSizes(1000, 1000) == Seq(1000L))
-    assert(JdbcUpsertSink.batchSizes(0, 1000).isEmpty)
+    assert(batchSizes(2500, 1000) == Seq(1000L, 1000L, 500L))
+    assert(batchSizes(1000, 1000) == Seq(1000L))
+    assert(batchSizes(0, 1000).isEmpty)
   }
 
   test("jdbc_sink query: per-writer batch sizes sum to row count, all full but last") {
@@ -438,19 +444,19 @@ class SinkStreamSpec extends SparkSpec {
     import spark.implicits._
     FakeDb.reset(failInserts = false)
     val df = (1L to 10L).map(i => (i, s"v$i")).toDF("uuid", "v").repartition(3)
-    JdbcUpsertSink.write(df, "jdbc:fake", "t", "uuid",
+    JdbcUpsertSink.writeOptimistic(df, "jdbc:fake", "t", "uuid",
       batchSize = 2, connect = FakeDb.connect)
     val log = FakeDb.entries
     // one transaction per non-empty partition
     val parts = df.mapPartitions(it => Iterator(it.size)).collect().count(_ > 0)
     assert(log.count(_ == "commit") == parts, s"commits vs partitions: $log")
     assert(!log.contains("rollback"))
-    // every statement is the ON CONFLICT upsert; chunk count matches
-    // the batching math summed over partitions
+    // every statement is the plain INSERT (no conflict, no replay);
+    // chunk count matches the batching math summed over partitions
     val execs = log.filter(_.startsWith("exec:"))
-    assert(execs.nonEmpty && execs.forall(_.contains("ON CONFLICT (uuid) DO UPDATE")))
+    assert(execs.nonEmpty && execs.forall(_ == "exec:INSERT INTO t (uuid, v) VALUES (?, ?)"))
     val expectedChunks = df.mapPartitions(it => Iterator(it.size)).collect()
-      .filter(_ > 0).map(n => JdbcUpsertSink.batchSizes(n, 2).size).sum
+      .filter(_ > 0).map(n => batchSizes(n, 2).size).sum
     assert(execs.size == expectedChunks, s"chunks: got ${execs.size}, want $expectedChunks")
   }
 
@@ -482,6 +488,19 @@ class SinkStreamSpec extends SparkSpec {
     assert(log.count(_.startsWith("exec:INSERT INTO t (uuid, v) VALUES (?, ?) ON CONFLICT")) == 2)
   }
 
+  test("writeOptimistic: the duplicate-key replay carries the guard, the INSERT does not") {
+    import spark.implicits._
+    FakeDb.reset(failInserts = true)
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("uuid", "v").coalesce(1)
+    JdbcUpsertSink.writeOptimistic(df, "jdbc:fake", "t", "uuid",
+      batchSize = 2, connect = FakeDb.connect, guard = "EXCLUDED.v > t.v")
+    val log = FakeDb.entries
+    assert(log.exists(_ == "fail:INSERT INTO t (uuid, v) VALUES (?, ?)"), s"no plain INSERT: $log")
+    val replays = log.filter(_.contains("ON CONFLICT"))
+    assert(replays == Seq.fill(2)("exec:INSERT INTO t AS t (uuid, v) VALUES (?, ?) " +
+      "ON CONFLICT (uuid) DO UPDATE SET v = EXCLUDED.v WHERE EXCLUDED.v > t.v"), s"replays: $log")
+  }
+
   test("writeOptimistic: clean insert commits without any upsert replay") {
     import spark.implicits._
     FakeDb.reset(failInserts = false)
@@ -498,9 +517,9 @@ class SinkStreamSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "b")).toDF("uuid", "v").coalesce(1)
     val writers = Seq[(String, () => Unit)](
-      "write" -> (() => JdbcUpsertSink.write(df, "jdbc:fake", "t", "uuid",
-        connect = RollbackFailDb.connect)),
-      "writeOptimistic" -> (() => JdbcUpsertSink.writeOptimistic(df, "jdbc:fake", "t",
+      "guarded" -> (() => JdbcUpsertSink.writeOptimistic(df, "jdbc:fake", "t", "uuid",
+        connect = RollbackFailDb.connect, guard = "EXCLUDED.v > t.v")),
+      "unguarded" -> (() => JdbcUpsertSink.writeOptimistic(df, "jdbc:fake", "t",
         "uuid", connect = RollbackFailDb.connect)))
     for ((name, run) <- writers) {
       val e = intercept[Exception](run())

@@ -30,4 +30,38 @@ object SharedSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   def sf: String = SharedSpark.sf
+
+  /** How many Spark jobs `body` starts on this thread, counted under a
+    * fresh job group (jobs other specs run concurrently don't count). */
+  def jobsRunBy(body: => Unit): Int = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs_run_by_${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group.marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted body")
+      body
+      // listener events arrive in order: once the marker job is seen,
+      // every job the body started has been counted
+      sc.setJobGroup(s"$group.marker", "marker")
+      spark.range(1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
