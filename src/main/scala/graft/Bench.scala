@@ -315,8 +315,9 @@ object Bench {
     * fixture the suite reads: each is an
     * [[graft.ingest.ArtifactCache.Artifact]] under `target/graft_*`
     * keyed by its source tables' token, so a call whose artifacts
-    * exist builds nothing. The bucketed tables are session-catalog
-    * state, written once per JVM and scale. */
+    * exist builds nothing. The bucketed pair is such an artifact too;
+    * each session only registers its catalog tables, which runs no
+    * job. */
   private def buildFixtures(spark: SparkSession, sfDir: String): Unit = {
     operators.ScalePatterns.ensureBucketed(spark, sfDir)
     operators.ScalePatterns.ensureDrift(spark, sfDir)

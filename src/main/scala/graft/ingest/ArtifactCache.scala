@@ -33,9 +33,12 @@ object ArtifactCache {
     * under target/, `tables` are the source tables of the scale dir
     * it derives from, `signature` the constants it depends on. */
   final case class Artifact(name: String, tables: Seq[String], signature: String) {
+    /** The token [[path]] ends in. */
+    def token(dir: String): String =
+      ArtifactCache.token(dir, tables, s"$signature;layout=$LayoutVersion")
+
     def path(dir: String): String =
-      s"target/graft_$name/${new java.io.File(dir).getName}_" +
-        token(dir, tables, s"$signature;layout=$LayoutVersion")
+      s"target/graft_$name/${new java.io.File(dir).getName}_${token(dir)}"
 
     /** Return [[path]], first running `build(tmp)` — which must write
       * the whole artifact under the directory `tmp` — and publishing
@@ -104,8 +107,8 @@ object ArtifactCache {
 
   /** Recursively delete a directory tree (or a file), deepest-first;
     * a missing path is a no-op. The one tree delete of the main tree:
-    * failed-build temp dirs here, streaming transport and staging
-    * roots, the bucketed tables' warehouse dirs. */
+    * failed-build temp dirs here, streaming run roots and staging
+    * dirs. */
   def deleteTree(root: Path): Unit =
     if (Files.exists(root)) {
       val s = Files.walk(root)

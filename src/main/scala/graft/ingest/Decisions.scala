@@ -267,10 +267,13 @@ object Decisions {
 
   /** True iff `a` beats `b` under the LWW order — the JVM twin of
     * [[lwwOrder]] and [[lwwGuardSql]]. created_at is a
-    * `yyyy-MM-dd HH:mm:ss` string, so lexicographic IS chronological. */
+    * `yyyy-MM-dd HH:mm:ss` string, so lexicographic IS chronological.
+    * A null key loses to any value, as in [[lwwOrder]]'s nulls-last
+    * descending order (a malformed timestamp parses to null). */
   private[graft] def beats(a: Row, b: Row): Boolean = {
-    def key(r: Row): Seq[String] = LwwKeys.map(k => r.getAs[String](k)) :+ rowHashJvm(r)
-    Ordering.Implicits.seqOrdering[Seq, String].gt(key(a), key(b))
+    def key(r: Row): Seq[Option[String]] =
+      LwwKeys.map(k => Option(r.getAs[String](k))) :+ Some(rowHashJvm(r))
+    Ordering.Implicits.seqOrdering[Seq, Option[String]].gt(key(a), key(b))
   }
 
   // ---- queries ----

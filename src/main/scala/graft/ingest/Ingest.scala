@@ -245,21 +245,7 @@ object Ingest {
     }.reduce(_ unionByName _)
       .select(col("file"), col("n_rows"), col("n_bytes"))
 
-  /** A8: streaming ingest — runs the actual Structured Streaming
-    * pipeline (file source → watermark → dedup-within-watermark →
-    * windowed counts) to a memory sink and returns the result. All
-    * input fits the first micro-batch here, so the watermark drops
-    * nothing and the batch twin is the oracle. */
-  def streamIngest(s: SparkSession, dir: String): DataFrame = {
-    val name = "stream_ingest_mem"
-    val q = graft.streaming.StreamIngest.runToMemory(s, dir, name)
-    q.stop()
-    // update-mode sink: counts are monotone, max(n) per key is the
-    // latest update (single wave in verify → one row each anyway)
-    s.table(name).groupBy(col("hour"), col("event_type"))
-      .agg(max(col("n")).as("n"))
-  }
-
+  /** Oracle of A8's streaming ingest, [[graft.streaming.StreamIngest.run]]. */
   val streamIngestSql: String =
     """SELECT strftime(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') AS hour,
       |  event_type, count(*) AS n

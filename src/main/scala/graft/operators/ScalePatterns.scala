@@ -105,33 +105,53 @@ object ScalePatterns {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority""".stripMargin
 
+  /** The bucketed pair's files: `orders/` and `lineitem/` under one
+    * artifact dir per orders/lineitem content. */
+  private[graft] val BucketedPair =
+    Artifact("bucketed", Seq("orders", "lineitem"), "buckets=16")
+
+  /** Per bucketed table: its source table, bucket key and kept columns
+    * with their types — spelled out so that registering a built pair
+    * reads no source file. */
+  private val BucketedTables = Seq(
+    ("orders", "o_orderkey", Seq("o_orderkey" -> "BIGINT", "o_orderpriority" -> "STRING")),
+    ("lineitem", "l_orderkey", Seq("l_orderkey" -> "BIGINT", "l_extendedprice" -> "DOUBLE")))
+
   /** One-time bucketed-table fixture per orders/lineitem content (16
     * buckets on the join key, sorted within buckets → shuffle-free
-    * sort-merge). The bucket spec lives in the session catalog, not
-    * in the files, so these are catalog tables rather than artifact
-    * dirs; their names carry the sources'
-    * [[graft.ingest.ArtifactCache.token]], so each scale keeps its own
-    * pair. Returns the (orders, lineitem) table names; the lock
-    * serializes the drop-and-recreate of shared catalog state. */
+    * sort-merge). The files are the [[BucketedPair]] artifact, written
+    * once by `saveAsTable` into its temp sibling and published by
+    * rename. The bucket spec lives in the session catalog, not in the
+    * files, so each session registers the published files as external
+    * tables `<table>_b_<token>` with the spec and schema given
+    * explicitly: registration runs no job and a new JVM rewrites
+    * nothing. Returns the (orders, lineitem) table names; the lock
+    * serializes catalog changes. */
   def ensureBucketed(s: SparkSession, dir: String): (String, String) = synchronized {
-    val tag = graft.ingest.ArtifactCache.token(dir, Seq("orders", "lineitem"), "buckets=16")
-    val names @ (ordersB, lineitemB) = (s"orders_b_$tag", s"lineitem_b_$tag")
-    if (!s.catalog.tableExists(ordersB) || !s.catalog.tableExists(lineitemB)) {
-      // the warehouse dir outlives the in-memory catalog across JVMs;
-      // clear both so saveAsTable never hits LOCATION_ALREADY_EXISTS
-      Seq(ordersB, lineitemB).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(
-          s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
+    val token = BucketedPair.token(dir)
+    // absolute: a relative table location resolves under the warehouse
+    def files(base: String, t: String) = java.nio.file.Paths.get(base, t).toAbsolutePath
+    val root = BucketedPair.ensure(dir) { tmp =>
+      BucketedTables.foreach { case (t, key, cols) =>
+        val name = s"${t}_b_$token"
+        s.sql(s"DROP TABLE IF EXISTS $name")
+        graft.Tables.t(s, dir, t)
+          .select(cols.map { case (c, ty) => col(c).cast(ty).as(c) }: _*)
+          .write.bucketBy(16, key).sortBy(key)
+          .option("path", files(tmp, t).toString)
+          .saveAsTable(name)
+        s.sql(s"DROP TABLE $name") // external: its files stay
       }
-      orders(s, dir).select("o_orderkey", "o_orderpriority")
-        .write.mode("overwrite").bucketBy(16, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(ordersB)
-      lineitem(s, dir).select("l_orderkey", "l_extendedprice")
-        .write.mode("overwrite").bucketBy(16, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(lineitemB)
     }
-    names
+    val Seq(ordersB, lineitemB) = BucketedTables.map { case (t, key, cols) =>
+      val name = s"${t}_b_$token"
+      if (!s.catalog.tableExists(name))
+        s.sql(s"CREATE TABLE $name (${cols.map { case (c, ty) => s"$c $ty" }.mkString(", ")})" +
+          s" USING parquet CLUSTERED BY ($key) SORTED BY ($key) INTO 16 BUCKETS" +
+          s" LOCATION '${files(root, t).toUri}'")
+      name
+    }
+    (ordersB, lineitemB)
   }
 
   /** Partition-pruned scan: events written date-partitioned (the

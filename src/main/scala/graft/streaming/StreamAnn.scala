@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Ann
 
@@ -33,50 +31,20 @@ import graft.operators.Ann
   */
 object StreamAnn {
 
-  /** Data micro-batches consumed by the last [[run]] (spec probe). */
-  @volatile private[graft] var dataBatches: Long = -1L
-
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val probeRows = graft.Tables.embeddings(s, dir)
       .filter(col("vec_id") < Ann.NumQueries)
       .select(col("vec_id"), col("embedding"))
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
-
-    val base = Files.createTempDirectory(Paths.get("target"), "stream_ann")
-    val watch = Files.createDirectory(base.resolve("probes"))
-    val q = s.readStream.schema(probeRows.schema)
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(watch.toString)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // probes×K rows — report-sized, the service's response payload
-        Ann.bruteforceFor(s, dir, Ann.asProbes(batch))
-          .collect().foreach(results.add)
-        ()
-      }
-      .start()
-    try {
-      Staging.stage(probeRows.filter(col("vec_id") % 2 === 0), watch.toString, "wave_a")
-      q.processAllAvailable()
-      Staging.stage(probeRows.filter(col("vec_id") % 2 === 1), watch.toString, "wave_b")
-      q.processAllAvailable()
-      dataBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-    } finally q.stop()
-    Staging.clearDir(watch)
-    Files.deleteIfExists(base)
-    import scala.jdk.CollectionConverters._
-    val p = s.conf.get("spark.sql.shuffle.partitions").toInt
-    s.createDataFrame(
-      s.sparkContext.parallelize(results.asScala.toSeq, p),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("qid",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("nb",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("rnk",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("cos",
-          org.apache.spark.sql.types.DoubleType))))
+    val results = new Staging.Collected
+    r.drive(
+        Staging.Wave("probes" -> probeRows.filter(col("vec_id") % 2 === 0)),
+        Staging.Wave("probes" -> probeRows.filter(col("vec_id") % 2 === 1)))(
+      r.watch("probes", probeRows.schema).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // probes×K rows — report-sized, the service's response payload
+          results.add(Ann.bruteforceFor(s, dir, Ann.asProbes(batch)))
+        })
+    results.frame(s)
   }
 
   /** Streamed search must equal the batch exact kernel. */

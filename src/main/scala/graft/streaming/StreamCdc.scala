@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -46,14 +45,6 @@ object StreamCdc {
   private def us(t: Timestamp): Long =
     t.getTime * 1000 + (t.getNanos / 1000) % 1000
 
-  /** Observability from the most recent [[run]], for the spec's
-    * state-footprint gate: `numRowsTotal` from the state-store
-    * metrics (one row per live key — compaction state IS the
-    * compacted table), and the per-wave micro-batch counts that back
-    * the single-batch ordering contract. */
-  @volatile private[graft] var lastStateRows: Long = -1L
-  @volatile private[graft] var waveBatches: Seq[Long] = Nil
-
   /** Fold one batch's ops (sorted into event order) into the key's
     * compacted state; emit the updated compacted row. */
   def compact(user: Long, ops: Iterator[Op],
@@ -81,7 +72,7 @@ object StreamCdc {
       st.lastOp, st.nC, st.nU, st.nD, st.nRes, st.nOps)
   }
 
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     import s.implicits._
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -90,44 +81,25 @@ object StreamCdc {
     val minTs = e.agg(min(col("ts"))).head.getTimestamp(0)
     val cut = new Timestamp(minTs.getTime + 15L * 86400 * 1000)
 
-    val base = Files.createTempDirectory(Paths.get("target"), "stream_cdc")
-    val watch = Files.createDirectory(base.resolve("ops"))
-    val mem = "stream_cdc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-
-    val q = s.readStream.schema(e.schema)
-      // the per-key ordering contract REQUIRES each staged wave to be
-      // consumed as exactly ONE micro-batch (compact() sorts only
-      // within a batch); pin maxFilesPerTrigger far above any wave's
-      // file count so a global option default can never silently
-      // split a wave, and ASSERT the batch count below — a violated
-      // contract must fail loudly, not ship wrong resurrection counts
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(watch.toString).as[Op]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(compact)
-      .writeStream.format("memory").queryName(mem).outputMode("update")
-      .start()
-    try {
-      def dataBatches(): Long = q.recentProgress.count(_.numInputRows > 0).toLong
-      Staging.stage(e.filter(col("ts") < lit(cut)), watch.toString, "wave_a")
-      q.processAllAvailable()
-      val bA = dataBatches()
-      require(bA == 1L,
-        s"wave A consumed as $bA micro-batches — per-key order contract broken")
-      Staging.stage(e.filter(col("ts") >= lit(cut)), watch.toString, "wave_b")
-      q.processAllAvailable()
-      val bB = dataBatches()
-      require(bB == 2L,
-        s"wave B consumed as ${bB - bA} micro-batches — per-key order contract broken")
-      waveBatches = Seq(bA, bB - bA)
-      // state footprint: one row per live key, never evicted
-      lastStateRows = q.recentProgress
-        .flatMap(_.stateOperators.headOption.map(_.numRowsTotal)).maxOption.getOrElse(-1L)
-    } finally q.stop()
+    // the per-key ordering contract REQUIRES each staged wave to be
+    // consumed as exactly ONE micro-batch (compact() sorts only within
+    // a batch): the watch source never splits a wave, and the counts
+    // are ASSERTED — a violated contract must fail loudly, not ship
+    // wrong resurrection counts
+    val Seq(bA, bB) = r.drive(
+        Staging.Wave("ops" -> e.filter(col("ts") < lit(cut))),
+        Staging.Wave("ops" -> e.filter(col("ts") >= lit(cut))))(
+      r.toMemory(r.watch("ops", e.schema).as[Op]
+        .groupByKey(_.user_id)
+        .mapGroupsWithState(GroupStateTimeout.NoTimeout)(compact), "update"))
+    require(bA == 1L,
+      s"wave A consumed as $bA micro-batches — per-key order contract broken")
+    require(bB == 1L,
+      s"wave B consumed as $bB micro-batches — per-key order contract broken")
     // Update sink: one row per key per batch-with-updates; the final
     // compacted row is the one with the largest op count (strictly
     // increasing per update, so the struct max is the last state)
-    val out = s.table(mem)
+    r.table()
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_ops"), col("alive"), col("last_ts"), col("last_op"),
         col("n_creates"), col("n_updates"), col("n_deletes"),
@@ -138,9 +110,5 @@ object StreamCdc {
         col("m.n_deletes").as("n_deletes"),
         col("m.n_resurrections").as("n_resurrections"))
       .localCheckpoint()
-    s.catalog.dropTempView(mem)
-    Staging.clearDir(watch)
-    Files.deleteIfExists(base)
-    out
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 import graft.ingest.{Decisions, Upsert}
 
@@ -130,14 +131,19 @@ object StreamDecisions {
       connect = _ => storeConnection(schema), guard = Decisions.lwwGuardSql)
   }
 
+  /** Start the pipeline; see [[pipeline]]. */
+  private[graft] def startQuery(s: SparkSession, dir: String,
+      glob: String = "events.parquet",
+      checkpoint: String = null): org.apache.spark.sql.streaming.StreamingQuery =
+    pipeline(s, dir, glob, checkpoint).start()
+
   /** The runnable pipeline: watched staging dir → parse → LWW upsert
     * sink. `checkpoint` pins a checkpointLocation so a STOPPED query
     * can be restarted against the same progress log (the production
-    * recovery contract — spec-proven in SinkStreamSpec's restart
-    * test); null keeps the engine's per-run temp checkpoint. */
-  private[graft] def startQuery(s: SparkSession, dir: String,
-      glob: String = "events.parquet",
-      checkpoint: String = null): org.apache.spark.sql.streaming.StreamingQuery = {
+    * recovery contract — spec-proven in CheckpointRecoverySpec);
+    * null keeps the engine's per-run temp checkpoint. */
+  private def pipeline(s: SparkSession, dir: String, glob: String = "events.parquet",
+      checkpoint: String = null): DataStreamWriter[Row] = {
     val raw = s.readStream
       .schema(s.read.option("pathGlobFilter", glob).parquet(dir).schema)
       .option("pathGlobFilter", glob)
@@ -161,21 +167,14 @@ object StreamDecisions {
       .filter(col("uuid") =!= "")
     val w = parsed.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) => upsertBatch(batch) }
-    (if (checkpoint == null) w else w.option("checkpointLocation", checkpoint))
-      .start()
+    if (checkpoint == null) w else w.option("checkpointLocation", checkpoint)
   }
 
-  def run(s: SparkSession, dir: String): DataFrame = {
+  /** The run needs no memory sink and no root: the store is the sink. */
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     Store.rows.clear()
     Store.commits.set(0)
-    val q = startQuery(s, dir)
-    q.processAllAvailable()
-    q.stop()
-    // parallelize instead of a driver-local relation: downstream
-    // consumers (verify's parquet dump, the bench's noop write) then
-    // serialize the table from executor threads, not one driver loop
-    val p = s.conf.get("spark.sql.shuffle.partitions").toInt
-    s.createDataFrame(
-      s.sparkContext.parallelize(Store.rows.values.toSeq, p), Store.schema)
+    r.drive()(pipeline(s, dir))
+    Staging.rowsFrame(s, Store.rows.values.toSeq, Store.schema)
   }
 }

@@ -45,18 +45,14 @@ object StreamDedup {
     arr.withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
 
-  def run(s: SparkSession, dir: String): DataFrame = {
-    def mem(pfx: String) = pfx + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (an, un) = (mem("sd_arr_"), mem("sd_uniq_"))
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val arr = arrivals(StreamIngest.readEvents(s, dir))
-    val qa = arr.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName(an).outputMode("update").start()
-    val qu = dedup(arr).groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName(un).outputMode("update").start()
-    qa.processAllAvailable(); qa.stop()
-    qu.processAllAvailable(); qu.stop()
-    val arrN = s.table(an).groupBy(col("event_type")).agg(max(col("n")).as("n_arrivals"))
-    val uniqN = s.table(un).groupBy(col("event_type")).agg(max(col("n")).as("n_unique"))
+    r.drive()(
+      r.toMemory(arr.groupBy(col("event_type")).agg(count(lit(1)).as("n")), "update", "arr"),
+      r.toMemory(dedup(arr).groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+        "update", "uniq"))
+    val arrN = r.table("arr").groupBy(col("event_type")).agg(max(col("n")).as("n_arrivals"))
+    val uniqN = r.table("uniq").groupBy(col("event_type")).agg(max(col("n")).as("n_unique"))
     arrN.join(uniqN, "event_type")
       .select(col("event_type"), col("n_arrivals"), col("n_unique"),
         (col("n_arrivals") - col("n_unique")).as("n_dropped"))

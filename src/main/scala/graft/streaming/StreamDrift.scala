@@ -37,9 +37,8 @@ object StreamDrift {
   /** Alert threshold: L1 ∈ [0, 2·10⁶]; a quarter of the mass moved. */
   val DriftThresholdPm = 500000L
 
-  def run(s: SparkSession, dir: String): DataFrame = {
-    val mem = "stream_drift_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = StreamIngest.readEvents(s, dir)
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
+    r.drive()(r.toMemory(StreamIngest.readEvents(s, dir)
       .withWatermark("ts", "1 hour")
       .select(window(col("ts"), "1 hour").as("w"),
         expr(s"CAST(floor(value * 100 + 0.5) AS BIGINT) div $QmWidth")
@@ -47,16 +46,13 @@ object StreamDrift {
       .groupBy(col("w"), col("bucket"))
       .agg(count(lit(1)).as("c"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("bucket"), col("c"))
-      .writeStream.format("memory").queryName(mem)
-      .outputMode("update").start()
-    q.processAllAvailable()
-    q.stop()
+        col("bucket"), col("c")),
+      "update"))
     // latest update per (hour, bucket): counts are monotone in-window.
     // Materialized (report-sized: hours × ≤~50 buckets) — it feeds
     // both the grid axes and the scoring join, and a shared lineage
     // there is a self-join reference conflict.
-    val hist = s.table(mem)
+    val hist = r.table()
       .groupBy(col("hour"), col("bucket")).agg(max(col("c")).as("c"))
       .localCheckpoint()
     // static reference profile: the whole corpus's bucket distribution

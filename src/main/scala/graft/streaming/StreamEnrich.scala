@@ -19,11 +19,10 @@ import org.apache.spark.sql.functions._
   * batch join + aggregate — the oracle recomputes exactly that. */
 object StreamEnrich {
 
-  def run(s: SparkSession, dir: String): DataFrame = {
-    val mem = "stream_enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val dim = graft.Tables.customer(s, dir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    val q = StreamIngest.readEvents(s, dir)
+    r.drive()(r.toMemory(StreamIngest.readEvents(s, dir)
       .withWatermark("ts", "1 hour")
       .join(broadcast(dim), Seq("user_id"))
       .groupBy(window(col("ts"), "1 hour").as("w"), col("segment"))
@@ -31,13 +30,10 @@ object StreamEnrich {
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("n_purchases"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("segment"), col("n_events"), col("n_purchases"))
-      .writeStream.format("memory").queryName(mem)
-      .outputMode("update").start()
-    q.processAllAvailable()
-    q.stop()
+        col("segment"), col("n_events"), col("n_purchases")),
+      "update"))
     // latest update per key: counts are monotone within a window
-    s.table(mem).groupBy(col("hour"), col("segment"))
+    r.table().groupBy(col("hour"), col("segment"))
       .agg(max(col("n_events")).as("n_events"),
         max(col("n_purchases")).as("n_purchases"))
   }

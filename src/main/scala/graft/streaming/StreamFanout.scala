@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   *    frame), so what's checked is what a downstream consumer
   *    actually sees on disk.
   *
-  * Sinks are per-run temp dirs (the fan-out is a transport, not a
-  * write-once artifact). Routing is stateless, so the result is
+  * Sinks and checkpoint are dirs in the run's root (the fan-out is a
+  * transport, not a write-once artifact), which the lifecycle deletes
+  * after the report is materialized. Routing is stateless, so the result is
   * batching-invariant — append-mode writes accumulate the same rows
   * however the source splits the waves; exactly-once across RESTARTS
   * would add the checkpoint-replay + idempotent-path machinery A8/K73
@@ -34,40 +35,33 @@ object StreamFanout {
     "commerce" -> (col("event_type") === "purchase" || col("event_type") === "view"),
     "ops" -> (col("event_type") === "error"))
 
-  def run(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_fanout_").toString
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val cols = Seq("event_id", "user_id", "event_type")
-    val q = StreamIngest.readEvents(s, dir)
+    r.drive()(StreamIngest.readEvents(s, dir)
       .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$base/_chk")
+      .option("checkpointLocation", r.path("_chk"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.persist()
         routes.foreach { case (name, pred) =>
           batch.filter(pred).selectExpr(cols: _*)
-            .write.mode("append").parquet(s"$base/$name")
+            .write.mode("append").parquet(r.path(name))
         }
         batch.filter(!routes.map(_._2).reduce(_ || _))
           .selectExpr(cols: _*)
-          .write.mode("append").parquet(s"$base/engagement")
+          .write.mode("append").parquet(r.path("engagement"))
         batch.unpersist()
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val report = (routes.map(_._1) :+ "engagement").map { name =>
-      s.read.parquet(s"$base/$name")
+      })
+    (routes.map(_._1) :+ "engagement").map { name =>
+      s.read.parquet(r.path(name))
         .agg(count(lit(1)).as("n_rows"),
           count_distinct(col("user_id")).as("n_users"),
           sum(col("event_id")).as("sum_ids"))
         .select(lit(name).as("sink"), col("n_rows"), col("n_users"),
           col("sum_ids"))
     }.reduce(_ unionByName _)
-      // 3-row report: materialize, then the per-run transport dirs can
-      // go — repeated runs must not accumulate event-sized temp parquet
+      // 3-row report: materialized before the run deletes its root
       .localCheckpoint()
-    graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(base))
-    report
   }
 
   val sql: String =

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -95,50 +94,34 @@ object StreamFunnel {
     }
   }
 
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     import s.implicits._
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     val cut = chainCut(s, dir)
 
-    val base = Files.createTempDirectory(Paths.get("target"), "stream_funnel")
-    val watch = Files.createDirectory(base.resolve("ops"))
-    val mem = "stream_funnel_" + java.util.UUID.randomUUID().toString.replace("-", "")
-
-    val q = s.readStream.schema(e.schema)
-      // single-batch-per-wave: the ordering contract (the StreamCdc
-      // guard) — pinned AND asserted, never assumed
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(watch.toString).as[Ev]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(advance)
-      .writeStream.format("memory").queryName(mem).outputMode("update")
-      .start()
-    try {
-      def dataBatches(): Long = q.recentProgress.count(_.numInputRows > 0).toLong
-      Staging.stage(e.filter(col("ts") < lit(cut)), watch.toString, "wave_a")
-      q.processAllAvailable()
-      require(dataBatches() == 1L, "wave A split across micro-batches — order contract broken")
-      Staging.stage(e.filter(col("ts") >= lit(cut)), watch.toString, "wave_b")
-      q.processAllAvailable()
-      require(dataBatches() == 2L, "wave B split across micro-batches — order contract broken")
-    } finally q.stop()
+    // single-batch-per-wave: the ordering contract (the StreamCdc
+    // guard) — pinned by the watch source AND asserted, never assumed
+    val Seq(bA, bB) = r.drive(
+        Staging.Wave("ops" -> e.filter(col("ts") < lit(cut))),
+        Staging.Wave("ops" -> e.filter(col("ts") >= lit(cut))))(
+      r.toMemory(r.watch("ops", e.schema).as[Ev]
+        .groupByKey(_.user_id)
+        .mapGroupsWithState(GroupStateTimeout.NoTimeout)(advance), "update"))
+    require(bA == 1L, "wave A split across micro-batches — order contract broken")
+    require(bB == 1L, "wave B split across micro-batches — order contract broken")
     // final update per user = the row with the largest nSeen (strictly
     // increasing per update); then the batch K70 rollup
-    val fin = s.table(mem)
+    val fin = r.table()
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_seen"), col("level"),
         coalesce(col("conv_us"), lit(-1L)).as("cv"))).as("m"))
       .select(col("user_id"), col("m.level").as("level"),
         when(col("m.cv") >= 0L, col("m.cv")).as("conv_us"))
-    val out = fin.groupBy(col("level"))
+    fin.groupBy(col("level"))
       .agg(count(lit(1)).as("n_users"),
         graft.Portable.pround(sum(col("conv_us")).cast("double") /
           (lit(1e6) * count(col("conv_us"))), 2).as("avg_conv_secs"))
       .localCheckpoint()
-    s.catalog.dropTempView(mem)
-    Staging.clearDir(watch)
-    Files.deleteIfExists(base)
-    out
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
 
 /** Continuous daily-dump ingestion (SURVEY.md A8): the streaming
@@ -16,7 +15,7 @@ import graft.Tables
   * than watermark − delay is dropped), so state size tracks the
   * dedup horizon, not the stream's history. `foreachBatch` +
   * [[graft.sinks.JdbcUpsertSink]] is the production sink; the memory
-  * sink below is the test/verify harness.
+  * sink of [[run]] is the test/verify harness.
   */
 object StreamIngest {
 
@@ -45,17 +44,16 @@ object StreamIngest {
       .select(schema.fieldNames.map(col).toSeq: _*)
   }
 
-  /** Run the pipeline to a named memory sink in UPDATE mode (so the
+  /** A8: run the pipeline to a memory sink in UPDATE mode (so the
     * 1-hour watermark ages expired windows out of state — complete
-    * mode would retain every window forever, the stream_topk lesson)
-    * and block until all available input is processed. Consumers take
-    * max(n) per key: window counts are monotone, so the max IS the
-    * latest update. Returns the query (caller stops it). */
-  def runToMemory(s: SparkSession, dir: String, name: String): StreamingQuery = {
-    val q = transform(readEvents(s, dir))
-      .writeStream.format("memory").queryName(name).outputMode("update")
-      .start()
-    q.processAllAvailable()
-    q
+    * mode would retain every window forever, the stream_topk lesson).
+    * The read-back takes max(n) per key: window counts are monotone,
+    * so the max IS the latest update. All input fits the first
+    * micro-batch here, so the watermark drops nothing and the batch
+    * twin is the oracle. */
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
+    r.drive()(r.toMemory(transform(readEvents(s, dir)), "update"))
+    r.table().groupBy(col("hour"), col("event_type"))
+      .agg(max(col("n")).as("n"))
   }
 }

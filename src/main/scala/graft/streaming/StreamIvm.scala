@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Maintenance
@@ -34,24 +32,18 @@ import graft.operators.Maintenance
   */
 object StreamIvm {
 
-  /** Data micro-batches consumed by the last [[run]] (spec probe). */
-  @volatile private[graft] var dataBatches: Long = -1L
-
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val ch = Maintenance.changes(s, dir)
+    val initial = s.read.parquet(Maintenance.ensureIvmView(s, dir))
     val view = new scala.collection.concurrent.TrieMap[(String, String), (Long, Long)]()
-    s.read.parquet(Maintenance.ensureIvmView(s, dir)).collect().foreach { r =>
-      view.put((r.getAs[String]("source"), r.getAs[String]("lang")),
-        (r.getAs[Long]("n_docs"), r.getAs[Long]("sum_chars")))
+    initial.collect().foreach { v =>
+      view.put((v.getAs[String]("source"), v.getAs[String]("lang")),
+        (v.getAs[Long]("n_docs"), v.getAs[Long]("sum_chars")))
     }
 
-    val base = Files.createTempDirectory(Paths.get("target"), "stream_ivm")
-    val watch = Files.createDirectory(base.resolve("changes"))
-    val q = s.readStream.schema(ch.schema)
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(watch.toString)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    r.drive(Seq("delete", "update", "insert")
+        .map(op => Staging.Wave("changes" -> ch.filter(col("op") === op))): _*)(
+      r.watch("changes", ch.schema).writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         val touched = batch.filter(col("op") =!= "insert").select(col("doc_id"))
         val removals = graft.Tables.documents(s, dir)
           .join(broadcast(touched), Seq("doc_id"))
@@ -64,37 +56,16 @@ object StreamIvm {
         removals.unionByName(additions)
           .groupBy(col("source"), col("lang"))
           .agg(sum(col("dn")).as("dn"), sum(col("dc")).as("dc"))
-          .collect().foreach { r =>
-            val k = (r.getAs[String]("source"), r.getAs[String]("lang"))
+          .collect().foreach { d =>
+            val k = (d.getAs[String]("source"), d.getAs[String]("lang"))
             val (n0, c0) = view.getOrElse(k, (0L, 0L))
-            view.put(k, (n0 + r.getAs[Long]("dn"), c0 + r.getAs[Long]("dc")))
+            view.put(k, (n0 + d.getAs[Long]("dn"), c0 + d.getAs[Long]("dc")))
           }
         ()
-      }
-      .start()
-    try {
-      Seq("delete", "update", "insert").zipWithIndex.foreach { case (op, i) =>
-        Staging.stage(ch.filter(col("op") === op), watch.toString, s"wave_$i")
-        q.processAllAvailable()
-      }
-      dataBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-    } finally q.stop()
-    Staging.clearDir(watch)
-    Files.deleteIfExists(base)
-    val rows = view.toSeq.collect { case ((src, lang), (n, c)) if n > 0 =>
+      })
+    Staging.rowsFrame(s, view.toSeq.collect { case ((src, lang), (n, c)) if n > 0 =>
       Row(src, lang, n, c)
-    }
-    val p = s.conf.get("spark.sql.shuffle.partitions").toInt
-    s.createDataFrame(s.sparkContext.parallelize(rows, p),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_docs",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_chars",
-          org.apache.spark.sql.types.LongType))))
+    }, initial.schema)
   }
 
   /** Streamed maintenance must equal the full recompute. */

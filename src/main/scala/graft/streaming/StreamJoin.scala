@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -21,43 +19,26 @@ import graft.Tables
   */
 object StreamJoin {
 
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val e = Tables.events(s, dir)
     val views = e.filter(col("event_type") === "view")
       .select(col("event_id").as("vid"), col("user_id"), col("ts").as("vts"))
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("event_id").as("pid"), col("user_id").as("p_user"), col("ts").as("pts"))
 
-    val base = Files.createTempDirectory(Paths.get("target"), "stream_join")
-    val vDir = Files.createDirectory(base.resolve("views"))
-    val pDir = Files.createDirectory(base.resolve("purchases"))
-    val mem = "stream_join_" + java.util.UUID.randomUUID().toString.replace("-", "")
-
-    val vStream = s.readStream.schema(views.schema).parquet(vDir.toString)
-      .withWatermark("vts", "1 hour")
-    val pStream = s.readStream.schema(purchases.schema).parquet(pDir.toString)
-      .withWatermark("pts", "1 hour")
+    val vStream = r.watch("views", views.schema).withWatermark("vts", "1 hour")
+    val pStream = r.watch("purchases", purchases.schema).withWatermark("pts", "1 hour")
     val joined = vStream.join(pStream,
       col("user_id") === col("p_user") &&
         col("pts") >= col("vts") &&
         col("pts") <= col("vts") + expr("INTERVAL 1 HOUR"))
-    val q = joined
-      .writeStream.format("memory").queryName(mem).outputMode("append")
-      .start()
-    try {
-      Staging.stage(views, vDir.toString, "v")
-      Staging.stage(purchases, pDir.toString, "p")
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = s.table(mem)
+    r.drive(Staging.Wave("views" -> views, "purchases" -> purchases))(
+      r.toMemory(joined, "append"))
+    r.table()
       .select(col("vid"), col("pid"), col("user_id"),
         date_format(col("vts"), "yyyy-MM-dd HH:mm:ss").as("vts"),
         date_format(col("pts"), "yyyy-MM-dd HH:mm:ss").as("pts"))
       .localCheckpoint()
-    s.catalog.dropTempView(mem)
-    Seq(vDir, pDir).foreach(Staging.clearDir)
-    Files.deleteIfExists(base)
-    out
   }
 
   val sql: String =

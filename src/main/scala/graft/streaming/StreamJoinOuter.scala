@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -33,35 +31,22 @@ import graft.Tables
   */
 object StreamJoinOuter {
 
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val e = Tables.events(s, dir)
     val views = e.filter(col("event_type") === "view")
       .select(col("event_id").as("vid"), col("user_id"), col("ts").as("vts"))
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("event_id").as("pid"), col("user_id").as("p_user"), col("ts").as("pts"))
 
-    val base = Files.createTempDirectory(Paths.get("target"), "stream_join_outer")
-    val vDir = Files.createDirectory(base.resolve("views"))
-    val pDir = Files.createDirectory(base.resolve("purchases"))
-    val mem = "stream_join_outer_" + java.util.UUID.randomUUID().toString.replace("-", "")
-
-    val vStream = s.readStream.schema(views.schema).parquet(vDir.toString)
-      .withWatermark("vts", "1 hour")
-    val pStream = s.readStream.schema(purchases.schema).parquet(pDir.toString)
-      .withWatermark("pts", "1 hour")
+    val vStream = r.watch("views", views.schema).withWatermark("vts", "1 hour")
+    val pStream = r.watch("purchases", purchases.schema).withWatermark("pts", "1 hour")
     val joined = vStream.join(pStream,
       col("user_id") === col("p_user") &&
         col("pts") >= col("vts") &&
         col("pts") <= col("vts") + expr("INTERVAL 1 HOUR"),
       "leftOuter")
-    val q = joined
-      .writeStream.format("memory").queryName(mem).outputMode("append")
-      .start()
-    try {
-      Staging.stage(views, vDir.toString, "v")
-      Staging.stage(purchases, pDir.toString, "p")
-      q.processAllAvailable()
-    } finally q.stop()
+    r.drive(Staging.Wave("views" -> views, "purchases" -> purchases))(
+      r.toMemory(joined, "append"))
     // deadline(v) = vts + 1h; keep nulls only with deadline ≤ wm − 3h
     // where wm = least(max(vts), max(pts)) — under Spark's default
     // 'min' multiple-watermark policy the evicted region is bounded by
@@ -71,7 +56,7 @@ object StreamJoinOuter {
     val cutoff = views.agg(max(col("vts")).as("max_vts"))
       .crossJoin(purchases.agg(max(col("pts")).as("max_pts")))
       .select(least(col("max_vts"), col("max_pts")).as("wm"))
-    val out = s.table(mem)
+    r.table()
       .crossJoin(broadcast(cutoff))
       .filter(col("pid").isNotNull ||
         col("vts") + expr("INTERVAL 1 HOUR") <= col("wm") - expr("INTERVAL 3 HOURS"))
@@ -81,10 +66,6 @@ object StreamJoinOuter {
         date_format(col("pts"), "yyyy-MM-dd HH:mm:ss").as("pts"),
         col("pid").isNull.cast("int").as("unmatched"))
       .localCheckpoint()
-    s.catalog.dropTempView(mem)
-    Seq(vDir, pDir).foreach(Staging.clearDir)
-    Files.deleteIfExists(base)
-    out
   }
 
   val sql: String =

@@ -22,24 +22,20 @@ import graft.operators.Sketches.{K, M, Mult}
   * relational per-hour KMV — the oracle recomputes it. */
 object StreamKmv {
 
-  def run(s: SparkSession, dir: String): DataFrame = {
-    val mem = "stream_kmv_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = StreamIngest.readEvents(s, dir)
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
+    r.drive()(r.toMemory(StreamIngest.readEvents(s, dir)
       .withWatermark("ts", "1 hour")
       .select(window(col("ts"), "1 hour").as("w"),
         pmod(col("user_id") * Mult, lit(M)).as("h"))
       .groupBy(col("w"))
       .agg(call_function("kmv_agg", col("h"), lit(K)).as("sk"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"), col("sk"))
-      .writeStream.format("memory").queryName(mem)
-      .outputMode("update").start()
-    q.processAllAvailable()
-    q.stop()
+      .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"), col("sk")),
+      "update"))
     // latest update per window = the largest sketch; ties broken by
     // the sketch itself (identical arrays hash identically anyway)
     val w = Window.partitionBy(col("hour"))
       .orderBy(size(col("sk")).desc, element_at(col("sk"), size(col("sk"))).asc)
-    s.table(mem)
+    r.table()
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("hour"), size(col("sk")).as("sketch_n"),

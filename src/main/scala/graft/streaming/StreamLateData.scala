@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -32,41 +30,22 @@ import graft.Tables
   */
 object StreamLateData {
 
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val e = Tables.events(s, dir).select(
       col("event_id"), col("user_id"), col("ts"),
       when(col("event_id") % 8 === 0, col("event_id") + 1)
         .otherwise(col("event_id")).as("k"))
     val a = e.filter(col("event_id") % 4 =!= 0)
     val b = e.filter(col("event_id") % 4 === 0)
-
-    val watch = Files.createTempDirectory(
-      Paths.get("target"), "stream_late_watch")
-    // unique per run: concurrent suites each get their own memory
-    // sink and watch dir, so runs never share streaming state
-    val mem = "stream_late_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = s.readStream
-      .schema(a.schema)
-      .parquet(watch.toString)
-      .withWatermark("ts", "1 hour")
-      .dropDuplicates("k")
-      .writeStream.format("memory").queryName(mem).outputMode("append")
-      .start()
-    try {
-      Staging.stage(a, watch.toString, "wave_a")
-      q.processAllAvailable() // watermark advances to max(ts_A) - 1h
-      Staging.stage(b, watch.toString, "wave_b")
-      q.processAllAvailable() // late B rows dropped, dup B keys dropped
-    } finally q.stop()
-    val out = s.table(mem)
+    // the watermark advances to max(ts_A) - 1h after wave A's drain;
+    // wave B's late rows and its dup keys are then dropped
+    r.drive(Staging.Wave("watch" -> a), Staging.Wave("watch" -> b))(r.toMemory(
+      r.watch("watch", a.schema).withWatermark("ts", "1 hour").dropDuplicates("k"),
+      "append"))
+    r.table()
       .select(col("k"), col("event_id"), col("user_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"))
-      // materialize off the transient memory table before cleanup
       .localCheckpoint()
-    s.catalog.dropTempView(mem)
-    Staging.clearDir(watch)
-    out
   }
 
   /** Empirical Spark boundary: a row is dropped when its event time

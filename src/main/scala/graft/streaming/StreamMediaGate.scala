@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 
@@ -18,7 +18,8 @@ import graft.operators.Multimodal
   * dups, (4) blur-gates new image payloads (the K118 Laplacian
   * kernel at [[Multimodal.BlurThresh]]), and (5) appends the new
   * hashes to the registry. Cross-batch seen-state lives in the
-  * registry PARQUET — the content-addressed store's own index, sized
+  * registry PARQUET (a dir in the run's root, deleted with it) — the
+  * content-addressed store's own index, sized
   * ∝ unique blobs — never in streaming state (the K73 stream_cdc
   * architecture; an unbounded dropDuplicates would hold every hash
   * in the state store AND recompute it per restart).
@@ -41,23 +42,17 @@ object StreamMediaGate {
   /** Wave-B resend predicate: every ResendMod-th payload re-arrives. */
   val ResendMod = 5L
 
-  /** Data micro-batches consumed by the last [[run]] (spec probe). */
-  @volatile private[graft] var dataBatches: Long = -1L
-
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val media = Multimodal.mediaTable(s, dir)
       .select(col("doc_id"), col("payload"),
         col("meta.mime").as("mime"), col("meta.n_bytes").as("n_bytes"))
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    val results = new Staging.Collected
+    val registry = r.path("cas_registry")
 
-    val base = Files.createTempDirectory(Paths.get("target"), "stream_mgate")
-    val watch = Files.createDirectory(base.resolve("arrivals"))
-    val registry = base.resolve("cas_registry").toString
-
-    val q = s.readStream.schema(media.schema)
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(watch.toString)
-      .writeStream
+    r.drive(
+        Staging.Wave("arrivals" -> media),
+        Staging.Wave("arrivals" -> media.filter(col("doc_id") % ResendMod === 0)))(
+      r.watch("arrivals", media.schema).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val hashed = batch.withColumn("chash", md5(col("payload")))
         // within-batch CAS pick: the smallest doc_id owns the hash
@@ -94,37 +89,10 @@ object StreamMediaGate {
                   .as("bytes_admitted")),
             Seq("mime"), "left_outer")
           .na.fill(0L, Seq("n_new", "n_blur_gated", "bytes_admitted"))
-        report.collect().foreach(results.add)
+        results.add(report)
         fresh.select(col("chash")).write.mode("append").parquet(registry)
-        ()
-      }
-      .start()
-    try {
-      Staging.stage(media, watch.toString, "wave_a")
-      q.processAllAvailable()
-      Staging.stage(media.filter(col("doc_id") % ResendMod === 0),
-        watch.toString, "wave_b")
-      q.processAllAvailable()
-      dataBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-    } finally q.stop()
-    // the registry is a Spark-written parquet dir (may hold crc
-    // sidecars or _temporary leftovers) — recursive delete, then
-    // assert the temp root is actually gone (r9 advisory: the
-    // single-level clear left base behind silently)
-    graft.ingest.ArtifactCache.deleteTree(base)
-    assert(!Files.exists(base), s"stream_mgate temp root survived cleanup: $base")
-
-    import scala.jdk.CollectionConverters._
-    val p = s.conf.get("spark.sql.shuffle.partitions").toInt
-    import org.apache.spark.sql.types._
-    s.createDataFrame(
-        s.sparkContext.parallelize(results.asScala.toSeq, p),
-        StructType(Seq(
-          StructField("mime", StringType),
-          StructField("n_arrivals", LongType),
-          StructField("n_new", LongType),
-          StructField("n_blur_gated", LongType),
-          StructField("bytes_admitted", LongType))))
+      })
+    results.frame(s)
       .groupBy(col("mime"))
       .agg(sum(col("n_arrivals")).as("n_arrivals"),
         sum(col("n_new")).as("n_new"),

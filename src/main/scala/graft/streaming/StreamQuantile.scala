@@ -23,9 +23,8 @@ import graft.operators.Sketches.QmWidth
   * oracle replays it relationally. */
 object StreamQuantile {
 
-  def run(s: SparkSession, dir: String): DataFrame = {
-    val mem = "stream_quant_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = StreamIngest.readEvents(s, dir)
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
+    r.drive()(r.toMemory(StreamIngest.readEvents(s, dir)
       .withWatermark("ts", "1 hour")
       .select(window(col("ts"), "1 hour").as("w"),
         expr(s"CAST(floor(value * 100 + 0.5) AS BIGINT) div $QmWidth")
@@ -33,13 +32,10 @@ object StreamQuantile {
       .groupBy(col("w"), col("bucket"))
       .agg(count(lit(1)).as("c"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("bucket"), col("c"))
-      .writeStream.format("memory").queryName(mem)
-      .outputMode("update").start()
-    q.processAllAvailable()
-    q.stop()
+        col("bucket"), col("c")),
+      "update"))
     // latest update per (hour, bucket): counts are monotone in-window
-    val hist = s.table(mem)
+    val hist = r.table()
       .groupBy(col("hour"), col("bucket")).agg(max(col("c")).as("c"))
     val wCum = Window.partitionBy(col("hour")).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

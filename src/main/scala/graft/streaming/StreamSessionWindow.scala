@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -30,25 +28,16 @@ object StreamSessionWindow {
 
   val GapMinutes = 30
 
-  def run(s: SparkSession, dir: String): DataFrame = {
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
     val events = Tables.events(s, dir).select(col("user_id"), col("ts"))
-
-    val base = Files.createTempDirectory(Paths.get("target"), "stream_session_window")
-    val eDir = Files.createDirectory(base.resolve("events"))
-    val mem = "stream_session_window_" + java.util.UUID.randomUUID().toString.replace("-", "")
-
-    val q = s.readStream.schema(events.schema).parquet(eDir.toString)
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("user_id"), session_window(col("ts"), s"$GapMinutes minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream.format("memory").queryName(mem).outputMode("append")
-      .start()
-    try {
-      Staging.stage(events, eDir.toString, "e")
-      q.processAllAvailable()
-    } finally q.stop()
+    r.drive(Staging.Wave("events" -> events))(r.toMemory(
+      r.watch("events", events.schema)
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"), session_window(col("ts"), s"$GapMinutes minutes"))
+        .agg(count(lit(1)).as("n_events")),
+      "append"))
     val cutoff = events.agg(max(col("ts")).as("max_ts"))
-    val out = s.table(mem)
+    r.table()
       .crossJoin(broadcast(cutoff))
       .filter(col("session_window.end") <= col("max_ts") - expr("INTERVAL 3 HOURS"))
       .select(col("user_id"),
@@ -56,10 +45,6 @@ object StreamSessionWindow {
         date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("s_end"),
         col("n_events"))
       .localCheckpoint()
-    s.catalog.dropTempView(mem)
-    Staging.clearDir(eDir)
-    Files.deleteIfExists(base)
-    out
   }
 
   val sql: String =

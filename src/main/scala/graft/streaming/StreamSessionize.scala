@@ -94,12 +94,10 @@ object StreamSessionize {
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(sessionize)
   }
 
-  /** Run to a memory sink, block until input drains (verify/spec). */
-  def runToMemory(s: SparkSession, dir: String, name: String): Unit = {
-    val q = transform(StreamIngest.readEvents(s, dir))
-      .writeStream.format("memory").queryName(name).outputMode("update")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+  /** The run's emitted sessions: with all input in one micro-batch,
+    * each session is emitted once. */
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
+    r.drive()(r.toMemory(transform(StreamIngest.readEvents(s, dir)), "update"))
+    r.table()
   }
 }

@@ -37,14 +37,9 @@ object StreamTopk {
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"))
 
-  def run(s: SparkSession, dir: String): DataFrame = {
-    val mem = "stream_topk_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = counts(StreamIngest.readEvents(s, dir))
-      .writeStream.format("memory").queryName(mem)
-      .outputMode("update").start()
-    q.processAllAvailable()
-    q.stop()
-    val latest = s.table(mem).groupBy(col("hour"), col("event_type"))
+  def run(s: SparkSession, dir: String): DataFrame = Staging.run(s) { r =>
+    r.drive()(r.toMemory(counts(StreamIngest.readEvents(s, dir)), "update"))
+    val latest = r.table().groupBy(col("hour"), col("event_type"))
       .agg(max(col("n")).as("n"))
     val w = Window.partitionBy(col("hour")).orderBy(col("n").desc, col("event_type"))
     latest

@@ -207,7 +207,7 @@ class BehaviorSpec extends SparkSpec {
     // sf0.01: wave B contains late rows (dropped), on-time fresh rows
     // (passed) AND on-time key collisions (deduped) — all three paths
     val dir = "/root/testdata/sf0.01"
-    val out = SparkEntry.queries("stream_late_data")(spark, dir).collect()
+    val out = leavesNothing(SparkEntry.queries("stream_late_data")(spark, dir)).collect()
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"),
         when(col("event_id") % 8 === 0, col("event_id") + 1)

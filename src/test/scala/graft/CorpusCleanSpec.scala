@@ -288,7 +288,7 @@ class CorpusCleanSpec extends SparkSpec {
   }
 
   test("stream_join: streaming result equals the relational join") {
-    val out = run("stream_join").collect()
+    val out = leavesNothing(run("stream_join")).collect()
       .map(r => (r.getAs[Long]("vid"), r.getAs[Long]("pid"))).toSet
     val e = Tables.events(spark, sf)
     val v = e.filter(col("event_type") === "view")
@@ -304,7 +304,7 @@ class CorpusCleanSpec extends SparkSpec {
   }
 
   test("stream_join_outer: watermark eviction emits exactly the provably-unmatched views") {
-    val rows = run("stream_join_outer").collect()
+    val rows = leavesNothing(run("stream_join_outer")).collect()
     val matched = rows.filter(_.getAs[Int]("unmatched") == 0)
       .map(r => (r.getAs[Long]("vid"), r.getAs[Long]("pid"))).toSet
     val nullVids = rows.filter(_.getAs[Int]("unmatched") == 1)

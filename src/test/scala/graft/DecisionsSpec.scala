@@ -69,7 +69,7 @@ class DecisionsSpec extends SparkSpec {
   test("stream_decisions: the streaming upsert pipeline equals the batch round-trip") {
     def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[String]("uuid") -> r.toSeq.map(String.valueOf)).toMap
-    val streamed = keyed(SparkEntry.queries("stream_decisions")(spark, sf))
+    val streamed = keyed(leavesNothing(SparkEntry.queries("stream_decisions")(spark, sf)))
     val batch = keyed(rt)
     assert(streamed.size == batch.size && streamed.keySet == batch.keySet)
     batch.foreach { case (k, v) => assert(streamed(k) == v, s"uuid $k") }
@@ -116,11 +116,23 @@ class DecisionsSpec extends SparkSpec {
     // its change decides (content_language leaves only the row hash)
     val pairs = Seq("created_at" -> "1999-01-01 00:00:00", "platform_uid" -> "0-0-user",
       "content_language" -> "zz_hash_only").map { case (c, v) => (row("uuid" -> c), row("uuid" -> c, c -> v)) }
+    // a null key loses to any value (lwwOrder sorts it last), with the
+    // null row first or second in the pair
+    val nullPairs = for {
+      (c, v) <- Seq("created_at" -> "2024-01-01 00:00:00", "platform_uid" -> "1-1-user")
+      nullFirst <- Seq(true, false)
+    } yield {
+      val u = s"$c null ${if (nullFirst) "first" else "second"}"
+      val (set, unset) = (row("uuid" -> u, c -> v), row("uuid" -> u, c -> null))
+      assert(Decisions.beats(set, unset) && !Decisions.beats(unset, set), u)
+      if (nullFirst) (unset, set) else (set, unset)
+    }
     pairs.foreach { case (a, b) => assert(Decisions.beats(a, b) != Decisions.beats(b, a)) }
-    val expected = pairs.map { case (a, b) =>
+    val allPairs = pairs ++ nullPairs
+    val expected = allPairs.map { case (a, b) =>
       a.getAs[String]("uuid") -> (if (Decisions.beats(a, b)) a else b).toSeq }.toMap
     val got = Upsert.lastWriteWins(
-      spark.createDataFrame(spark.sparkContext.parallelize(pairs.flatMap(p => Seq(p._1, p._2)), 2),
+      spark.createDataFrame(spark.sparkContext.parallelize(allPairs.flatMap(p => Seq(p._1, p._2)), 2),
         base.schema),
       Seq("uuid"), Decisions.lwwOrder).collect()
       .map(r => r.getAs[String]("uuid") -> r.toSeq).toMap

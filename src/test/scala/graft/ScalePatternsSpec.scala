@@ -43,8 +43,21 @@ class ScalePatternsSpec extends SparkSpec {
       assert(jobs == 0, s"returning to a built scale ran $jobs Spark job(s)")
     } finally {
       Seq(b._1, b._2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(other))
+      Seq(other, ScalePatterns.BucketedPair.path(other)).foreach(p =>
+        graft.ingest.ArtifactCache.deleteTree(java.nio.file.Paths.get(p)))
     }
+  }
+
+  test("ensureBucketed: a fresh catalog registers the built pair without a Spark job") {
+    val (o, l) = ScalePatterns.ensureBucketed(spark, sf)
+    // a new JVM starts with the files on disk and an empty catalog
+    Seq(o, l).foreach(t => spark.sql(s"DROP TABLE $t"))
+    var again: (String, String) = null
+    val jobs = jobsRunBy { again = ScalePatterns.ensureBucketed(spark, sf) }
+    assert(again == (o, l))
+    assert(jobs == 0, s"re-registering a built pair ran $jobs Spark job(s)")
+    assert(Seq(o, l).forall(spark.catalog.tableExists))
+    assert(spark.table(l).count() == Tables.lineitem(spark, sf).count())
   }
 
   test("pruned_scan: only the 3 filtered date partitions are read") {

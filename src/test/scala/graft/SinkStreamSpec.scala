@@ -84,7 +84,7 @@ class SinkStreamSpec extends SparkSpec {
   }
 
   test("stream_ingest: real streaming run equals the batch twin") {
-    val streamed = SparkEntry.queries("stream_ingest")(spark, sf)
+    val streamed = leavesNothing(SparkEntry.queries("stream_ingest")(spark, sf))
     val batch = Tables.events(spark, sf)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -94,7 +94,7 @@ class SinkStreamSpec extends SparkSpec {
   }
 
   test("stream_topk: streaming windowed state + rank equals the relational recount") {
-    val got = SparkEntry.queries("stream_topk")(spark, sf).collect()
+    val got = leavesNothing(SparkEntry.queries("stream_topk")(spark, sf)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getAs[Long]("n"), r.getAs[Int]("rk"))).toSet
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("hour")).orderBy(col("n").desc, col("event_type"))
@@ -143,7 +143,7 @@ class SinkStreamSpec extends SparkSpec {
   }
 
   test("stream_kmv: sketch-in-state cardinality equals the relational KMV per hour") {
-    val got = SparkEntry.queries("stream_kmv")(spark, sf).collect()
+    val got = leavesNothing(SparkEntry.queries("stream_kmv")(spark, sf)).collect()
       .map(r => r.getString(0) -> (r.getAs[Int]("sketch_n"), r.getAs[Double]("est_users")))
       .toMap
     // relational recount: K smallest distinct hashes per hour
@@ -168,7 +168,7 @@ class SinkStreamSpec extends SparkSpec {
   }
 
   test("stream_sessionize: stateful streaming sessions equal the batch query") {
-    val streamed = SparkEntry.queries("stream_sessionize")(spark, sf)
+    val streamed = leavesNothing(SparkEntry.queries("stream_sessionize")(spark, sf))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getString(3), r.getDouble(4))).toMap
     val batch = SparkEntry.queries("sessionize")(spark, sf)
@@ -219,7 +219,7 @@ class SinkStreamSpec extends SparkSpec {
   }
 
   test("stream_enrich: stream-static broadcast enrichment equals the batch join") {
-    val got = SparkEntry.queries("stream_enrich")(spark, sf).collect()
+    val got = leavesNothing(SparkEntry.queries("stream_enrich")(spark, sf)).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getAs[Long]("n_events"), r.getAs[Long]("n_purchases"))).toMap
     val expected = Tables.events(spark, sf)
@@ -240,7 +240,7 @@ class SinkStreamSpec extends SparkSpec {
 
   test("stream_session_window: native merging windows equal a local gap-sessionizer") {
     import graft.streaming.StreamSessionWindow.GapMinutes
-    val got = SparkEntry.queries("stream_session_window")(spark, sf).collect()
+    val got = leavesNothing(SparkEntry.queries("stream_session_window")(spark, sf)).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[String]("s_start"),
         r.getAs[String]("s_end"), r.getAs[Long]("n_events"))).toSet
     // local reference: per-user sorted event times, break at gap ≥ 30 min
@@ -286,7 +286,7 @@ class SinkStreamSpec extends SparkSpec {
         r.getAs[String]("last_ts"), r.getAs[String]("last_op"),
         r.getAs[Long]("n_creates"), r.getAs[Long]("n_updates"),
         r.getAs[Long]("n_deletes"), r.getAs[Long]("n_resurrections"))).toSet
-    val streamed = rows("stream_cdc")
+    val (streamed, progress) = streamProgressOf(leavesNothing(rows("stream_cdc")))
     val batch = rows("cdc_replay")
     assert(streamed == batch,
       s"stream=${streamed.size} batch=${batch.size}; diff=${(streamed -- batch).take(2)}")
@@ -305,19 +305,21 @@ class SinkStreamSpec extends SparkSpec {
     // live key across both waves (state is never evicted — it IS the
     // compacted table), so at 100 TB the RocksDB footprint is
     // key-cardinality × one fixed-width row, nothing time-dependent
-    assert(graft.streaming.StreamCdc.lastStateRows == streamed.size.toLong,
-      s"state rows ${graft.streaming.StreamCdc.lastStateRows} != live keys ${streamed.size}")
-    // and each wave arrived as exactly ONE micro-batch — the per-key
-    // ordering contract run() now pins and asserts
-    assert(graft.streaming.StreamCdc.waveBatches == Seq(1L, 1L),
-      s"waves split across batches: ${graft.streaming.StreamCdc.waveBatches}")
+    val stateRows = progress
+      .flatMap(_.stateOperators.headOption.map(_.numRowsTotal)).maxOption.getOrElse(-1L)
+    assert(stateRows == streamed.size.toLong,
+      s"state rows $stateRows != live keys ${streamed.size}")
+    // and the two waves arrived as two micro-batches — one per wave,
+    // the per-key ordering contract run() pins and asserts
+    val dataBatches = progress.count(_.numInputRows > 0)
+    assert(dataBatches == 2, s"waves split across batches: $dataBatches data batches")
   }
 
   test("stream_funnel: streamed greedy chains equal batch window_funnel across a chain-spanning cut") {
     def rows(name: String) = SparkEntry.queries(name)(spark, sf).collect()
       .map(r => r.getAs[Int]("level") ->
         (r.getAs[Long]("n_users"), Option(r.getAs[Any]("avg_conv_secs")))).toMap
-    val streamed = rows("stream_funnel")
+    val streamed = leavesNothing(rows("stream_funnel"))
     val batch = rows("window_funnel")
     assert(streamed == batch, s"stream=$streamed batch=$batch")
     assert(streamed.contains(3), "no conversions — the latency column is untested")
@@ -341,7 +343,7 @@ class SinkStreamSpec extends SparkSpec {
   }
 
   test("stream_dedup: planted replays dropped exactly once, accounting matches a recount") {
-    val got = SparkEntry.queries("stream_dedup")(spark, sf).collect()
+    val got = leavesNothing(SparkEntry.queries("stream_dedup")(spark, sf)).collect()
       .map(r => r.getString(0) ->
         (r.getAs[Long]("n_arrivals"), r.getAs[Long]("n_unique"), r.getAs[Long]("n_dropped")))
       .toMap
@@ -462,7 +464,7 @@ class SinkStreamSpec extends SparkSpec {
 
   test("stream_decisions: the sink path is JdbcUpsertSink.write, per-partition, collect-free") {
     import graft.streaming.StreamDecisions
-    val out = SparkEntry.queries("stream_decisions")(spark, sf)
+    val out = leavesNothing(SparkEntry.queries("stream_decisions")(spark, sf))
     assert(out.count() > 0)
     // the store was populated through per-partition sink transactions
     // (foreachPartition on executor threads), not a driver collect
@@ -536,7 +538,7 @@ class SinkStreamSpec extends SparkSpec {
 
   test("stream_fanout: sinks partition the stream exactly (counts + checksums)") {
     import org.apache.spark.sql.functions._
-    val got = graft.streaming.StreamFanout.run(spark, sf).collect()
+    val got = leavesNothing(graft.streaming.StreamFanout.run(spark, sf)).collect()
       .map(r => r.getString(0) -> (r.getAs[Long]("n_rows"),
         r.getAs[Long]("n_users"), r.getAs[Long]("sum_ids"))).toMap
     val ev = Tables.events(spark, sf)
@@ -573,8 +575,7 @@ class SinkStreamSpec extends SparkSpec {
       }
       h -> (n, quant(50), quant(90))
     }
-    val got = graft.streaming.Staging.withStatePartitions(spark)(
-      graft.streaming.StreamQuantile.run(spark, sf)).collect()
+    val got = leavesNothing(graft.streaming.StreamQuantile.run(spark, sf)).collect()
       .map(r => r.getString(0) -> (r.getAs[Long]("n"),
         r.getAs[Long]("p50_q"), r.getAs[Long]("p90_q"))).toMap
     assert(got == expected)
@@ -599,8 +600,7 @@ class SinkStreamSpec extends SparkSpec {
       }.sum
       h -> (n, l1, l1 > graft.streaming.StreamDrift.DriftThresholdPm)
     }
-    val got = graft.streaming.Staging.withStatePartitions(spark)(
-      graft.streaming.StreamDrift.run(spark, sf)).collect()
+    val got = leavesNothing(graft.streaming.StreamDrift.run(spark, sf)).collect()
       .map(r => r.getString(0) -> (r.getAs[Long]("n"),
         r.getAs[Long]("l1_pm"), r.getAs[Boolean]("drifted"))).toMap
     assert(got == expected)

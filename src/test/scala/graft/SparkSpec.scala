@@ -64,4 +64,54 @@ trait SparkSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** `body`'s result and the progress of every streaming query it
+    * starts. Waits for each such query's termination event, which the
+    * listener bus delivers after that query's progress events. */
+  def streamProgressOf[A](body: => A)
+      : (A, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
+    import java.util.UUID
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    import StreamingQueryListener._
+    val started, ended = ConcurrentHashMap.newKeySet[UUID]()
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      // the start event reaches listeners synchronously, before any
+      // progress of that query
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (started.contains(e.progress.runId)) progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = body
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!ended.containsAll(started) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(ended.containsAll(started), "a started query never reported its termination")
+      (out, progress.asScala.toSeq)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  /** Run `body` — a streaming run — and check it left nothing behind:
+    * no new temp view in the catalog, no active query, and an empty
+    * run parent ([[graft.streaming.Staging.RunParent]]). */
+  def leavesNothing[A](body: => A): A = {
+    import java.nio.file.Files
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    val out = body
+    assert((views -- before).isEmpty, s"the run left views ${views -- before}")
+    assert(spark.streams.active.isEmpty,
+      s"the run left active queries ${spark.streams.active.map(_.name).toSeq}")
+    val parent = graft.streaming.Staging.RunParent
+    if (Files.exists(parent)) {
+      val left = Files.list(parent)
+      try assert(left.count() == 0, s"the run left files under $parent")
+      finally left.close()
+    }
+    out
+  }
 }

@@ -10,35 +10,40 @@ class StreamIvmAnnSpec extends SparkSpec {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  /** `name`'s rows and its count of micro-batches that read data. */
+  private def streamed(name: String) = {
+    val (rows, progress) = streamProgressOf(leavesNothing(run(name)).collect())
+    (rows, progress.count(_.numInputRows > 0))
+  }
+
   test("stream_ivm: three-wave incremental maintenance equals the batch refresh") {
-    val streamed = run("stream_ivm").collect()
+    val (rows, dataBatches) = streamed("stream_ivm")
+    val got = rows
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    assert(graft.streaming.StreamIvm.dataBatches >= 3,
-      s"expected >= 3 data micro-batches, got ${graft.streaming.StreamIvm.dataBatches}")
+    assert(dataBatches >= 3, s"expected >= 3 data micro-batches, got $dataBatches")
     val batch = SparkEntry.queries("ivm_agg")(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streamed=${streamed.size} batch=${batch.size} " +
-        s"diff=${(streamed.toSet diff batch.toSet).take(3)}")
+    assert(got.nonEmpty && got == batch,
+      s"streamed=${got.size} batch=${batch.size} " +
+        s"diff=${(got.toSet diff batch.toSet).take(3)}")
   }
 
   test("stream_ann: two probe waves reproduce the exact batch top-K") {
-    val streamed = run("stream_ann").collect()
+    val (rows, dataBatches) = streamed("stream_ann")
+    val got = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    assert(graft.streaming.StreamAnn.dataBatches >= 2,
-      s"expected >= 2 data micro-batches, got ${graft.streaming.StreamAnn.dataBatches}")
+    assert(dataBatches >= 2, s"expected >= 2 data micro-batches, got $dataBatches")
     val batch = SparkEntry.queries("ann_bruteforce")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streamed=${streamed.size} batch=${batch.size} " +
-        s"diff=${(streamed diff batch).take(3)}")
+    assert(got.nonEmpty && got == batch,
+      s"streamed=${got.size} batch=${batch.size} " +
+        s"diff=${(got diff batch).take(3)}")
   }
 
   test("stream_media_gate: cross-batch CAS dedup conserves arrivals; wave B is all dups") {
     import graft.streaming.StreamMediaGate
-    val rows = run("stream_media_gate").collect()
-    assert(StreamMediaGate.dataBatches >= 2,
-      s"expected >= 2 data micro-batches, got ${StreamMediaGate.dataBatches}")
+    val (rows, dataBatches) = streamed("stream_media_gate")
+    assert(dataBatches >= 2, s"expected >= 2 data micro-batches, got $dataBatches")
     val media = graft.operators.Multimodal.mediaTable(spark, sf)
       .select(col("doc_id"), md5(col("payload")).as("h"), col("meta.mime").as("mime"))
     val nDocs = media.count()
